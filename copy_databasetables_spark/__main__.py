@@ -258,7 +258,7 @@ def main(argv: list[str] | None = None) -> int:
         if unknown:
             print(f"FAILED: unknown table(s): {unknown}", file=sys.stderr)
             return 2
-        from copy_databasetables_spark.copy.engine import content_checksum
+        from copy_databasetables_spark.copy.engine import checksum_aggs
         from copy_databasetables_spark.io import load_table
 
         spark = get_spark("copy-cli")
@@ -276,17 +276,20 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 return 3
             problems = []
+            # one aggregate per side: the row count, plus the checksum
+            # triple's hash sum and xor with --checksum — computed over
+            # the source's column order on both sides, so column order
+            # must not matter
+            aggs = checksum_aggs(src.columns)[: 3 if args.checksum else 1]
             try:
-                n_src, n_dst = src.count(), dst.count()
+                want = src.agg(*aggs).first()
+                side = dst.select(*src.columns) if args.checksum else dst
+                got = side.agg(*aggs).first()
+                n_src, n_dst = want["n"], got["n"]
                 if n_src != n_dst:
                     problems.append(f"rows {n_src} != {n_dst}")
-                elif args.checksum:
-                    # column order must not matter: checksum over the
-                    # source's column order on both sides
-                    if content_checksum(src) != content_checksum(
-                        dst.select(*src.columns)
-                    ):
-                        problems.append("content checksum mismatch")
+                elif want != got:
+                    problems.append("content checksum mismatch")
             except Exception as err:
                 # a target with a missing/renamed column (AnalysisException
                 # from the select) or a corrupt part file is exactly what

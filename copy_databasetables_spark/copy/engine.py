@@ -12,22 +12,25 @@ Spark-first re-expression:
     target creation   →  ``spark.sql(CREATE TABLE ...)`` / write modes
     bulk load         →  ``df.write`` (parquet here; JDBC in sources/)
     batch size knob   →  partition count (``repartition(n)``)
-    row-count check   →  ``verify_copy`` (count + optional checksum)
+    row-count check   →  ``_write_verified`` (count + optional checksum)
 
 Scale notes (100 TB): a copy is scan → write with NO shuffle unless
-repartitioning is requested; both sides stream per-partition. The
-verification count is a metadata-only read on parquet. For idempotent
-re-runs at scale, write mode 'overwrite' with partitioned tables becomes
-overwrite-by-partition (spark.sql.sources.partitionOverwriteMode=dynamic).
+repartitioning is requested; both sides stream per-partition. Verifying
+is one pass per side: the write observes the count (and checksum) of its
+rows; ONE aggregate over the files, read with the written schema (no
+inference job), recomputes it — 3 Spark jobs a table under AQE. Re-runs
+overwrite partitioned tables by partition (partitionOverwriteMode=dynamic).
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
@@ -73,26 +76,23 @@ def schema_to_ddl(schema: T.StructType, table_name: str) -> str:
     return f"CREATE TABLE {table_name} (\n{body}\n)"
 
 
-def content_checksum(df: DataFrame) -> tuple:
-    """Order-insensitive content checksum over all columns.
+def checksum_aggs(columns: list[str]) -> list:
+    """The verification triple: COUNT, and the SUM and BIT_XOR of the
+    per-row xxhash64 over ``columns`` — independent order-insensitive
+    aggregates, so compensating corruptions (+d on one row, -d on another,
+    which a sum alone admits) must also collide in the xor. The first
+    entry alone is the row count; usable in ``agg`` and ``observe``."""
+    h = F.xxhash64(*[F.col(c) for c in columns])
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(h.cast("decimal(38,0)")).alias("s"),
+        F.bit_xor(h).alias("x"),
+    ]
 
-    Combines three independent order-insensitive aggregates of the
-    per-row xxhash64 — COUNT, SUM, and BIT_XOR — so a pair of
-    compensating row corruptions (which an additive sum alone admits:
-    +d on one row, -d on another) cannot collide: the xor of two
-    changed hashes matching AND their sum matching simultaneously is
-    implausible. One pass over the data, all JVM-side."""
-    cols = [F.col(c) for c in df.columns]
-    row = (
-        df.select(F.xxhash64(*cols).alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("h").cast("decimal(38,0)")).alias("s"),
-            F.expr("bit_xor(h)").alias("x"),
-        )
-        .collect()[0]
-    )
-    return (row["n"], row["s"], row["x"])
+
+def content_checksum(df: DataFrame) -> tuple:
+    """Order-insensitive content checksum over all columns, one pass."""
+    return tuple(df.agg(*checksum_aggs(df.columns)).first())
 
 
 @dataclass
@@ -111,6 +111,42 @@ class CopyVerificationError(RuntimeError):
     """Post-copy verification failed (row counts or checksums differ)."""
 
 
+def _footer_schema(path: str) -> str:
+    """The schema Spark recorded in the first written file's footer: what
+    its schema inference would read, without inference's Spark job."""
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(glob.escape(path) + "/**/*.parquet", recursive=True))
+    meta = (pq.read_schema(files[0]).metadata if files else None) or {}
+    rec = meta.get(b"org.apache.spark.sql.parquet.row.metadata", b'{"fields": []}')
+    return T.StructType.fromJson(json.loads(rec)).simpleString()
+
+
+def _write_verified(
+    out: DataFrame, path: str, label: str, checksum: bool, by: str | None = None
+) -> int:
+    """Overwrite-write ``out`` (partitioned by ``by``) to ``path`` and
+    verify what landed; returns the row count. The write observes
+    ``checksum_aggs`` (the count alone unless ``checksum``) over the rows
+    it writes; ONE aggregate over the files, read back with ``out``'s
+    schema, recomputes them. With ``checksum`` the footer's column types
+    must match too: the reader widens e.g. int32 file columns to bigint."""
+    aggs = checksum_aggs(out.columns)[: 3 if checksum else 1]
+    seen = Observation()
+    # observe last, so the write's result stage reports it: a result
+    # task's metrics count once even when the task is retried
+    writer = out.observe(seen, *aggs).write.mode("overwrite")
+    (writer.partitionBy(by) if by else writer).parquet(path)
+    want = T.StructType([f for f in out.schema if f.name != by]).simpleString()
+    if checksum and (landed := _footer_schema(path)) != want:
+        raise CopyVerificationError(f"{label}: target is {landed}, wrote {want}")
+    back = out.sparkSession.read.schema(out.schema).parquet(path).select(*out.columns)
+    got, wrote = back.agg(*aggs).first().asDict(), seen.get
+    if got != wrote:
+        raise CopyVerificationError(f"{label}: wrote {wrote}, read back {got}")
+    return got["n"]
+
+
 def copy_table(
     spark: SparkSession,
     sf_dir: str,
@@ -126,22 +162,8 @@ def copy_table(
     fixes write parallelism and output file count."""
     src = load_table(spark, sf_dir, table)
     out = src.repartition(num_partitions) if num_partitions else src
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(target_path)
-
-    copied = spark.read.parquet(target_path)
-    n_src, n_dst = src.count(), copied.count()
-    if n_src != n_dst:
-        raise CopyVerificationError(
-            f"{table}: source has {n_src} rows but target has {n_dst}"
-        )
-    if verify_checksum:
-        cols = [c for c in src.columns]
-        if content_checksum(src) != content_checksum(copied.select(*cols)):
-            raise CopyVerificationError(f"{table}: content checksum mismatch")
-    return CopyResult(table, target_path, n_dst, True)
+    n = _write_verified(out, target_path, table, verify_checksum, partition_by)
+    return CopyResult(table, target_path, n, True)
 
 
 def copy_table_mapped(
@@ -165,14 +187,8 @@ def copy_table_mapped(
     out = src.selectExpr(*[f"{expr} AS {name}" for name, expr in mappings])
     if num_partitions:
         out = out.repartition(num_partitions)
-    out.write.mode("overwrite").parquet(target_path)
-    copied = spark.read.parquet(target_path)
-    n_src, n_dst = src.count(), copied.count()
-    if n_src != n_dst:
-        raise CopyVerificationError(
-            f"{table}: source has {n_src} rows but mapped target has {n_dst}"
-        )
-    return CopyResult(table, target_path, n_dst, True)
+    n = _write_verified(out, target_path, f"{table} (mapped)", False)
+    return CopyResult(table, target_path, n, True)
 
 
 def copy_tables(
@@ -216,9 +232,8 @@ _STAT_SAFE_TYPES = ("INT32", "INT64", "FLOAT", "DOUBLE")
 
 def _parquet_max_from_footers(target_path: str, key: str):
     """max(key) from parquet row-group statistics — metadata-only, no
-    Spark job. At 100 TB this is the partition-stats answer the r5
-    verdict asked for: one footer read per file (the same footers any
-    scan planning touches) instead of scheduling a full aggregate job.
+    Spark job: one footer read per file (the same footers any scan
+    planning touches) instead of scheduling a full aggregate job.
     Returns None when any row group lacks exact stats for ``key`` (the
     caller then runs the aggregate scan), so a lying footer can never
     skip rows silently — correctness never depends on stats presence.
@@ -227,11 +242,9 @@ def _parquet_max_from_footers(target_path: str, key: str):
     logical value, which the caller compares via an equally-typed
     column. Local paths only — this engine's lake targets; a remote FS
     object store would read the same footers through its FS client."""
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
-    files = sorted(_glob.glob(os.path.join(target_path, "*.parquet")))
+    files = sorted(glob.glob(os.path.join(target_path, "*.parquet")))
     if not files:
         return None
     best = None
@@ -274,10 +287,9 @@ def copy_table_incremental(
     existing = _read_target_if_exists(spark, target_path)
     hwm = None
     if existing is not None:
-        # Prefer parquet footer statistics (pure metadata, no Spark job;
-        # the VERDICT r5 note: a full extra job per run just for one
-        # scalar) — fall back to an aggregate-only scan when stats are
-        # absent or the key type's stats aren't trustworthy.
+        # Prefer parquet footer statistics (pure metadata, no Spark job)
+        # — fall back to an aggregate-only scan when stats are absent or
+        # the key type's stats aren't trustworthy.
         hwm = _parquet_max_from_footers(target_path, key)
         if hwm is None:
             hwm = existing.agg(F.max(key).alias("m")).collect()[0]["m"]
@@ -307,22 +319,22 @@ def _recover_interrupted_publish(target_path: str) -> None:
 
 
 def _staged_publish(
-    spark: SparkSession, out, target_path: str, expect: int, label: str
+    out: DataFrame, target_path: str, label: str, expect: int | None = None
 ) -> int:
-    """Two-phase write shared by merge/delete: stage to a tmp dir (the
-    plan reads target_path — overwriting in place would clobber inputs
-    mid-job), verify the staged row count BEFORE publish, then publish
-    by directory rename. A crash can leave a stale target, a staging
-    dir, or (killed between the two renames) a missing target whose
-    data survives in ._merge_old — which _recover_interrupted_publish
-    restores on the next run. The staging dir is removed on every exit
-    path. At scale, use the target store's atomic-commit API."""
+    """Two-phase write shared by merge/delete/scd2/cdc: stage to a tmp dir
+    (the plan reads target_path — overwriting in place would clobber
+    inputs mid-job), verify the staged row count (and ``expect``, if
+    given) BEFORE publish, then publish by directory rename. A crash can
+    leave a stale target, a staging dir, or (killed between the two
+    renames) a missing target whose data survives in ._merge_old — which
+    _recover_interrupted_publish restores on the next run. The staging
+    dir is removed on every exit path. At scale, use the target store's
+    atomic-commit API."""
     tmp = target_path.rstrip("/") + "._merge_tmp"
     old = target_path.rstrip("/") + "._merge_old"
     try:
-        out.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-        if n != expect:
+        n = _write_verified(out, tmp, f"{label} (staged)", False)
+        if expect is not None and n != expect:
             raise CopyVerificationError(
                 f"{label}: expected {expect} rows in staged output but found {n}"
             )
@@ -373,9 +385,7 @@ def merge_table(
         n_keep = keep.count()
         out = keep.unionByName(src)
     # staged output must be survivors + the full source, exactly
-    n = _staged_publish(
-        spark, out, target_path, n_keep + src.count(), f"{table}: merge"
-    )
+    n = _staged_publish(out, target_path, f"{table}: merge", n_keep + src.count())
     return CopyResult(table, target_path, n, True)
 
 
@@ -482,9 +492,7 @@ def delete_rows(
     n_before = existing.count()
     n_match = existing.join(F.broadcast(keys_df), key, "left_semi").count()
     out = existing.join(F.broadcast(keys_df), key, "left_anti")
-    n = _staged_publish(
-        spark, out, target_path, n_before - n_match, "delete_rows"
-    )
+    n = _staged_publish(out, target_path, "delete_rows", n_before - n_match)
     return CopyResult("delete", target_path, n, True, rows_deleted=n_match)
 
 
@@ -572,16 +580,13 @@ def scd2_table(
     """Run one SCD2 sync of ``table``'s current snapshot into the
     type-2 dimension at ``target_path`` (created on first run), through
     the same staged two-phase publish as merge — an interrupted run
-    leaves the previous dimension intact. The published row count is
-    verified against the pre-publish count of the computed dimension."""
+    leaves the previous dimension intact. The staged row count is
+    verified against the count its own write observed."""
     _recover_interrupted_publish(target_path)
     snapshot = load_table(spark, sf_dir, table).select(key, *tracked)
     existing = _read_target_if_exists(spark, target_path)
     dim = scd2_apply(existing, snapshot, key, tracked, as_of)
-    # the union plan reads target_path while the publish replaces it —
-    # pin the computed dimension first (same reason merge counts first)
-    n_expect = dim.count()
-    n = _staged_publish(spark, dim, target_path, n_expect, f"{table}: scd2")
+    n = _staged_publish(dim, target_path, f"{table}: scd2")
     return CopyResult(table, target_path, n, True)
 
 
@@ -600,7 +605,7 @@ def cdc_apply_table(
     old target while staging writes elsewhere, so an interrupted run
     leaves the previous state intact. A missing target bootstraps from
     an empty base (a pure-insert log materializes the initial state);
-    the published count is verified against the computed state's."""
+    the staged count is verified against the count its write observed."""
     changes = spark.read.parquet(changes_path)
     missing = [c for c in (key, op_col, seq_col) if c not in changes.columns]
     if missing:
@@ -614,8 +619,7 @@ def cdc_apply_table(
             [], changes.drop(op_col, seq_col).schema
         )
     state = apply_cdc(base, changes, key, op_col=op_col, seq_col=seq_col)
-    n_expect = state.count()
-    n = _staged_publish(spark, state, target_path, n_expect, f"{table}: cdc")
+    n = _staged_publish(state, target_path, f"{table}: cdc")
     return CopyResult(table, target_path, n, True)
 
 
@@ -645,13 +649,9 @@ def profile_frame(df: DataFrame) -> DataFrame:
                 F.min(c).cast("string").alias(f"{c}__min"),
                 F.max(c).cast("string").alias(f"{c}__max"),
             ]
-    # ONE job, ONE scan, ONE row back — then pivot to per-column report
-    # rows driver-side. The earlier per-column-union formulation embedded
-    # the aggregate subplan once per column and relied on ReuseExchange
-    # to keep the scan single (unpinned by any plan test — ADVICE.md r6);
-    # collecting the single aggregate row makes the one-scan property
-    # structural. The collected payload is one row of ~4·|cols| scalars,
-    # independent of table size.
+    # ONE job, ONE scan, ONE row of ~4·|cols| scalars back — then pivot
+    # to per-column report rows driver-side, so the single scan is
+    # structural rather than left to ReuseExchange.
     row = df.agg(F.count(F.lit(1)).alias("n_rows"), *aggs).collect()[0]
     report = [
         (

@@ -61,6 +61,61 @@ def test_checksum_catches_corruption(spark):
     assert chk(src) == chk(spark.read.parquet(target))
 
 
+#: How the target diverges from what the write observed: each replaces
+#: the frame written with an image of the same observed frame, so the
+#: write still reports the triple of the rows it was given.
+_DIVERGENCE = {
+    "row_dropped": lambda df: df.where(F.col("n_nationkey") != 0),
+    "value_changed": lambda df: df.withColumn(
+        "n_name", F.when(F.col("n_nationkey") == 0, "XX").otherwise(F.col("n_name"))
+    ),
+    # a file type the reader cannot narrow back to int
+    "retyped_bigint": lambda df: df.withColumn(
+        "n_regionkey", F.col("n_regionkey").cast("bigint")
+    ),
+    # a file type the reader widens back to equal int values
+    "retyped_smallint": lambda df: df.withColumn(
+        "n_regionkey", F.col("n_regionkey").cast("smallint")
+    ),
+}
+
+
+@pytest.mark.parametrize("divergence", sorted(_DIVERGENCE))
+def test_copy_verification_raises_on_divergent_target(spark, tmp_path, monkeypatch, divergence):
+    """copy_table's own verify path raises when what lands differs from
+    what the write observed. The divergence is injected at the write
+    step; the check itself runs unchanged."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+
+    def divergent_parquet(self, path, *args, **kwargs):
+        real_parquet(_DIVERGENCE[divergence](self._df).write.mode("overwrite"), path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", divergent_parquet)
+    with pytest.raises(CopyVerificationError):
+        copy_table(spark, SF_SMOKE, "nation", str(tmp_path / "nation"), verify_checksum=True)
+
+
+def test_verified_copy_runs_at_most_three_jobs(spark, tmp_path):
+    """One pass per side: the write job observes the verification triple
+    and ONE aggregate over the written files recomputes it (its shuffle
+    stage is a job of its own under AQE). No source re-scan and no
+    schema-inference job."""
+    sc = spark.sparkContext
+    group = "test_verified_copy_jobs"
+    sc.setJobGroup(group, "copy_table with checksum verification")
+    try:
+        res = copy_table(
+            spark, SF_SMOKE, "orders", str(tmp_path / "orders"), verify_checksum=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.rows_copied == 1500
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
 def test_copy_tables_fk_order(spark):
     results = copy_tables(spark, SF_SMOKE, f"{ROOT}/many", ["orders", "region", "customer"])
     # requested out of order; engine must restore FK order
