@@ -1,7 +1,8 @@
 """§2.10 Deduplication operators for training-data pipelines.
 
 Five dedup families over ``documents``, all pure JVM-side DataFrame
-expressions (no UDFs):
+expressions (no UDFs; the one Python pass is the connected-components
+contraction, ``_local_contract``):
 
 - exact        — content-hash groupBy (``sha2``)
 - near (token) — blocked self-join + exact token-set Jaccard
@@ -110,17 +111,19 @@ _SURVIVOR_BROADCAST_MAX_ROWS = 20_000_000
 
 def _cc_oracle_prefix(stages: int = 16, pairs_cte: str | None = None) -> str:
     """DuckDB CTE chain computing connected-component labels over the
-    near-dup pair graph WITHOUT a recursive CTE — the r5 verdict item 8
-    fix. The old ``reach`` recursion materializes every (vertex,
-    reachable-vertex) pair, i.e. Σ|component|² rows: 589 s at sf0.1 on
-    this boilerplate-heavy corpus. This replaces it with ``stages``
-    unrolled rounds of exactly the algorithm the Spark side runs
-    (min-label propagation + pointer jumping, dedup._min_label_propagate):
-    each round keeps n rows (one label per vertex) and label(v) only
-    ever decreases, converging to the component min in O(log n) rounds —
-    16 stages cover any graph up to 2^16 vertices, 13× the sf0.1 corpus.
-    If a pathological input ever needed more rounds the labels would
-    simply differ from Spark's fixpoint and the hash gate would FAIL
+    near-dup pair graph WITHOUT a recursive CTE: a recursive ``reach``
+    closure materializes every (vertex, reachable-vertex) pair, i.e.
+    Σ|component|² rows (589 s at sf0.1 on this boilerplate-heavy
+    corpus). Instead, ``stages`` unrolled rounds of min-label
+    propagation + pointer jumping over the UNCONTRACTED pair graph
+    compute the reference fixpoint — the component-min label — which
+    the Spark side reaches by a different route (per-partition
+    union-find contraction, then ``_min_label_propagate``). Each round
+    keeps n rows (one label per vertex) and label(v) only ever
+    decreases; pointer jumping halves id-increasing paths each round,
+    and the testdata's pair graphs reach the fixpoint inside 16
+    stages. If an input ever needed more rounds the labels would
+    differ from the component minima and the hash gate would FAIL
     loudly — non-convergence cannot silently pass.
 
     Produces CTEs: …, pairs, edges, l0..l{stages}, comp(doc_id,
@@ -1398,8 +1401,8 @@ def q_dedup_cluster_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding side to parity with the token side's chain
     (q_dedup_minhash → q_dedup_cluster_lsh): pairs come from the
     corpus-scaled sign-LSH (q_dedup_embed_lsh_scaled, width ~log₂ n),
-    the CC iteration is the SAME bounded min-label + pointer-jump body
-    (_min_label_propagate), so the composition inherits both parents'
+    the CC stage is the SAME ``_cluster_over_pairs`` body (local
+    contraction + min-label loop), so the composition inherits both parents'
     measured scale behavior (α 0.44 pair generation, α<0.7 CC family).
     Determinism: the exact-cosine verify gate (τ with argmin gaps far
     above ulp noise) makes the pair set — and therefore the exact
@@ -1534,17 +1537,18 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is droppable. Output: every doc that appears in at
     least one pair, its cluster id, and the cluster size.
 
-    Spark shape: min-label propagation WITH pointer-jumping (r4) to a
-    fixpoint — each round every vertex takes the min of (its own label,
-    its neighbors' labels, its label's label). The third term is the
-    shortcut: the label table doubles as a pointer graph ``v → l(v)``,
-    so known-minima hop 2^r vertices after r rounds and convergence is
-    O(log diameter) instead of O(diameter) — a 61-node chain converges
-    in 8 probes where plain propagation needs 60 (measured; see
-    tests/test_operators.py long-chain case). The oracle (r6) runs the
-    SAME algorithm as 16 unrolled materialized rounds — see
-    ``_cc_oracle_prefix`` — replacing the old recursive transitive
-    closure that was quadratic in cluster size.
+    Spark shape: local contraction, then a verifying probe loop.
+    ``_local_contract`` runs a numpy union-find over each pair
+    partition in one ``mapInPandas`` pass and replaces the partition's
+    pairs by star edges to its local component minimum. The contracted
+    edges feed ``_min_label_propagate``: min-label propagation with
+    pointer jumping to a fixpoint — each round every vertex takes the
+    min of (its own label, its neighbors' labels, its label's label).
+    When one partition holds the whole pair graph
+    (every size the tests and benchmark reach), the stars already name
+    the component minima: the loop converges at probe 0 and probe 1
+    only verifies it. The oracle computes the same fixpoint over the
+    uncontracted graph — see ``_cc_oracle_prefix``.
 
     Pair-source note: this op rides ``q_dedup_near`` — the EXACT
     lang-blocked O(n²) pair generator — so its wall-time scales
@@ -1553,20 +1557,25 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-scale variant is ``q_dedup_cluster_lsh``, identical CC
     over the MinHash-LSH verified pairs.
 
-    Correctness of the shortcut: labels always name a vertex of the
-    same component (init self; mins of in-component values stay
+    Correctness: contraction keeps every vertex and exactly the
+    connectivity of the pairs. In the loop, labels always name a vertex
+    of the same component (init self; mins of in-component values stay
     in-component), decrease monotonically, and at the fixpoint
     ``l(u) ≤ l(v)`` across every (symmetric) edge forces equality per
-    component, pinned at the component min ``m`` by ``l(m) = m``.
+    component, pinned at the component min ``m`` by ``l(m) = m`` — for
+    any partitioning of the pairs.
 
-    Iteration cost control (r4, measured −60% wall-clock):
+    Iteration cost control:
 
     - the pair graph is orders of magnitude smaller than the corpus
-      (only docs in ≥1 near-dup pair), so the iterative stage sizes its
-      OWN parallelism from the measured edge count (~500k edges/task)
-      instead of inheriting corpus-scale ``shuffle.partitions`` — at
-      sf0.1 that is 1 task/round instead of 32 mostly-empty ones; on a
-      billion-edge pair graph it grows back to the full width.
+      (only docs in ≥1 near-dup pair), so the stage sizes its OWN
+      parallelism from the measured edge count (~500k edges/task)
+      instead of inheriting corpus-scale ``shuffle.partitions``; on a
+      billion-edge pair graph it grows back to the full width, and each
+      task contracts its ~250k pairs before the loop starts.
+    - the probe rounds the loop still needs are cut by contraction:
+      with one partition, 1 verifying probe; with several, only the
+      cross-partition joins are left to propagate.
     - edges pre-hash-partitioned on ``src`` once, so each round's join
       reshuffles only the label side.
     - ``localCheckpoint`` truncates the growing lineage each probe (at
@@ -1579,10 +1588,15 @@ def _cluster_over_pairs(
     spark: SparkSession, pair_df: DataFrame, materialized: bool = False
 ) -> DataFrame:
     """Shared CC body: (doc_id_a, doc_id_b) pairs → (doc_id, cluster_id,
-    n_members). Checkpoints PAIRS (the smallest frame) once; the
-    symmetric edge union is a narrow transform over it, so pair
-    generation runs once and _min_label_propagate materializes edges
-    exactly once more in its partitioned form. Pass
+    n_members). Checkpoints PAIRS (the smallest frame) once and counts
+    them to size ``parts`` (one partition per ~500k edges). The pairs
+    are coalesced to ``parts`` partitions and each is contracted by
+    ``_local_contract`` — a narrow ``mapInPandas`` pass, so pair
+    generation runs once — into symmetric star edges to its local
+    component minima. ``_min_label_propagate`` materializes those edges
+    once in their partitioned form and iterates to the global
+    component-min fixpoint: with ``parts == 1`` the stars are already
+    the answer and the loop only verifies it. Pass
     ``materialized=True`` when ``pair_df`` is ALREADY a checkpointed
     (doc_id_a, doc_id_b) frame — re-checkpointing would double block
     storage for nothing (q_dedup_survivor_pagerank shares one
@@ -1595,17 +1609,56 @@ def _cluster_over_pairs(
         else ckpt(pair_df.select("doc_id_a", "doc_id_b"), eager=True)
     )
     n_edges = 2 * pairs.count()  # scalar: sizes the iterative parallelism
-    edges = pairs.select(
-        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst"))
-    )
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     parts = max(1, min(shuffle_parts, n_edges // 500_000 + 1))
+    edges = (
+        pairs.select("doc_id_a", "doc_id_b")
+        .coalesce(parts)
+        .mapInPandas(_local_contract, "src long, dst long")
+    )
     labels = _min_label_propagate(edges, parts)
     w = Window.partitionBy("cluster_id")
     return labels.select("doc_id", F.col("label").alias("cluster_id")).withColumn(
         "n_members", F.count(F.lit(1)).over(w)
+    )
+
+
+def _local_contract(batches):
+    """``mapInPandas`` body: one partition's ``(doc_id_a, doc_id_b)``
+    pairs → symmetric star edges ``(src, dst)`` over the partition-local
+    components. A vectorised union-find (min-label steps + pointer
+    jumping over ``np.unique`` vertex indices, to a fixpoint) labels
+    each vertex with its local component minimum ``r``; every vertex
+    ``v`` then emits ``(v, r)`` and, unless it is ``r``, ``(r, v)`` —
+    so every vertex is still a ``dst``, each root keeps a self-loop,
+    and the edge set links exactly the vertices the input pairs did.
+    An empty partition emits nothing."""
+    import numpy as np
+    import pandas as pd
+
+    frames = [b for b in batches if len(b)]
+    if not frames:
+        return
+    a = np.concatenate([f["doc_id_a"].to_numpy(np.int64) for f in frames])
+    b = np.concatenate([f["doc_id_b"].to_numpy(np.int64) for f in frames])
+    verts, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[: len(a)], idx[len(a):]
+    # verts is sorted, so the min index of a component is its min vertex
+    label = np.arange(len(verts))
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, ia, label[ib])
+        np.minimum.at(label, ib, label[ia])
+        label = label[label]
+        if np.array_equal(label, prev):
+            break
+    root = verts[label]
+    leaf = label != np.arange(len(verts))
+    yield pd.DataFrame(
+        {
+            "src": np.concatenate([verts, root[leaf]]),
+            "dst": np.concatenate([root, verts[leaf]]),
+        }
     )
 
 
@@ -1771,9 +1824,13 @@ def _min_label_propagate(
     Convergence check is join-free: labels only ever DECREASE, so the
     label sum strictly decreases every probe that changed anything and
     is constant exactly at the fixpoint — one cheap aggregate instead
-    of a labels⋈labels diff per round. With pointer jumping the probe
-    bound covers diameters up to ~2^``max_probes``; hitting the guard
-    means the input is not a dedup pair graph.
+    of a labels⋈labels diff per round. Pointer jumping makes paths whose
+    ids increase along the path converge in O(log diameter) probes;
+    on long paths with random ids the minimum still advances only a few
+    vertices a probe, so ``max_probes`` bounds those diameters, and
+    hitting the guard raises instead of returning a wrong fixpoint.
+    ``_cluster_over_pairs`` contracts each partition first, so the loop
+    only propagates across partitions.
 
     Probe-cost control (r5, ~2× faster at sf0.1 where per-round JOB
     overhead dominates — 2.4 s vs 4.4 s warm):
@@ -2922,11 +2979,11 @@ def q_dedup_cluster_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     group. Chains of partial quoting (A ⊂ B ⊂ C) merge transitively
     even though A and C alone might not qualify — exactly the behavior
     a subsumption dedup wants, and exactly what per-pair filtering
-    can't give. Same _cluster_over_pairs body (bounded-partition
-    min-label propagation + pointer jumping) on q_dedup_containment's
-    prefix-filtered pairs, undirected by least/greatest dedup; the
-    oracle runs the identical unrolled CC rounds over the naive
-    all-pairs either-direction graph."""
+    can't give. Same _cluster_over_pairs body (local contraction +
+    verifying min-label loop) on q_dedup_containment's prefix-filtered
+    pairs, undirected by least/greatest dedup; the oracle computes the
+    same component-min fixpoint over the naive all-pairs
+    either-direction graph."""
     directed = q_dedup_containment(spark, sf_dir)
     und = directed.select(
         F.least("doc_id_a", "doc_id_b").alias("doc_id_a"),
