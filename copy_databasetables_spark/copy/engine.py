@@ -12,13 +12,15 @@ Spark-first re-expression:
     target creation   →  ``spark.sql(CREATE TABLE ...)`` / write modes
     bulk load         →  ``df.write`` (parquet here; JDBC in sources/)
     batch size knob   →  partition count (``repartition(n)``)
-    row-count check   →  ``_write_verified`` (count + optional checksum)
+    row-count check   →  ``_verify_target`` (count + optional checksum)
 
 Scale notes (100 TB): a copy is scan → write with NO shuffle unless
 repartitioning is requested; both sides stream per-partition. Verifying
 is one pass per side: the write observes the count (and checksum) of its
 rows; ONE aggregate over the files, read with the written schema (no
-inference job), recomputes it — 3 Spark jobs a table under AQE. Re-runs
+inference job), recomputes it — 3 Spark jobs a table under AQE.
+``verify_copy`` runs the same target check on an existing copy, with
+one aggregate over the source as the expectation. Re-runs
 overwrite partitioned tables by partition (partitionOverwriteMode=dynamic).
 """
 
@@ -108,7 +110,8 @@ class CopyResult:
 
 
 class CopyVerificationError(RuntimeError):
-    """Post-copy verification failed (row counts or checksums differ)."""
+    """Post-copy verification failed (row counts, column types or
+    checksums differ)."""
 
 
 def _footer_schema(path: str) -> str:
@@ -128,22 +131,48 @@ def _write_verified(
     """Overwrite-write ``out`` (partitioned by ``by``) to ``path`` and
     verify what landed; returns the row count. The write observes
     ``checksum_aggs`` (the count alone unless ``checksum``) over the rows
-    it writes; ONE aggregate over the files, read back with ``out``'s
-    schema, recomputes them. With ``checksum`` the footer's column types
-    must match too: the reader widens e.g. int32 file columns to bigint."""
+    it writes, and ``_verify_target`` checks the files against them."""
     aggs = checksum_aggs(out.columns)[: 3 if checksum else 1]
     seen = Observation()
     # observe last, so the write's result stage reports it: a result
     # task's metrics count once even when the task is retried
     writer = out.observe(seen, *aggs).write.mode("overwrite")
     (writer.partitionBy(by) if by else writer).parquet(path)
-    want = T.StructType([f for f in out.schema if f.name != by]).simpleString()
-    if checksum and (landed := _footer_schema(path)) != want:
-        raise CopyVerificationError(f"{label}: target is {landed}, wrote {want}")
-    back = out.sparkSession.read.schema(out.schema).parquet(path).select(*out.columns)
-    got, wrote = back.agg(*aggs).first().asDict(), seen.get
-    if got != wrote:
-        raise CopyVerificationError(f"{label}: wrote {wrote}, read back {got}")
+    return _verify_target(out, path, label, seen.get, by)
+
+
+def _verify_target(
+    like: DataFrame, path: str, label: str, want: dict, by: str | None = None
+) -> int:
+    """The engine's one target check: ``path`` must hold the rows of
+    ``like`` (partitioned by ``by``) whose ``checksum_aggs`` values are
+    ``want`` (the count alone, or the full triple); returns the row
+    count. ONE aggregate over the files, read back with ``like``'s schema
+    (no inference job), recomputes them. With the triple the footer's
+    column types must match too: the reader widens e.g. int32 file
+    columns to bigint, and xxhash64 hashes a short as an int and binary
+    as string bytes. A file whose footer carries no Spark schema
+    (written by another engine) is a mismatch. A missing ``path`` raises
+    Spark's own error; any other failure to read the files back is a
+    ``CopyVerificationError``."""
+    back = like.sparkSession.read.schema(like.schema).parquet(path)
+    cols = T.StructType([f for f in like.schema if f.name != by]).simpleString()
+    if len(want) > 1 and (landed := _footer_schema(path)) != cols:
+        raise CopyVerificationError(
+            f"{label}: schema/content error: target is {landed}, expected {cols}"
+        )
+    aggs = checksum_aggs(like.columns)[: len(want)]
+    try:
+        got = back.select(*like.columns).agg(*aggs).first().asDict()
+    except Exception as err:
+        first_line = str(err).partition("\n")[0]
+        raise CopyVerificationError(
+            f"{label}: schema/content error: {type(err).__name__}: {first_line}"
+        ) from err
+    if got["n"] != want["n"]:
+        raise CopyVerificationError(f"{label}: rows {want['n']} != {got['n']}")
+    if got != want:
+        raise CopyVerificationError(f"{label}: content checksum mismatch")
     return got["n"]
 
 
@@ -164,6 +193,24 @@ def copy_table(
     out = src.repartition(num_partitions) if num_partitions else src
     n = _write_verified(out, target_path, table, verify_checksum, partition_by)
     return CopyResult(table, target_path, n, True)
+
+
+def verify_copy(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    target_path: str,
+    *,
+    verify_checksum: bool = False,
+) -> int:
+    """Re-verify an existing copy of ``table`` at ``target_path`` without
+    copying (incident re-checks, scheduled integrity sweeps): ONE
+    aggregate over the source is the expectation for the same target
+    check a copy runs, column types included under ``verify_checksum``.
+    Returns the row count; raises ``CopyVerificationError`` on mismatch."""
+    src = load_table(spark, sf_dir, table)
+    want = src.agg(*checksum_aggs(src.columns)[: 3 if verify_checksum else 1])
+    return _verify_target(src, target_path, table, want.first().asDict())
 
 
 def copy_table_mapped(

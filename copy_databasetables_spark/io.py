@@ -43,7 +43,6 @@ from pyspark.sql import types as T
 
 from copy_databasetables_spark.session import configure_session
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 #: FK-respecting load/copy order (FIXTURES.md): parents before children.
@@ -251,11 +250,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if n > 1:
             df = df.repartition(n)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several tables at once; defaults to all ten."""
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

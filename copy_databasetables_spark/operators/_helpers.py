@@ -158,13 +158,8 @@ def rz(c: Column | str, scale: int) -> Column:
     return F.round(_col(c), scale) + F.lit(0.0)
 
 
-#: DuckDB-side fragments mirroring the helpers above (used in oracle SQL
-#: via ordinary string interpolation at registration time).
-SQL_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(38,6))) AS DOUBLE)"
-SQL_DAVG = "(CAST(SUM(CAST({x} AS DECIMAL(38,6))) AS DOUBLE) / COUNT({x}))"
-SQL_US = "epoch_us(CAST({x} AS TIMESTAMP))"
-SQL_DS = "strftime(CAST({x} AS TIMESTAMP), '%Y-%m-%d')"
-#: oracle twin of ``rz``: DuckDB round() keeps IEEE -0.0; + 0.0 drops it.
+#: DuckDB-side twin of ``rz`` for oracle SQL: DuckDB round() keeps IEEE
+#: -0.0; + 0.0 drops it.
 SQL_RZ = "(round({x}, {n}) + 0.0)"
 
 

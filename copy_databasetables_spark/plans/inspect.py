@@ -21,12 +21,6 @@ def final_plan(df: DataFrame, execute: bool = True) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def analyzed_plan(df: DataFrame) -> str:
-    """Full query-execution dump (parsed/analyzed/optimized/physical) —
-    where ``PushedFilters`` and ``ReadSchema`` are visible."""
-    return df._jdf.queryExecution().toString()
-
-
 @dataclass
 class PlanFacts:
     broadcast_joins: int

@@ -162,6 +162,8 @@ class TableMeta:
     pk_columns: list[str] = field(default_factory=list)
     indexes: list[IndexMeta] = field(default_factory=list)  # non-PK only
     foreign_keys: list[ForeignKeyMeta] = field(default_factory=list)
+    #: verified row count of the copy, set by copy_table_jdbc_with_schema
+    rows_copied: int = 0
 
 
 def _connect(spark: SparkSession, url: str):
@@ -494,8 +496,11 @@ def copy_table_jdbc_with_schema(
     introspect source → script DDL (columns + NOT NULL + PK) → drop &
     recreate target → bulk-load rows → build secondary indexes.
 
-    Returns the source TableMeta so callers can re-verify the target.
+    The load is verified here: source and target row counts must agree,
+    or ``CopyVerificationError`` is raised. Returns the source TableMeta
+    with ``rows_copied`` set.
     """
+    from copy_databasetables_spark.copy.engine import CopyVerificationError
     from copy_databasetables_spark.sources.jdbc import JdbcReadSpec, JdbcWriteSpec
 
     target = target_table or table
@@ -506,6 +511,12 @@ def copy_table_jdbc_with_schema(
     # append, not overwrite: the scripted table (with its constraints)
     # must survive — overwrite would drop and recreate it constraint-free
     JdbcWriteSpec(url=dst_url, table=target, mode="append", batchsize=batchsize).save(rows)
+    n_src = rows.count()
+    meta.rows_copied = JdbcReadSpec(url=dst_url, table=target).load(spark).count()
+    if meta.rows_copied != n_src:
+        raise CopyVerificationError(
+            f"{table}: {n_src} source rows, {meta.rows_copied} copied"
+        )
     execute_ddl(spark, dst_url, script_indexes(meta, target))
     # Reseed identity counters past the copied values (the DBCC
     # CHECKIDENT step of a SQL Server bulk copy): the fresh target's

@@ -305,24 +305,6 @@ def user_totals_stateful_stream(
     )
 
 
-def foreach_batch_jdbc_sink(write_spec):
-    """foreachBatch sink that lands each micro-batch over JDBC — the
-    streaming version of the reference's bulk-copy target. Returned
-    function plugs into ``stream.writeStream.foreachBatch(...)``;
-    batch_id gives at-least-once idempotency hooks (e.g. delete-then-
-    insert keyed on batch_id). Not executable offline — unit-tested for
-    construction only."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # NB: a foreachBatch body MUST consume every partition of the
-        # batch DataFrame (Spark 4.1 validates state-store commits and
-        # fails the query otherwise — show()/limit()/no-op bodies break
-        # stateful queries). A full save() qualifies.
-        write_spec.save(batch_df.withColumn("_batch_id", F.lit(batch_id)))
-
-    return _sink
-
-
 def foreach_batch_jdbc_sink_idempotent(write_spec):
     """Exactly-once foreachBatch JDBC sink: delete-then-insert keyed on
     batch_id. Structured Streaming re-delivers a failed/restarted
@@ -365,6 +347,8 @@ def foreach_batch_jdbc_sink_idempotent(write_spec):
             msg = str(e)
             if not any(s in msg for s in ("42X05", "42P01", "42S02")):
                 raise
+        # a foreachBatch body must consume every partition of the batch
+        # (Spark 4.1 validates state-store commits); a full save() does
         write_spec.save(batch_df.withColumn("_batch_id", F.lit(batch_id)))
 
     return _sink

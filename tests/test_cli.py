@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import pytest
+
+from copy_databasetables_spark import __main__ as cli
 from copy_databasetables_spark.__main__ import main
 from tests.conftest import SF_SMOKE
 
@@ -231,29 +234,41 @@ def test_cli_verify_only_flag_misuse(spark, capsys):
     assert "parquet table directories" in capsys.readouterr().err
 
 
-def test_cli_verify_only_schema_drift_reports_mismatch(spark, capsys, tmp_path):
-    """A target whose column was renamed must be REPORTED as a mismatch
-    (exit 1), not crash with a raw AnalysisException — schema drift is
-    exactly what an audit exists to surface (r7 ADVICE)."""
+@pytest.mark.parametrize("drift", ["renamed", "smallint", "binary"])
+def test_cli_verify_only_schema_drift_reports_mismatch(spark, capsys, tmp_path, drift):
+    """A target whose column was renamed (by another engine, so its
+    footer carries no Spark schema) or retyped must be REPORTED as a
+    mismatch (exit 1), not crash or pass: xxhash64 hashes a smallint as
+    an int and binary as string bytes, so only the footer check sees a
+    retyped column."""
     import glob
     import os
 
     import duckdb
+
+    from copy_databasetables_spark.io import load_table
 
     tgt = str(tmp_path / "vo_drift")
     assert main(["--source", SF_SMOKE, "--target", tgt,
                  "--tables", "region", "nation"]) == 0
     capsys.readouterr()
 
-    parts = glob.glob(f"{tgt}/region/part*.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"COPY (SELECT r_regionkey, r_name AS r_renamed "
-        f"FROM read_parquet({parts!r})) TO '{tgt}/drift.parquet'"
-    )
-    for p in parts + glob.glob(f"{tgt}/region/.*.crc"):
-        os.remove(p)
-    os.rename(f"{tgt}/drift.parquet", parts[0])
+    if drift == "renamed":
+        parts = glob.glob(f"{tgt}/region/part*.parquet")
+        con = duckdb.connect()
+        con.execute(
+            f"COPY (SELECT r_regionkey, r_name AS r_renamed "
+            f"FROM read_parquet({parts!r})) TO '{tgt}/drift.parquet'"
+        )
+        for p in parts + glob.glob(f"{tgt}/region/.*.crc"):
+            os.remove(p)
+        os.rename(f"{tgt}/drift.parquet", parts[0])
+    else:
+        col = {"smallint": "r_regionkey", "binary": "r_name"}[drift]
+        region = load_table(spark, SF_SMOKE, "region")
+        region.withColumn(col, region[col].cast(drift)).write.mode(
+            "overwrite"
+        ).parquet(f"{tgt}/region")
 
     rc = main(["--verify-only", "--checksum", "--source", SF_SMOKE,
                "--target", tgt, "--tables", "region", "nation"])
@@ -322,3 +337,57 @@ def test_cli_cdc_mode(spark, capsys, tmp_path):
     assert main(["--source", src4, "--target", tgt, "--tables", "t",
                  "--cdc", "k"]) == 3
     assert "lacks column" in capsys.readouterr().err
+
+
+#: the smallest argv that selects each mode (no file is ever read)
+_MODE_ARGV = {
+    "--profile": ["--profile", "--source", SF_SMOKE],
+    "--verify-only": ["--verify-only", "--source", SF_SMOKE, "--target", "/tmp/x"],
+    "--cdc": ["--cdc", "k", "--source", "/tmp/s", "--target", "/tmp/x", "--tables", "t"],
+    "--scd2": ["--scd2", "k", "--tracked", "c", "--as-of", "2024-01-01",
+               "--source", SF_SMOKE, "--target", "/tmp/x", "--tables", "customer"],
+    "--delete": ["--delete", "k", "--keys", "1", "--target", "/tmp/x"],
+    "JDBC mode": ["--source", "jdbc:derby:memory:a", "--target", "jdbc:derby:memory:b",
+                  "--tables", "t"],
+    "--incremental": ["--incremental", "k", "--source", SF_SMOKE, "--target", "/tmp/x",
+                      "--tables", "orders"],
+    "copy mode": ["--source", SF_SMOKE, "--target", "/tmp/x"],
+}
+#: one setting of every option; --op-col/--seq-col differ from their defaults
+_FLAG_ARGV = {
+    "source": ["--source", "/tmp/s"], "target": ["--target", "/tmp/y"],
+    "tables": ["--tables", "region"], "partitions": ["--partitions", "2"],
+    "checksum": ["--checksum"], "incremental": ["--incremental", "k"],
+    "scd2": ["--scd2", "k"], "tracked": ["--tracked", "c"],
+    "as_of": ["--as-of", "2024-01-01"], "cdc": ["--cdc", "k"],
+    "op_col": ["--op-col", "kind"], "seq_col": ["--seq-col", "version"],
+    "delete": ["--delete", "k"], "keys": ["--keys", "1"],
+    "profile": ["--profile"], "verify_only": ["--verify-only"],
+}
+# (mode, flag it does not accept) — skipping a flag that selects an
+# EARLIER mode, since then that mode is the one under test
+_REFUSED = [
+    (m.name, dest)
+    for i, m in enumerate(cli.MODES)
+    for dest in (f[2:].replace("-", "_") for f in cli.OPTIONS)
+    if dest not in m.accepts
+    and not any(e.when(cli.parser().parse_args(_FLAG_ARGV[dest])) for e in cli.MODES[:i])
+]
+
+
+def test_refused_pairs_cover_every_mode():
+    assert list(dict(_REFUSED)) == [m.name for m in cli.MODES]
+    assert ("--scd2", "keys") in _REFUSED and ("--profile", "verify_only") in _REFUSED
+
+
+@pytest.mark.parametrize("mode, dest", _REFUSED, ids=[f"{m}+{d}" for m, d in _REFUSED])
+def test_cli_refuses_flags_the_mode_does_not_accept(monkeypatch, capsys, mode, dest):
+    """Every mode refuses, before starting Spark, each flag it cannot
+    honor — never silently drops it and reports success."""
+    calls = []
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: calls.append(a))
+    argv = _MODE_ARGV[mode]
+    assert cli.select_mode(cli.parser(), cli.parser().parse_args(argv)).name == mode
+    assert main(argv + _FLAG_ARGV[dest]) == 2
+    assert "takes only" in capsys.readouterr().err
+    assert calls == []

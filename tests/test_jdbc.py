@@ -236,6 +236,31 @@ def test_copy_with_schema_round_trips_constraints(spark):
         _exec(spark, dst_url, ["INSERT INTO parts VALUES (1, 'DUP', 0)"])
 
 
+def test_copy_with_schema_verifies_row_counts(spark, monkeypatch):
+    """The schema copy checks its own load: a target that ends with
+    fewer rows than the source raises CopyVerificationError, and a clean
+    copy reports its verified row count."""
+    from copy_databasetables_spark.copy.engine import CopyVerificationError
+    from copy_databasetables_spark.sources.introspect import (
+        copy_table_jdbc_with_schema,
+    )
+
+    src_url, dst_url = DERBY.format(n="vfy_src"), DERBY.format(n="vfy_dst")
+    _exec(spark, src_url, [
+        "CREATE TABLE vfy (v_id INTEGER NOT NULL, v_s VARCHAR(5),"
+        " CONSTRAINT pk_vfy PRIMARY KEY (v_id))",
+        "INSERT INTO vfy VALUES (1, 'a'), (2, 'b'), (3, 'c')",
+    ])
+    save = JdbcWriteSpec.save
+    with monkeypatch.context() as m:
+        m.setattr(
+            JdbcWriteSpec, "save", lambda self, df: save(self, df.where("v_id <> 2"))
+        )
+        with pytest.raises(CopyVerificationError, match="3 source rows, 2 copied"):
+            copy_table_jdbc_with_schema(spark, src_url, dst_url, "vfy")
+    assert copy_table_jdbc_with_schema(spark, src_url, dst_url, "vfy").rows_copied == 3
+
+
 def test_copy_with_schema_is_rerunnable(spark):
     """Drop-and-recreate semantics (the reference's drop-existing mode):
     a second run against the same target succeeds and does not duplicate
