@@ -18,7 +18,7 @@ drift (SURVEY.md §7.3). These helpers pin the conventions once:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Observation
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,6)"
@@ -67,6 +67,18 @@ def ckpt(df, eager: bool = False):
     pinned until the harness's next ``free_ckpts`` (see above)."""
     _PLAN_PINS.append(df)
     return df.localCheckpoint(eager=eager)
+
+
+def ckpt_observed(df, metric: Column):
+    """``ckpt(df, eager=True)`` and the value of the aggregate
+    ``metric`` over ``df``'s rows, observed on the checkpoint job
+    itself instead of a second job over the checkpoint."""
+    seen = Observation()
+    # observe last, so the checkpoint job's result stage reports it
+    # (above any exchange in ``df``): a result task's metrics count
+    # once even when the task is retried
+    out = ckpt(df.observe(seen, metric.alias("v")), eager=True)
+    return out, seen.get["v"]
 
 
 def free_ckpts(spark) -> int:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from copy_databasetables_spark.io import load_table
 from copy_databasetables_spark.operators import register
-from copy_databasetables_spark.operators._helpers import ckpt, rz
+from copy_databasetables_spark.operators._helpers import ckpt, ckpt_observed, rz
 
 # --- shared fragments ----------------------------------------------------
 
@@ -1371,17 +1371,13 @@ def q_dedup_embed_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scaled_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scaled-LSH pair graph as a checkpointed (doc_id_a, doc_id_b)
-    frame — the single pair source both semantic-dedup compositions
-    iterate over (vec ids double as doc ids: embeddings ⋈ documents is
-    1:1 by construction, TESTDATA.md)."""
-    return ckpt(
-        q_dedup_embed_lsh_scaled(spark, sf_dir)
-        .select(
-            F.col("vec_id_a").alias("doc_id_a"),
-            F.col("vec_id_b").alias("doc_id_b"),
-        ),
-        eager=True,
+    """The scaled-LSH pair graph as a (doc_id_a, doc_id_b) frame — the
+    single pair source both semantic-dedup compositions iterate over
+    (vec ids double as doc ids: embeddings ⋈ documents is 1:1 by
+    construction, TESTDATA.md)."""
+    return q_dedup_embed_lsh_scaled(spark, sf_dir).select(
+        F.col("vec_id_a").alias("doc_id_a"),
+        F.col("vec_id_b").alias("doc_id_b"),
     )
 
 
@@ -1408,7 +1404,7 @@ def q_dedup_cluster_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     above ulp noise) makes the pair set — and therefore the exact
     min-label fixpoint — identical in both engines."""
     pairs = _scaled_pair_frame(spark, sf_dir)
-    return _cluster_over_pairs(spark, pairs, materialized=True).select(
+    return _cluster_over_pairs(spark, pairs).select(
         F.col("doc_id").alias("vec_id"), "cluster_id", "n_members"
     )
 
@@ -1438,8 +1434,7 @@ def q_dedup_survivor_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair source swapped from token MinHash to corpus-scaled
     sign-LSH: the full chain a SemDeDup-style pipeline ships (embed →
     scaled-LSH candidates → exact-cosine verify → CC → quality pick)."""
-    pairs = _scaled_pair_frame(spark, sf_dir)
-    clusters = _cluster_over_pairs(spark, pairs, materialized=True)
+    clusters = _cluster_over_pairs(spark, _scaled_pair_frame(spark, sf_dir))
     return _survivor_over_clusters(spark, sf_dir, clusters)
 
 
@@ -1584,35 +1579,45 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_over_pairs(spark, q_dedup_near(spark, sf_dir))
 
 
+def _pair_ckpt(pair_df: DataFrame) -> tuple[DataFrame, int]:
+    """A (doc_id_a, doc_id_b) pair frame, eagerly checkpointed, and its
+    row count, observed on that checkpoint job — the count that sizes
+    the CC and PageRank parallelism costs no job of its own."""
+    return ckpt_observed(
+        pair_df.select("doc_id_a", "doc_id_b"), F.count(F.lit(1))
+    )
+
+
+def _pair_parts(spark: SparkSession, n_pairs: int) -> int:
+    """Partitions for the iterative stages over ``n_pairs`` pairs: one
+    per ~500k directed edges, capped at ``shuffle.partitions``."""
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(1, min(shuffle_parts, 2 * n_pairs // 500_000 + 1))
+
+
 def _cluster_over_pairs(
-    spark: SparkSession, pair_df: DataFrame, materialized: bool = False
+    spark: SparkSession, pair_df: DataFrame, n_pairs: int | None = None
 ) -> DataFrame:
     """Shared CC body: (doc_id_a, doc_id_b) pairs → (doc_id, cluster_id,
-    n_members). Checkpoints PAIRS (the smallest frame) once and counts
-    them to size ``parts`` (one partition per ~500k edges). The pairs
-    are coalesced to ``parts`` partitions and each is contracted by
-    ``_local_contract`` — a narrow ``mapInPandas`` pass, so pair
-    generation runs once — into symmetric star edges to its local
-    component minima. ``_min_label_propagate`` materializes those edges
-    once in their partitioned form and iterates to the global
-    component-min fixpoint: with ``parts == 1`` the stars are already
-    the answer and the loop only verifies it. Pass
-    ``materialized=True`` when ``pair_df`` is ALREADY a checkpointed
-    (doc_id_a, doc_id_b) frame — re-checkpointing would double block
-    storage for nothing (q_dedup_survivor_pagerank shares one
-    materialized pair frame between CC and PageRank)."""
+    n_members). Checkpoints PAIRS (the smallest frame) once with
+    ``_pair_ckpt``, whose observed row count sizes ``parts`` (one
+    partition per ~500k edges). The pairs are coalesced to ``parts``
+    partitions and each is contracted by ``_local_contract`` — a narrow
+    ``mapInPandas`` pass, so pair generation runs once — into symmetric
+    star edges to its local component minima. ``_min_label_propagate``
+    materializes those edges once in their partitioned form and
+    iterates to the global component-min fixpoint: with ``parts == 1``
+    the stars are already the answer and the loop only verifies it.
+    Pass ``n_pairs`` with a frame ``_pair_ckpt`` already returned, to
+    share that one materialization (q_dedup_survivor_pagerank feeds the
+    same pair frame to CC and PageRank)."""
     from pyspark.sql.window import Window
 
-    pairs = (
-        pair_df
-        if materialized
-        else ckpt(pair_df.select("doc_id_a", "doc_id_b"), eager=True)
-    )
-    n_edges = 2 * pairs.count()  # scalar: sizes the iterative parallelism
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    parts = max(1, min(shuffle_parts, n_edges // 500_000 + 1))
+    if n_pairs is None:
+        pair_df, n_pairs = _pair_ckpt(pair_df)
+    parts = _pair_parts(spark, n_pairs)
     edges = (
-        pairs.select("doc_id_a", "doc_id_b")
+        pair_df.select("doc_id_a", "doc_id_b")
         .coalesce(parts)
         .mapInPandas(_local_contract, "src long, dst long")
     )
@@ -1841,21 +1846,21 @@ def _min_label_propagate(
       ``min(v, min of src over incoming edges)``, one aggregate over
       the edge list. This also replaces the separate vertex-set
       ``distinct`` that used to build the initial label table.
-    - **lazy checkpoints**: ``localCheckpoint(eager=False)`` marks the
-      round's output; the convergence-sum ``collect`` materializes it,
-      so each probe is ONE job instead of two (eager checkpoint job +
-      sum job). Lineage still truncates at every probe.
+    - **the sum rides the checkpoint**: each round's labels are
+      checkpointed eagerly and the convergence sum is observed on that
+      checkpoint job (``ckpt_observed``), so a probe runs no separate
+      aggregate job. Lineage still truncates at every probe.
     - **no explicit repartition in the loop**: AQE coalesces each
       round's shuffle to match the actual (tiny) label table; at
       billion-edge scale the same plan widens to shuffle.partitions.
     """
     edges = ckpt(edges.repartition(parts, "src"), eager=True)
-    labels = ckpt(
+    labels, prev_sum = ckpt_observed(
         edges.groupBy(F.col("dst").alias("doc_id"))
         .agg(F.min("src").alias("m"))
-        .select("doc_id", F.least("doc_id", "m").alias("label"))
+        .select("doc_id", F.least("doc_id", "m").alias("label")),
+        F.sum("label"),
     )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for _ in range(max_probes):
         nbr = edges.join(labels, edges.src == labels.doc_id).select(
             F.col("dst").alias("doc_id"), "label"
@@ -1868,13 +1873,13 @@ def _min_label_propagate(
                 F.col("b.label").alias("label"),
             )
         )
-        labels = ckpt(
+        labels, cur_sum = ckpt_observed(
             labels.unionByName(nbr)
             .unionByName(jump)
             .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label")),
+            F.sum("label"),
         )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             return labels
         prev_sum = cur_sum
@@ -2441,17 +2446,17 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines; all scalar arithmetic ((1−d)/N + d·s)
     is written with identical association in both, so the rank vector
     is exactly equal at every iteration boundary, not merely close."""
-    pairs = ckpt(
-        q_dedup_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"),
-        eager=True,
-    )
-    return _pagerank_over_pairs(spark, pairs)
+    return _pagerank_over_pairs(spark, q_dedup_minhash(spark, sf_dir))
 
 
-def _pagerank_over_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+def _pagerank_over_pairs(
+    spark: SparkSession, pair_df: DataFrame, n_pairs: int | None = None
+) -> DataFrame:
     """Shared PageRank body: (doc_id_a, doc_id_b) pairs → (doc_id, deg,
-    pr). ``pairs`` should already be materialized (localCheckpoint) so
-    the ``_PR_ITERS``-deep plan re-reads it, not the LSH pipeline.
+    pr). The pairs are materialized once with ``_pair_ckpt`` (pass
+    ``n_pairs`` with a frame it already returned, as for
+    ``_cluster_over_pairs``), so the ``_PR_ITERS``-deep plan re-reads
+    them, not the LSH pipeline.
 
     Edges are explicitly repartitioned on the join key with the SAME
     size-derived bound ``_min_label_propagate`` uses and lazily
@@ -2459,17 +2464,16 @@ def _pagerank_over_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     edge ⋈ rank joins re-derives edge partitioning per stage and the
     100× stress run OOMs a single heap-bound task (measured; the CC
     path with bounded parts survives the same decade at 94 s)."""
-    n_edges = 2 * pairs.count()  # scalar: sizes the iterative parallelism
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    parts = max(1, min(shuffle_parts, n_edges // 500_000 + 1))
+    if n_pairs is None:
+        pair_df, n_pairs = _pair_ckpt(pair_df)
     edges = ckpt(
-        pairs.select(F.col("doc_id_a").alias("s"), F.col("doc_id_b").alias("d"))
+        pair_df.select(F.col("doc_id_a").alias("s"), F.col("doc_id_b").alias("d"))
         .unionByName(
-            pairs.select(
+            pair_df.select(
                 F.col("doc_id_b").alias("s"), F.col("doc_id_a").alias("d")
             )
         )
-        .repartition(parts, "s")
+        .repartition(_pair_parts(spark, n_pairs), "s")
     )
     deg = edges.groupBy(F.col("s").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -2549,12 +2553,9 @@ def q_dedup_survivor_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id."""
     from pyspark.sql.window import Window
 
-    pairs = ckpt(
-        q_dedup_minhash(spark, sf_dir).select("doc_id_a", "doc_id_b"),
-        eager=True,
-    )
-    clusters = _cluster_over_pairs(spark, pairs, materialized=True)
-    pr = _pagerank_over_pairs(spark, pairs).select("doc_id", "pr")
+    pairs, n_pairs = _pair_ckpt(q_dedup_minhash(spark, sf_dir))
+    clusters = _cluster_over_pairs(spark, pairs, n_pairs)
+    pr = _pagerank_over_pairs(spark, pairs, n_pairs).select("doc_id", "pr")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("pr").desc(), F.col("doc_id").asc()
     )

@@ -723,23 +723,77 @@ def test_contracted_partitions_converge_to_union_find(spark, parts):
         assert {r["doc_id"]: r["label"] for r in rows} == _uf_min_labels(pairs), name
 
 
-def test_dedup_cluster_build_job_count(spark):
-    """Local contraction leaves the probe loop one converging aggregate
-    and one verifying probe. A ``q_dedup_cluster`` build at sf0.001
-    (local[8], 8 shuffle partitions) ran 39–41 Spark jobs before the
-    contraction pass and 17 with it; pinned at half the old count."""
+def _build_jobs(spark, key: str) -> int:
+    """Spark jobs one call of query ``key`` runs before it returns its
+    DataFrame (sf0.001; the fixture's local[8], 8 shuffle partitions)."""
     from copy_databasetables_spark.operators import all_queries
     from tests.conftest import SF_SMOKE
 
     sc = spark.sparkContext
-    group = "test_dedup_cluster_build_jobs"
-    sc.setJobGroup(group, "q_dedup_cluster build")
+    group = f"test_build_jobs_{key}"
+    sc.setJobGroup(group, f"{key} build")
     try:
-        all_queries()["q_dedup_cluster"](spark, SF_SMOKE)
+        all_queries()[key](spark, SF_SMOKE)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 19
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_cluster_build_job_count(spark):
+    """Local contraction leaves the probe loop one converging round and
+    one verifying probe, and the pair count and each round's label sum
+    are observed on the checkpoint jobs that materialize them. A
+    ``q_dedup_cluster`` build ran 39–41 Spark jobs before the
+    contraction pass, 17–18 with it, and 13 once the counts were
+    observed; pinned at that + 1."""
+    assert 1 <= _build_jobs(spark, "q_dedup_cluster") <= 14
+
+
+def test_bm25_persisted_build_job_count(spark):
+    """The BM25 index is written in one pass (postings with df, one
+    shuffle, corpus stats observed on that write, stats from literals),
+    and the query leg reads no df artifact. A ``q_text_bm25_persisted``
+    build ran 12 Spark jobs with three corpus-derived sinks and runs 5
+    now."""
+    assert 1 <= _build_jobs(spark, "q_text_bm25_persisted") <= 5
+
+
+@pytest.mark.parametrize("exchange", [False, True])
+def test_observation_on_eager_checkpoint(spark, exchange):
+    """An ``Observation`` at the top of ``ckpt(df.observe(...),
+    eager=True)`` holds its values when ``ckpt`` returns, equal to the
+    collected aggregate — with and without an exchange below the
+    observed node. CC sizing and convergence (``ckpt_observed``) rest
+    on this; ``Observation.get`` blocks until the metrics arrive, so it
+    runs in a daemon thread: a Spark that stops reporting metrics for
+    ``localCheckpoint`` fails here instead of hanging the CC loop."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    from copy_databasetables_spark.operators._helpers import (
+        ckpt,
+        ckpt_observed,
+    )
+
+    df = spark.range(0, 5000, 1, 4).select(
+        (F.col("id") % 37).alias("k"), F.col("id").alias("v")
+    )
+    if exchange:
+        df = df.groupBy("k").agg(F.sum("v").alias("v"))
+    aggs = [F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")]
+    seen = Observation()
+    ckpt(df.observe(seen, *aggs), eager=True)
+    got = {}
+    t = threading.Thread(target=lambda: got.update(seen.get), daemon=True)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "no metrics for an eager localCheckpoint"
+    want = df.agg(*aggs).first().asDict()
+    assert got == want
+    out, s = ckpt_observed(df, F.sum("v"))
+    assert s == want["s"] and out.count() == want["n"]
 
 
 def test_survivor_one_keep_per_cluster_and_is_best(spark):
@@ -2941,6 +2995,80 @@ def test_bm25_persisted_matches_in_plan_and_survives_rebuild(spark):
     expect = [tuple(r) for r in qs["q_text_bm25"](spark, sf).collect()]
     assert [tuple(r) for r in later.collect()] == expect
     assert [tuple(r) for r in pending.collect()] == expect
+
+
+def test_bm25_index_contents_match_duckdb(spark, tmp_path):
+    """The one-pass BM25 index build over sf0.001's documents plus a
+    NULL-text, an empty-text and a one-token document: every term's
+    postings ``df`` is DuckDB's ``COUNT(DISTINCT doc_id)`` (not only
+    the query's terms), the postings are DuckDB's (term, doc, tf, dl)
+    rows, and ``stats`` is ``COUNT(*)`` and
+    ``CAST(SUM(dl) AS DOUBLE) / COUNT(*)`` bit for bit — the NULL-text
+    document counted in neither."""
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from copy_databasetables_spark.operators.text import _bm25_index_build
+    from tests.conftest import SF_SMOKE
+
+    base = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    extra = pa.table(
+        {
+            "doc_id": [10**9 + 1, 10**9 + 2, 10**9 + 3],
+            "text": [None, "", "Solitary"],
+            "lang": ["en"] * 3,
+            "source": ["extra"] * 3,
+            "n_chars": [0, 0, 8],
+        },
+        schema=base.schema,
+    )
+    docs = f"{tmp_path}/documents.parquet"
+    pq.write_table(pa.concat_tables([base, extra]), docs)
+    path = _bm25_index_build(spark, str(tmp_path))
+    try:
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')"
+        )
+        con.execute(
+            "CREATE VIEW tok AS SELECT doc_id, "
+            "UNNEST(string_split(lower(text), ' ')) AS term FROM documents"
+        )
+        con.execute(
+            "CREATE VIEW dl AS SELECT doc_id, COUNT(*) AS dl FROM tok "
+            "GROUP BY doc_id"
+        )
+        postings = f"read_parquet('{path}/postings/*.parquet')"
+        got_df = con.execute(
+            f"SELECT DISTINCT term, df FROM {postings} ORDER BY ALL"
+        ).fetchall()
+        want_df = con.execute(
+            "SELECT term, COUNT(DISTINCT doc_id) FROM tok GROUP BY term "
+            "ORDER BY ALL"
+        ).fetchall()
+        assert got_df == want_df
+        assert {"", "solitary"} <= {term for term, _ in got_df}
+        got_post = con.execute(
+            f"SELECT term, doc_id, tf, dl FROM {postings} ORDER BY ALL"
+        ).fetchall()
+        want_post = con.execute(
+            "SELECT term, doc_id, COUNT(*), dl FROM tok JOIN dl USING (doc_id)"
+            " GROUP BY term, doc_id, dl ORDER BY ALL"
+        ).fetchall()
+        assert got_post == want_post
+        got_stats = con.execute(
+            f"SELECT n_docs, avgdl FROM read_parquet('{path}/stats/*.parquet')"
+        ).fetchall()
+        want_stats = con.execute(
+            "SELECT COUNT(*), CAST(SUM(dl) AS DOUBLE) / COUNT(*) FROM dl"
+        ).fetchall()
+        assert got_stats == want_stats
+        assert got_stats[0][0] == base.num_rows - base["text"].null_count + 2
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_remove_top_pc_fast_matches_exact_within_tolerance(spark):

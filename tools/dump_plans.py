@@ -135,8 +135,9 @@ NOTES.update(
             "executes this plan ~diameter times with localCheckpoint "
             "truncating lineage between rounds). Both the message join "
             "and the min-aggregate key on doc_id, so each round is one "
-            "co-partitioned shuffle; the convergence check is a single "
-            "scalar aggregate, not a labels⋈labels diff."
+            "co-partitioned shuffle; the convergence check is a label "
+            "sum observed on the round's checkpoint job, not a "
+            "labels⋈labels diff."
         ),
         "q_emb_outlier": (
             "The centroid side is |labels| rows (two-phase aggregate "
