@@ -1,28 +1,28 @@
 """§2.10 Similarity search over the embedding column.
 
-Four operators on ``embeddings`` (``array<float>``, dim 64):
+The vector operators on ``embeddings`` (``array<float>``, dim 64):
+exact and approximate (IVF, PQ, IVF-PQ, binary-sketch) nearest-neighbor
+search, recall audits of each index, and the embedding statistics
+(centroids, covariance, power-iteration PCA, whitening, drift).
 
-- ``q_sim_topk``      — brute-force cosine top-k (the exactness baseline)
-- ``q_sim_threshold`` — all pairs above a cosine threshold (exact baseline)
-- ``q_sim_threshold_blocked`` — the same, IVF-cell-blocked (the scale shape)
-- ``q_knn_label``     — k-NN majority-label classification
-- ``q_sim_ivf``       — IVF-style bucketed ANN (the 100 TB scale path)
+Each retrieval op states only how it scores candidates; the plan around
+the scoring is shared:
 
-All cosine math is higher-order-function expressions (zip_with dot +
-aggregate norms) in whole-stage codegen — vectors never leave the JVM.
-Vectors are cast float→double first so Spark and the DuckDB oracle
-(list_cosine_similarity on DOUBLE[]) agree to ~1e-15; rank order is
-decided on raw doubles (cosine gaps between distinct random vectors are
-~1e-3, nine orders above the noise) with vec_id as the total tie-break,
-and reported cosines are rounded to 4dp.
+- ``_probes`` — the query batch (``_PROBE_FILTER``'s rows);
+- ``_scan`` — brute-force candidates, probes broadcast over the corpus;
+- ``_cell_pairs`` / ``_ivf_top_k`` — the IVF probe plan: probe → its
+  nearest cells → the cells' members (full vectors or PQ codes);
+- ``_top_k`` — the per-probe cosine top-k cut;
+- ``_power_iteration`` — the driver-side power-iteration kernel behind
+  every PCA op.
 
-Scale notes (100 TB): brute-force k-NN is O(|probes|·|corpus|) — fine
-for a probe *set* against a broadcastable corpus shard, wrong as an
-all-pairs primitive. The IVF operator is the scale design: assign every
-vector to its nearest of K coarse centroids (one broadcast join), then
-search only the probe's cell (nprobe=1 here; raise nprobe by unioning
-cells). Partition the corpus by cell id and each query touches one
-partition — the Spark analog of a FAISS IVF-Flat index.
+Cosine math is higher-order-function expressions (zip_with dot over
+precomputed norms) in whole-stage codegen. Vectors are cast to double
+first, so Spark and the DuckDB oracle (list_cosine_similarity on
+DOUBLE[]) agree to ~1e-15; ranks are decided on raw doubles (cosine gaps
+~1e-3) with the id as the total tie-break, and reported cosines round
+to 4dp. Sums that feed a rounded output quantize per term to int64 so
+both engines add identical integers in any order.
 """
 
 from __future__ import annotations
@@ -173,11 +173,10 @@ def _qdot(a: str, b: str) -> Column:
     """Int-quantized dot product: floor((x·y)·10⁶ + 0.5) per term,
     summed — every term is an integer-valued double and the running sum
     stays far below 2⁵³, so the sum is EXACT and therefore
-    order-independent. That is the whole point (VERDICT r13 item 2):
-    the same integers come out of Spark codegen here, numpy inside
-    ``_ivf_assign``'s map-side batches, and DuckDB's mirror
-    (``_qd_sql``), no matter how each engine batches or reorders the
-    reduction — verified bit-for-bit in tests/test_operators.py. The
+    order-independent. So the same integers come out of Spark codegen
+    here, numpy inside ``_ivf_assign``'s map-side batches, and DuckDB's
+    mirror (``_qd_sql``), no matter how each engine batches or reorders
+    the reduction — verified bit-for-bit in tests/test_operators.py. The
     1e-6 quantization error (≤3.2e-5 absolute on a 64-dim dot) sits
     two orders below the ~1e-3 centroid-affinity gaps that decide
     assignments on this data."""
@@ -223,6 +222,69 @@ _ASSIGN_CTE = f"""
       WHERE rn = 1"""
 
 
+def _probes(v: DataFrame, *extra, e: str = "e", nrm: str = "nrm") -> DataFrame:
+    """The query batch: ``_PROBE_FILTER``'s rows of ``v`` as
+    ``(probe_id, pe, pn, *extra)``, ``pe``/``pn`` read from columns
+    ``e``/``nrm``. Every probe-side op draws its batch here, so all of
+    them (and their oracles' ``p`` CTEs) search for the same vectors."""
+    return v.where(_PROBE_FILTER).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col(e).alias("pe"),
+        F.col(nrm).alias("pn"),
+        *extra,
+    )
+
+
+def _scan(
+    p: DataFrame, corpus: DataFrame, cos: Column | None = None, carry=()
+) -> DataFrame:
+    """Brute-force candidates: the broadcast probe batch ``p`` against
+    every other ``corpus`` row, as ``(probe_id, neighbor_id, *carry,
+    cos_raw)``. ``cos`` defaults to ``_cosine_pre("pe", "e", "pn",
+    "nrm")``. Cost: |probes|·|corpus| dot products in one nested-loop
+    join; no shuffle of the corpus."""
+    if cos is None:
+        cos = _cosine_pre("pe", "e", "pn", "nrm")
+    return (
+        F.broadcast(p)
+        .join(corpus, F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id",
+            F.col("vec_id").alias("neighbor_id"),
+            *carry,
+            cos.alias("cos_raw"),
+        )
+    )
+
+
+def _top_k(scored: DataFrame, k: int, *carry) -> DataFrame:
+    """The per-probe cosine top-k cut every retrieval op ends in: rank
+    ``(probe_id; cos_raw desc, neighbor_id asc)``, keep ``rank_pos <=
+    k`` and project ``(probe_id, neighbor_id, *carry, cosine,
+    rank_pos)`` with ``cosine = rz(cos_raw, 4)``.
+
+    Ranking on raw doubles with neighbor_id as the total tie-break is
+    what matches the oracles' ``ORDER BY cos DESC, id ASC``: cosine
+    gaps (~1e-3) sit far above cross-engine ulp noise. Callers pass
+    ``k`` at call time (``_K``, ``_IVF_K``) so mutating the module
+    constant re-binds it. Catalyst plans the cut as WindowGroupLimit +
+    Window over one shuffle on probe_id."""
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank_pos", F.row_number().over(w))
+        .where(F.col("rank_pos") <= k)
+        .select(
+            "probe_id",
+            "neighbor_id",
+            *carry,
+            rz("cos_raw", 4).alias("cosine"),
+            "rank_pos",
+        )
+    )
+
+
 @register(
     "q_sim_topk",
     oracle=f"""
@@ -240,32 +302,12 @@ _ASSIGN_CTE = f"""
     """,
 )
 def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k for each probe vector. The probe side is
-    small → broadcast it; ranking happens in one window after a single
-    pass over the corpus."""
+    """Brute-force cosine top-k for each probe vector, the exactness
+    baseline the approximate indexes are measured against: one
+    broadcast probe batch against the corpus (``_scan``), then the
+    shared ``_top_k`` cut. Cost O(|probes|·|corpus|)."""
     v = _vecs(spark, sf_dir)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        F.broadcast(p)
-        .join(v, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id", "neighbor_id", rz("cos_raw", 4).alias("cosine"), "rank_pos"
-        )
-    )
+    return _top_k(_scan(_probes(v), v), _K)
 
 
 @register(
@@ -385,16 +427,11 @@ def q_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN classification: majority label among the 5 nearest neighbors,
     ties broken toward the smaller label (deterministic, unlike mode())."""
     v = _vecs(spark, sf_dir)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
     w = Window.partitionBy("probe_id").orderBy(
         F.col("cos_raw").desc(), F.col("vec_id").asc()
     )
     knn = (
-        F.broadcast(p)
+        F.broadcast(_probes(v))
         .join(v, F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
@@ -477,17 +514,7 @@ def q_sim_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = v.select("vec_id", "e").mapInPandas(
         score, schema="probe_id long, neighbor_id long, cos_raw double"
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.where(F.col("neighbor_id") != F.col("probe_id"))
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id", "neighbor_id", rz("cos_raw", 4).alias("cosine"), "rank_pos"
-        )
-    )
+    return _top_k(scored.where(F.col("neighbor_id") != F.col("probe_id")), _K)
 
 
 def _collect_centroids(c: DataFrame) -> list:
@@ -500,23 +527,18 @@ def _collect_centroids(c: DataFrame) -> list:
 
 def _ivf_assign(v: DataFrame, c: DataFrame | list) -> DataFrame:
     """The IVF index BUILD: every corpus vector coarse-quantizes to its
-    single nearest centroid — a pure MAP-SIDE argmax (r14; the r13
-    PQ-encode rewrite's template applied to the last corpus×K shuffle).
+    single nearest centroid — a pure MAP-SIDE argmax. The centroid
+    matrix collects once (a TakeOrdered-bounded index-build constant:
+    K·d doubles — 51 MB even at the K=100k a 10B-vector index would
+    use), broadcasts to the workers, and each corpus partition arg-maxes
+    its own rows in numpy inside ``mapInPandas``: zero shuffle, no
+    Window, corpus touched exactly once, O(K·d) resident per worker.
+    ``c`` is the centroid DataFrame or an already-collected, cid-sorted
+    row list (``_collect_centroids``), so multi-leg callers pull the
+    centroids once.
 
-    The previous formulation (crossJoin(broadcast(c)) → per-vector
-    row_number window) shuffled n·K rows: 2.8B rows at the 2M-vector ×
-    1415-cell third decade, which needed a 48 GiB heap — the one
-    build-leg plan that did not survive a 100× scale-up (VERDICT r13).
-    Now the centroid matrix collects once (a TakeOrdered-bounded
-    index-build constant: K·d doubles — 51 MB even at the K=100k a
-    10B-vector index would use), broadcasts to the workers, and each
-    corpus partition arg-maxes its own rows in numpy inside
-    ``mapInPandas``: zero shuffle, no Window, corpus touched exactly
-    once, O(K·d) resident per worker.
-
-    Determinism (the open question SCALE.md §r13 named, closed here):
-    the ranking score is the int64-quantized dot over the centroid norm
-    (``_cent_affinity``) — floor((x·c)·10⁶ + 0.5) summed in integers,
+    Determinism: the ranking score is the int64-quantized dot over the
+    centroid norm (``_cent_affinity``) — floor((x·c)·10⁶ + 0.5) summed in integers,
     EXACT and order-independent, so numpy's batching cannot move it;
     the division by cn is one IEEE op on bit-identical operands. The
     same integers come out of the DuckDB oracle (``_ASSIGN_CTE``) and
@@ -527,10 +549,6 @@ def _ivf_assign(v: DataFrame, c: DataFrame | list) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # r15: ``c`` may be the centroid DataFrame (collected here — the
-    # original surface) or an already-collected, cid-sorted row list
-    # (``_collect_centroids``) — multi-leg callers like the CDC op run
-    # the bounded TakeOrdered pull ONCE instead of once per assign leg.
     cent = c if isinstance(c, list) else _collect_centroids(c)
     if not cent:
         raise ValueError("IVF build: empty centroid set")
@@ -570,90 +588,102 @@ def _ivf_assign(v: DataFrame, c: DataFrame | list) -> DataFrame:
     )
 
 
-def _ivf_search(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int,
-    meta: DataFrame | None = None,
-    max_centroids: int = _IVF_MAX_CENTROIDS,
-    assign: DataFrame | None = None,
-) -> DataFrame:
-    """Shared IVF-Flat search core: corpus vectors coarse-quantize to
-    their single nearest centroid (an inverted list is disjoint by
-    construction); each PROBE fans out to its ``nprobe`` nearest cells.
-    Because corpus assignment is unique, the probe-cells ⋈ members join
-    can never emit a (probe, neighbor) pair twice — no dedup needed at
-    any nprobe.
+def _probe_cells(p: DataFrame, c: DataFrame, nprobe: int) -> DataFrame:
+    """Route each probe of ``p`` to its ``nprobe`` nearest cells of the
+    centroid table ``c``: ``(probe_id, pe, pn, cid)``.
 
-    ``meta`` (optional) is a (neighbor_id, lang) DataFrame of vectors
-    that pass a metadata predicate: when given, the inverted lists are
-    PRE-filtered to qualifying members before scoring (hybrid search
-    inside the index — q_sim_hybrid's semantics composed with the
-    bucketed scale path) and ``lang`` rides into the output.
-
-    ``assign`` (optional) is a prebuilt (vec_id, cid) inverted-index
-    frame — the PERSISTED-index deployment path (q_sim_ivf_persisted)
-    passes the parquet read-back here so the build cost is visibly
-    amortizable; when omitted the assignment is computed in-plan."""
-    v = _vecs(spark, sf_dir)
-    c = _centroids(v, max_centroids)
-    if assign is None:
-        assign = _ivf_assign(v, c)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    # probe → its nprobe nearest cells. The probe FILTER runs before the
-    # centroid cross join and window, so this branch really is
-    # nprobe · |probes| rows (probes are the query batch, not the
-    # corpus) — ranking the full corpus a second time here would double
-    # the O(n·K) assignment work for rows the join would then discard.
+    Cells rank by ``_cent_affinity`` (the quantized dot over the
+    centroid norm) with cid ascending on ties, the same score and
+    tie-break ``_ivf_assign`` uses to place corpus vectors, so at
+    nprobe=1 a probe searches exactly its own cell. Cost: |probes|·K
+    scores against the broadcast centroid table; the corpus is not
+    touched."""
     pw = Window.partitionBy("probe_id").orderBy(
         F.col("cos_c").desc(), F.col("cid").asc()
     )
-    probe_cell = (
+    return (
         p.crossJoin(F.broadcast(c))
         .withColumn("cos_c", _cent_affinity("pe"))
         .withColumn("rn", F.row_number().over(pw))
         .where(F.col("rn") <= nprobe)
         .select("probe_id", "pe", "pn", "cid")
     )
+
+
+def _cell_pairs(
+    p: DataFrame,
+    c: DataFrame,
+    assign: DataFrame,
+    members: DataFrame,
+    x: str,
+    nprobe: int = 1,
+    meta: DataFrame | None = None,
+) -> DataFrame:
+    """The IVF probe plan: probe → its ``nprobe`` cells (``_probe_cells``)
+    → the members ``assign`` places in those cells. ``members`` is
+    ``(vec_id, x, nrm)``: full vectors (``x="e"``) or PQ reconstructions
+    (``x="d"``). ``meta`` (optional, ``(neighbor_id, lang)``) pre-filters
+    the inverted lists before scoring, so every probe still gets a full
+    k of qualifying neighbors. Output: ``(probe_id, pe, pn, cid,
+    neighbor_id, ncid, x, nrm[, lang])``, probes excluded.
+
+    ``assign`` gives each vector exactly one cell, so the fan-out never
+    emits a (probe, neighbor) pair twice at any nprobe. Cost per batch:
+    the probed cells' members (≈ nprobe·n/K), one cid equi-join against
+    the broadcast probe→cell table."""
     cell_members = assign.select(
         F.col("vec_id").alias("neighbor_id"), F.col("cid").alias("ncid")
-    ).join(v.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm"), "neighbor_id")
-    carry = []
-    if meta is not None:
-        # pre-filter the inverted lists: only qualifying vectors are
-        # scored, so every probe still gets a full k of qualifying
-        # neighbors (cell permitting) — never post-filtered short lists.
-        cell_members = cell_members.join(meta, "neighbor_id")
-        carry = ["lang"]
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
+    ).join(
+        members.select(F.col("vec_id").alias("neighbor_id"), x, "nrm"),
+        "neighbor_id",
     )
-    return (
-        F.broadcast(probe_cell)
-        .join(
-            cell_members,
-            (F.col("ncid") == F.col("cid"))
-            & (F.col("neighbor_id") != F.col("probe_id")),
-        )
-        .select(
-            "probe_id",
-            "neighbor_id",
-            *carry,
-            _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _IVF_K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            *carry,
-            rz("cos_raw", 4).alias("cosine"),
-            "rank_pos",
-        )
+    if meta is not None:
+        cell_members = cell_members.join(meta, "neighbor_id")
+    return F.broadcast(_probe_cells(p, c, nprobe)).join(
+        cell_members,
+        (F.col("ncid") == F.col("cid"))
+        & (F.col("neighbor_id") != F.col("probe_id")),
+    )
+
+
+def _ivf_top_k(
+    p: DataFrame,
+    c: DataFrame,
+    assign: DataFrame,
+    members: DataFrame,
+    x: str = "e",
+    nprobe: int = 1,
+    meta: DataFrame | None = None,
+) -> DataFrame:
+    """IVF search: ``_cell_pairs`` scored by the cosine of ``pe``
+    against the member vector ``x``, cut by ``_top_k`` at ``_IVF_K``
+    (``lang`` carried when ``meta`` is given). Every IVF-Flat and
+    IVF-PQ op ends here; they differ only in the index they pass."""
+    carry = () if meta is None else ("lang",)
+    scored = _cell_pairs(p, c, assign, members, x, nprobe, meta).select(
+        "probe_id",
+        "neighbor_id",
+        *carry,
+        _cosine_pre("pe", x, "pn", "nrm").alias("cos_raw"),
+    )
+    return _top_k(scored, _IVF_K, *carry)
+
+
+def _write_cells(df: DataFrame, path: str) -> None:
+    """Write an index artifact ``partitionBy(cid)``, one file per cell
+    (``repartition("cid")`` first), so a probe's cell join prunes the
+    read to its own cells' files."""
+    df.repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
+        path
+    )
+
+
+def _read_cells(spark: SparkSession, path: str, *cols: str) -> DataFrame:
+    """Read a ``_write_cells`` artifact back as ``(*cols, cid)``. cid
+    returns as a partition directory; the BIGINT cast restores the
+    join-key type of the in-plan index."""
+    return spark.read.parquet(path).select(
+        *cols, F.col("cid").cast("bigint").alias("cid")
     )
 
 
@@ -705,33 +735,24 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     by cell id once and reuse it for every query batch; raise K with
     corpus size (~sqrt(n)) as an explicit index-build constant, never a
     fraction of the data (q_sim_ivf_kscaled is that knob made real)."""
-    return _ivf_search(spark, sf_dir, nprobe=1)
+    v = _vecs(spark, sf_dir)
+    c = _centroids(v)
+    return _ivf_top_k(_probes(v), c, _ivf_assign(v, c), v)
 
 
 @register("q_sim_ivf_kscaled", oracle=_ivf_oracle(_KSCALED_C_SQL))
 def q_sim_ivf_kscaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ivf with the documented K-growth knob actually turned:
-    K = ⌈√n⌉ centroids instead of the fixed 32. With K ~ √n the
-    inverted lists hold ~√n members each, so the SEARCH leg costs
-    O(batch·√n) per query batch — sub-linear in the corpus — while the
-    one-time assignment (the index BUILD, O(n·K)) is amortized across
-    every batch that reuses the index, exactly as FAISS sizes nlist.
-    The gate runs build+search together (the oracle replicates both);
-    tools/stress_scale.py --ivf-ab isolates the search leg against a
-    prebuilt index to show the fixed-K/scaled-K curve separation that
-    motivates this variant (VERDICT r6 item 6: fixed-K alpha is
-    assignment-dominated).
-
-    K is computed once from the corpus count — a bounded scalar pull
-    (one int), the same discipline as the BLAS probe cap — and lands in
-    the plan as a literal LIMIT, keeping the centroid broadcast
-    TakeOrdered-bounded. The centroid candidate filter yields n/50
-    rows, so effective K = min(n/50, ⌈√n⌉): at n < 2500 the filter
-    binds (matching the oracle's identical arithmetic); beyond that
-    √n does."""
+    """q_sim_ivf with K = ⌈√n⌉ centroids instead of the fixed 32, the
+    way FAISS sizes nlist: inverted lists hold ~√n members, so a query
+    batch's search costs O(batch·√n) while the O(n·√n) assignment (the
+    index build) runs in-plan here and is amortized by the persisted
+    twin. K comes from one count (a scalar pull) and enters the plan as
+    the literal LIMIT of the TakeOrdered centroid pick. The centroid
+    filter yields n/50 rows, so effective K = min(n/50, ⌈√n⌉), the
+    oracle's identical arithmetic."""
     v = _vecs(spark, sf_dir)
-    k = math.ceil(math.sqrt(v.count()))
-    return _ivf_search(spark, sf_dir, nprobe=1, max_centroids=k)
+    c = _centroids(v, math.ceil(math.sqrt(v.count())))
+    return _ivf_top_k(_probes(v), c, _ivf_assign(v, c), v)
 
 
 def _ivf_index_path(
@@ -739,15 +760,15 @@ def _ivf_index_path(
 ) -> str:
     """A per-CALL unique index directory. The returned search DataFrame
     reads the path lazily, so the path must never be overwritten while
-    any earlier result could still be pending: a basename+pid key (the
-    r7 scheme) collides across corpora sharing a basename and across
-    sequential calls in one process. Keying on sha1(abspath) + pid + a
+    any earlier result could still be pending: a basename+pid key
+    collides across corpora sharing a basename and across sequential
+    calls in one process. Keying on sha1(abspath) + pid + a
     process-monotonic counter makes every call's directory fresh.
     Stale directories (mtime > 6 h — far beyond any gate/bench run's
     lifetime) are pruned best-effort on the way in so /tmp doesn't
     accumulate one index per historical call. ``base`` parameterizes
-    the artifact family (r13: text.py's persisted BM25 postings reuse
-    this scheme under /tmp/spark_graft_bm25_index)."""
+    the artifact family (text.py's persisted BM25 postings use
+    /tmp/spark_graft_bm25_index)."""
     import hashlib
     import os
     import shutil
@@ -767,66 +788,34 @@ def _ivf_index_path(
 def _ivf_persisted_search(
     spark: SparkSession, sf_dir: str, k: int
 ) -> DataFrame:
-    """Shared build→persist→read-back→search core for the persisted
-    variants: write the (vec_id, cid) inverted index to parquet
-    ``partitionBy(cid)`` — the production layout, where each probe's
-    equi-join on cell id prunes the scan to one cell's files
-    (plan-pinned in tests/test_plans.py) — then search against the
-    read-back so the amortize-the-build story is an executed path.
-    cid comes back as a partition directory; the explicit BIGINT cast
-    keeps the join key type identical to the in-plan variant's."""
+    """Build → persist → read back → search, for the persisted IVF-Flat
+    ops: the ``(vec_id, cid)`` index is written by ``_write_cells`` to a
+    fresh ``_ivf_index_path`` directory and the search reads it back,
+    so the cell join prunes the scan to the probed cells' files. Values
+    equal the in-plan search's: same centroids, same argmax."""
     v = _vecs(spark, sf_dir)
     c = _centroids(v, k)
     path = _ivf_index_path(sf_dir)
-    # repartition("cid") first: one file per cell instead of
-    # (partitions × cells) shards — the id-pair exchange is tiny and is
-    # the standard partitioned-write shape (the stress harness always
-    # wrote it this way; without it the gate-scale write fans out ~1024
-    # small files and the read-back pays their open cost).
-    (
-        _ivf_assign(v, c)
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(path)
-    )
-    index = spark.read.parquet(path).select(
-        "vec_id", F.col("cid").cast("bigint").alias("cid")
-    )
-    return _ivf_search(spark, sf_dir, nprobe=1, max_centroids=k, assign=index)
+    _write_cells(_ivf_assign(v, c), path)
+    return _ivf_top_k(_probes(v), c, _read_cells(spark, path, "vec_id"), v)
 
 
 @register("q_sim_ivf_persisted", oracle=_ivf_oracle(_C_SQL))
 def q_sim_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF DEPLOYMENT split made a checked op: BUILD the inverted
-    index (one coarse-quantization pass), PERSIST it to parquet exactly
-    as a production index build would, then SEARCH against the
-    read-back — so the amortize-the-build story the in-plan variants
-    argue in prose is an executed, hash-verified path. The search
-    reads (vec_id, cid) from storage: any query batch thereafter pays
-    only O(batch·n/K) search, never the O(n·K) assignment, and the
-    index IS written partitionBy(cid), so a probe's cell join prunes
-    the read to one cell's files. Values are identical to q_sim_ivf
-    by construction (same centroids, same deterministic argmin), which
-    the shared oracle pins — a persistence round-trip that corrupted
-    one assignment would hash-red."""
+    """q_sim_ivf with its index persisted: build the ``(vec_id, cid)``
+    inverted index once, write it partitionBy(cid), and search the
+    read-back. A query batch then pays only O(batch·n/K) search, never
+    the O(n·K) assignment. Shares q_sim_ivf's oracle: a round-trip that
+    corrupted one assignment would fail it."""
     return _ivf_persisted_search(spark, sf_dir, _IVF_MAX_CENTROIDS)
 
 
 @register("q_sim_ivf_kscaled_persisted", oracle=_ivf_oracle(_KSCALED_C_SQL))
 def q_sim_ivf_kscaled_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r7's two deployment knobs COMBINED (VERDICT r7 item 3): the
-    K = ⌈√n⌉ index (sub-linear search-leg cost, q_sim_ivf_kscaled) built
-    ONCE, persisted to parquet, and probed from the read-back
-    (q_sim_ivf_persisted's amortization split). This is the actual
-    production shape of the better index: kscaled alone re-pays its
-    O(n·√n) assignment on every query batch; persisted alone amortizes
-    only the fixed-32 index whose inverted lists grow linearly. Here a
-    query batch pays O(batch·√n) against storage and the O(n·√n) build
-    is a one-time cost — the index is written partitionBy(cid), so
-    each probe prunes to one cell's files. Values are identical to
-    q_sim_ivf_kscaled by construction (same ⌈√n⌉ centroids, same
-    deterministic argmin), which the shared oracle pins."""
+    """The K = ⌈√n⌉ index of q_sim_ivf_kscaled, persisted and searched
+    from the read-back: a query batch pays O(batch·√n) against storage
+    and the O(n·√n) build is a one-time cost. Shares
+    q_sim_ivf_kscaled's oracle."""
     v = _vecs(spark, sf_dir)
     k = math.ceil(math.sqrt(v.count()))
     return _ivf_persisted_search(spark, sf_dir, k)
@@ -872,7 +861,9 @@ def q_sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit suite pins against the exact top-k), and the plan shape is
     UNCHANGED: the corpus is still partitioned by its single home cell;
     only the tiny probe→cell fan-out table grows N×."""
-    return _ivf_search(spark, sf_dir, nprobe=_NPROBE)
+    v = _vecs(spark, sf_dir)
+    c = _centroids(v)
+    return _ivf_top_k(_probes(v), c, _ivf_assign(v, c), v, nprobe=_NPROBE)
 
 
 @register(
@@ -935,28 +926,8 @@ def q_sim_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nrm",
         F.sqrt(F.aggregate(F.col("d"), F.lit(0.0), lambda a, x: a + x * x)),
     )
-    p = n.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("d").alias("pd"),
-        F.col("nrm").alias("pn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        F.broadcast(p)
-        .join(n, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pd", "d", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id", "neighbor_id", rz("cos_raw", 4).alias("cosine"), "rank_pos"
-        )
-    )
+    cos = _cosine_pre("pe", "d", "pn", "nrm")
+    return _top_k(_scan(_probes(n, e="d"), n, cos), _K)
 
 
 @register(
@@ -1123,30 +1094,16 @@ _PQ_SUBS_SQL = f"""
 
 
 def _pq_codebook(v: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """CODEBOOK half of the PQ build (r15 split of _pq_parts; the
-    encode half is ``_pq_encode``; ``_pq_parts`` composes them —
-    values bit-identical to the pre-split single function): the
-    subspace codebook as BOTH its artifact table (``code_id, m, cw``)
-    and its single broadcastable array row for in-row encoding.
-
-    Original combined docstring (still accurate for the pair): the
-    PQ index-build halves are separated so the persisted variant can
-    write each as its own production artifact: the subspace codebook
-    (``code_id, m, cw`` — a CONSTANT _PQ_M·_PQ_K = 256 rows) and the
-    codes (``vec_id, m, code_id`` — the 4-bit-id-per-subspace encoding
-    that is the ONLY corpus-sized thing a PQ index keeps resident,
-    8 bytes/vector at production bit-packing). Encoding is ENTIRELY
-    IN-ROW (r13): the 256-entry codebook broadcasts as ONE array row
-    and each vector arg-mins all _PQ_M subspaces against it inside its
-    own row — a pure map-side scan, zero encode shuffle. The prior
-    formulation (explode to (vec, m) rows → broadcast-join codebook →
-    per-(vec, m) window argmin) shuffled n·M·K rows through a window:
-    512M rows at the 2M-vector third decade, which OOM'd the local
-    encode and is exactly the shuffle a 10B-vector build can't afford.
-    Values are unchanged: identical d2 arithmetic (same zip_with fold),
-    and iterating candidates in (m, code_id)-sorted order with a
-    strict ``<`` keeps the first minimum — the window's (d2 ASC,
-    code_id ASC) tie-break verbatim."""
+    """CODEBOOK half of the PQ build (``_pq_encode`` is the encode
+    half; ``_pq_parts`` composes them): the subspace codebook as BOTH
+    its artifact table (``code_id, m, cw`` — a CONSTANT _PQ_M·_PQ_K =
+    256 rows) and its single broadcastable array row ``cb_arr`` for
+    in-row encoding. The halves are separate so the persisted variants
+    can write each as its own artifact; the codes (``vec_id, m,
+    code_id``) are the only corpus-sized thing a PQ index keeps
+    resident, 8 bytes/vector bit-packed. ``cb_arr`` is sorted by (m,
+    code_id), so the in-row encode's strict ``<`` keeps the first
+    minimum — the oracle's (d2 ASC, code_id ASC) tie-break."""
     sub = (
         f"transform(sequence(0, {_PQ_M - 1}), "
         f"m -> struct(m AS m, slice({{col}}, m * {_PQ_SUB} + 1, {_PQ_SUB}) AS s))"
@@ -1187,17 +1144,14 @@ def _pq_codebook(v: DataFrame) -> tuple[DataFrame, DataFrame]:
 def _pq_enc_expr() -> str:
     """The in-row PQ encode expression — per vector, the array of
     ``(m, code_id)`` structs in subspace order, arg-min'd against the
-    broadcast ``cb_arr`` codebook row. Single-sourced (r15) so the
+    broadcast ``cb_arr`` codebook row. Single-sourced so the
     exploded-artifact encode (``_pq_encode``) and the in-row
     encode+decode (``_pq_index``) can never diverge arithmetically.
 
     d2 is bound ONCE per candidate by materializing (code_id, d2)
-    structs in a transform before the fold (ADVICE r13: the previous
-    formulation evaluated d2_of twice per candidate — once in the CASE
-    predicate, once in the kept struct — doubling the dominant
-    per-vector arithmetic of the corpus-sized encode leg). Same
-    arithmetic, same first-min-in-sorted-order tie-break, bit-identical
-    codes; the fold compares precomputed doubles only."""
+    structs in a transform before the fold, which then compares
+    precomputed doubles only: each vector pays M·K subspace distances,
+    map-side, with zero shuffles."""
     d2_of = (
         f"aggregate(zip_with(slice(e, m * {_PQ_SUB} + 1, {_PQ_SUB}), c.cw, "
         "(x, w) -> (x - w) * (x - w)), cast(0.0 as double), (a, t) -> a + t)"
@@ -1215,9 +1169,8 @@ def _pq_enc_expr() -> str:
 
 
 def _pq_encode(vdf: DataFrame, cb_row: DataFrame) -> DataFrame:
-    """ENCODE-ONLY half of the PQ build (r15 split of _pq_parts, code
-    and arithmetic unchanged): encode any (vec_id, e) frame against a
-    FROZEN codebook row — the production shape, where the codebook is
+    """ENCODE-ONLY half of the PQ build: encode any (vec_id, e) frame
+    against a FROZEN codebook row — the production shape, where the codebook is
     trained once at index build and every later corpus slice (the full
     build, a CDC delta, a backfill) encodes against it. Cost is
     O(|vdf|·M·K) map-side with zero shuffles, so a delta encodes in
@@ -1235,8 +1188,7 @@ def _pq_encode(vdf: DataFrame, cb_row: DataFrame) -> DataFrame:
 
 
 def _pq_parts(v: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Codebook + full-corpus codes (the pre-r15 combined surface; see
-    _pq_codebook's docstring for the build story)."""
+    """Codebook artifact + full-corpus codes (see ``_pq_codebook``)."""
     sub_cb, cb_row = _pq_codebook(v)
     return sub_cb, _pq_encode(v.select("vec_id", "e"), cb_row)
 
@@ -1271,27 +1223,14 @@ def _pq_index(v: DataFrame) -> DataFrame:
     q_sim_ivf_pq / _multiprobe: encode every vector and decode it to
     the reconstruction ``(vec_id, d, nrm)``.
 
-    r15 (guide §2.4 remove shuffles outright): encode AND decode now
-    happen inside the vector's own row. The previous shape exploded the
-    in-row codes to (vec_id, m, code_id) rows, broadcast-joined the
-    codebook back, and re-grouped by vec_id (collect_list) — a corpus×M
-    exchange that existed only to look up codewords the encoding row
-    already had in its broadcast ``cb_arr``. The decode lookup is O(1)
-    per subspace: ``cb_arr`` is array_sort'ed by (m, code_id) and
-    code_id is DENSE 0..k-1 per m by construction (enumerate over the
-    collected codebook ids, every codebook vector contributes exactly
-    one codeword per m), so codeword (m, code_id) lives at index
-    m·(size/M) + code_id. Values bit-identical: same argmins
-    (_pq_enc_expr single-sources the arithmetic), same m-order
-    concatenation the array_sort(collect_list) decode produced, same
-    zero-norm drop. The exploded artifact path (_pq_encode/_pq_decode)
-    is unchanged — it IS the production storage format; this in-row
-    twin is the in-plan composition, where materializing (vec, m) rows
-    through an exchange bought nothing.
-
-    At 100 TB this deletes the only corpus-sized exchange in the
-    in-plan PQ legs; runs once at index build and persists 8-byte codes
-    (q_sim_ivf_pq_persisted is that split executed)."""
+    Encode AND decode happen inside the vector's own row, with no
+    corpus-sized exchange: ``cb_arr`` is sorted by (m, code_id) and
+    code_id is dense 0..k-1 per m (enumerated over the collected
+    codebook ids), so codeword (m, code_id) sits at index
+    m·(size/M) + code_id, an O(1) lookup. Values equal the exploded
+    artifact path's (``_pq_encode`` → ``_pq_decode``, the storage
+    format the persisted ops use): same argmins (``_pq_enc_expr``),
+    same m-order concatenation, same zero-norm drop."""
     _, cb_row = _pq_codebook(v)
     dec_expr = (
         f"flatten(transform({_pq_enc_expr()}, s -> "
@@ -1342,12 +1281,11 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked against the DECODED corpus (concatenated codewords), which is
     exactly the reconstruction an ADC lookup table scores against.
 
-    Plan shape: the codebook is _PQ_M·_PQ_K = 64 rows (a filter →
-    ORDER BY → LIMIT sample — same bounded-broadcast pattern as the IVF
-    centroids); encoding is one broadcast join + a (vec_id, subspace)
-    window argmin; decoding reassembles via array_sort(collect_list) —
+    Plan shape: the codebook is a bounded filter → ORDER BY → LIMIT
+    sample broadcast as one array row; encode and decode run in-row
+    (``_pq_index``), then ``_scan`` and ``_top_k`` as in q_sim_topk —
     all higher-order JVM expressions, no Python. At 100 TB the encode
-    pass runs once at index build (persist codes, 4 bytes/row), and the
+    pass runs once at index build (the persisted twins), and the
     broadcast side never grows with the corpus. Determinism: argmin and
     ranking tie-break on code_id / vec_id; both engines fold the same
     subspace sums in order, and reported cosines round to 4dp.
@@ -1361,29 +1299,8 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-R (FAISS refine) — none of which change the plan shape the
     gate pins here."""
     v = _vecs(spark, sf_dir)
-    n = _pq_index(v)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        F.broadcast(p)
-        .join(n, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pe", "d", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id", "neighbor_id", rz("cos_raw", 4).alias("cosine"), "rank_pos"
-        )
-    )
+    cos = _cosine_pre("pe", "d", "pn", "nrm")
+    return _top_k(_scan(_probes(v), _pq_index(v), cos), _K)
 
 
 _PQ_RERANK_R = 25
@@ -1433,16 +1350,11 @@ def q_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     this worst-case random corpus)."""
     v = _vecs(spark, sf_dir)
     n = _pq_index(v)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
     aw = Window.partitionBy("probe_id").orderBy(
         F.col("cos_pq").desc(), F.col("neighbor_id").asc()
     )
     cand = (
-        F.broadcast(p)
+        F.broadcast(_probes(v))
         .join(n, F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
@@ -1455,26 +1367,23 @@ def q_sim_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rpq") <= _PQ_RERANK_R)
         .select("probe_id", "pe", "pn", "neighbor_id")
     )
+    return _top_k(_rescore(cand, v), _K)
+
+
+def _rescore(cand: DataFrame, v: DataFrame) -> DataFrame:
+    """Exact re-scoring of a candidate set ``(probe_id, pe, pn,
+    neighbor_id)`` against the full-precision corpus ``v``: ``(probe_id,
+    neighbor_id, cos_raw)``. The refine stage of both PQ re-rankers; it
+    fetches full vectors only for the candidates (R per probe)."""
     nv = v.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("e").alias("ne"),
         F.col("nrm").alias("nn"),
     )
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(nv, "neighbor_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(rw))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id", "neighbor_id", rz("cos_raw", 4).alias("cosine"), "rank_pos"
-        )
+    return cand.join(nv, "neighbor_id").select(
+        "probe_id",
+        "neighbor_id",
+        _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
     )
 
 
@@ -1541,15 +1450,8 @@ def _register_recall_report() -> None:
         searches it audits."""
         from copy_databasetables_spark.operators import QUERIES
 
-        # r16 (guide §1.2 — don't recompute what three consumers share):
-        # the exact ground-truth leg is referenced by ALL THREE union
-        # branches, and without materialization each branch re-evaluates
-        # the full brute-force probes×corpus search — the report's most
-        # expensive subtree, 3×. Materialize it once per invocation
-        # (|probes|·k rows — 120 at sf0.1; recomputed from parquet every
-        # call, freed by the harness's free_ckpts like every ckpt site).
-        # Measured best-of-3: 5.18 s → 4.46 s at sf0.01 (the remaining
-        # cost is the three approximate legs themselves).
+        # all three union branches read the exact ground truth; the
+        # checkpoint (|probes|·k rows) runs its brute-force search once
         e = ckpt(
             QUERIES["q_sim_topk"](spark, sf_dir)
             .where(F.col("rank_pos") <= _IVF_K)
@@ -1649,33 +1551,7 @@ def q_sim_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"), "lang")
     )
     corpus = v.join(meta, "vec_id")
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        F.broadcast(p)
-        .join(corpus, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "lang",
-            _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            "lang",
-            rz("cos_raw", 4).alias("cosine"),
-            "rank_pos",
-        )
-    )
+    return _top_k(_scan(_probes(v), corpus, carry=["lang"]), _K, "lang")
 
 
 def _km_assign(v: DataFrame, cent: DataFrame) -> DataFrame:
@@ -1691,9 +1567,8 @@ def _km_assign(v: DataFrame, cent: DataFrame) -> DataFrame:
     over identical inputs in Spark and DuckDB — no summation happens
     before the quantize — so both engines fold bit-identical integers
     and the downstream inertia hash cannot flip at a FLOOR boundary
-    (the residual risk ADVICE.md r6 flagged in the quantize-after-sum
-    formulation, where the two engines' sum orders could differ by an
-    ulp exactly at a .5 boundary)."""
+    (quantizing after the sum could: the engines' sum orders can differ
+    by an ulp exactly at a .5 boundary)."""
     d2 = F.aggregate(
         F.zip_with("e", "ce", lambda x, c: (x - c) * (x - c)),
         F.lit(0.0),
@@ -1794,12 +1669,9 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise. Inertia sums PER-DIMENSION quantized terms (``d2q`` in
     ``_km_assign``): each FLOOR((x−c)²·10⁶+0.5) is computed from
     identical doubles with NO prior summation, so the int64 folds are
-    bit-identical in both engines — closing the quantize-after-sum
-    boundary case ADVICE.md r6 flagged (Spark's ordered zip_with fold
-    vs DuckDB's unordered group SUM could land an ulp apart exactly at
-    a FLOOR .5 boundary). Empty clusters keep their previous centroid
-    (COALESCE) — the standard Lloyd fallback, applied identically in
-    both engines."""
+    bit-identical in both engines. Empty clusters keep their previous
+    centroid (COALESCE) — the standard Lloyd fallback, applied
+    identically in both engines."""
     v = _vecs(spark, sf_dir)
     c0 = _centroids(v).select("cid", "ce")
     c0_long = c0.select("cid", F.posexplode("ce").alias("pos", "cval"))
@@ -1869,7 +1741,9 @@ def q_sim_hybrid_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.expr(_HYBRID_PRED_SQL))
         .select(F.col("doc_id").alias("neighbor_id"), "lang")
     )
-    return _ivf_search(spark, sf_dir, nprobe=1, meta=meta)
+    v = _vecs(spark, sf_dir)
+    c = _centroids(v)
+    return _ivf_top_k(_probes(v), c, _ivf_assign(v, c), v, meta=meta)
 
 
 #: Reciprocal-rank-fusion constants: the canonical damping constant 60
@@ -1951,16 +1825,11 @@ def q_sim_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (probe, cand, rank) tables + a per-probe window over ≤2N rows —
     is linear in retrieved rows and unchanged."""
     v = _vecs(spark, sf_dir)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
     wsem = Window.partitionBy("probe_id").orderBy(
         F.col("cos_raw").desc(), F.col("cand_id").asc()
     )
     sem = (
-        F.broadcast(p)
+        F.broadcast(_probes(v))
         .join(v, F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
@@ -2148,7 +2017,7 @@ def q_emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q_emb_top_eigvec — power iteration on the covariance (r9 continuation).
+# q_emb_top_eigvec and the PCA family — power iteration on the covariance.
 # --------------------------------------------------------------------------
 
 _PI_ITERS = 6
@@ -2288,13 +2157,11 @@ def q_emb_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the classic all-but-the-top post-processing). Fourth iterative
     exemplar after connected components, k-means, and PageRank.
 
-    The covariance comes from the same map-side partial-Gram
-    construction as q_emb_covariance (mirrored to the full matrix);
-    the iteration state is a d-row (pos, val) vector, so each of the
-    {_PI_ITERS} unrolled rounds is a d²-row broadcast-scale join + a
-    d-term reduction — at ANY corpus size the iteration cost is
-    O(d²), corpus size only enters the one-pass Gram build. Cross-
-    engine determinism uses the PageRank discipline: every multi-term
+    The covariance is q_emb_covariance's cells collected as the full
+    matrix (``_build_cov``); ``_power_iteration`` runs the _PI_ITERS
+    rounds on the driver, O(d²) each at ANY corpus size — corpus size
+    only enters the one-pass Gram build. Cross-engine determinism uses
+    the PageRank discipline: every multi-term
     float reduction (the matvec and the norm) quantizes per-term to
     int64 (FLOOR(x·10¹² + 0.5)) so partition order can't move a bit,
     and the normalized vector re-quantizes to 10⁻⁹ at each iteration
@@ -2303,7 +2170,7 @@ def q_emb_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sign convention: v₀ = 1/√d (all-positive) fixes the eigenvector's
     sign deterministically. Output: (pos, eigvec_val, eigenvalue≈‖Cv‖
     at the last round, the Rayleigh estimate for a unit v)."""
-    v, nrm = _power_iterate(spark, sf_dir)
+    (v,), (nrm,) = _power_iteration(_build_cov(spark, sf_dir), 1)
     out = spark.createDataFrame(
         [(int(p), float(v[p]), float(nrm)) for p in range(len(v))],
         "pos int, eigvec_val double, nrm double",
@@ -2313,153 +2180,92 @@ def q_emb_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _power_iterate(spark: SparkSession, sf_dir: str):
-    """Shared power-iteration core: one-pass partial-Gram covariance
-    (distributed, corpus-sized), then _PI_ITERS quantized
-    matvec+renormalize rounds ON THE DRIVER (d-bounded numpy). Returns
-    the final unit vector ``v`` as a numpy float64 array plus the
-    scalar ``nrm`` (λ₁ estimate). Shared by q_emb_top_eigvec
-    (readout), q_emb_remove_top_pc[_fast] (per-vector projection
-    removal) and q_emb_pca2 (deflation) so the consumers can never
-    iterate differently.
-
-    r15 optimization (guide §1.2 step 1 — fix the distributed
-    algorithm): the iteration state is d-bounded (a d-row vector and
-    the d×d matrix), yet the previous formulation ran every round as a
-    distributed join + two aggregates + an eager localCheckpoint —
-    6 scheduled Spark jobs of microseconds of arithmetic each, pure
-    scheduling overhead at ANY corpus size (the corpus only enters the
-    one-pass Gram build). Spark MLlib's own RowMatrix does exactly
-    this split (computeGramianMatrix distributed → local breeze
-    eigensolve on the driver), which is the public-precedent shape.
-    The numpy rounds reproduce the quantized arithmetic bit-for-bit
-    (see _pi_rounds), so every consumer's oracle hash is unchanged —
-    verified against the unchanged DuckDB mirrors."""
-    C = _build_cov(spark, sf_dir)
-    return _pi_rounds(C)
-
-
 def _build_cov(spark: SparkSession, sf_dir: str):
-    """The one-pass partial-Gram covariance build, collected to the
-    driver as a dense symmetric d×d numpy float64 matrix. Corpus
-    contact: ONE mapInPandas pass; the driver transfer is d(d+1)/2
-    rows — 2 080 at d=64, ~8 MB even at d=4096 — an index-build
-    constant in the q_emb_remove_top_pc_fast v₁-pull / _ivf_assign
-    centroid-pull tradition, never corpus-sized. Every cell value is
-    computed AND rounded by Spark (the same rz(…, 6) expression as
-    before) prior to the collect, so the matrix entries are
-    bit-identical to the ones the distributed r14 formulation
-    iterated on, and to the DuckDB oracle's ``cov`` CTE."""
+    """q_emb_covariance's cells collected to the driver as the dense
+    symmetric d×d numpy float64 matrix. The transfer is d(d+1)/2 rows
+    (2,080 at d=64), never corpus-sized, and every entry is the value
+    Spark computed and rounded, so it equals the oracle's ``cov`` CTE
+    bit for bit."""
     import numpy as np
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.expr("transform(embedding, x -> cast(x as double))").alias("e")
-    )
-    partials = e.mapInPandas(
-        _gram_partials,
-        schema=(
-            "i int, j int, sxy_part long, sx_i_part long, "
-            "sx_j_part long, n_part long"
-        ),
-    )
-    agg = partials.groupBy("i", "j").agg(
-        F.sum("sxy_part").alias("sxy"),
-        F.sum("sx_i_part").alias("sx_i"),
-        F.sum("sx_j_part").alias("sx_j"),
-        F.sum("n_part").alias("n"),
-    )
-    sc = float(_COV_SCALE)
-    cval = rz(
-        (F.col("sxy").cast("double") / sc) / F.col("n")
-        - (F.col("sx_i").cast("double") / sc / F.col("n"))
-        * (F.col("sx_j").cast("double") / sc / F.col("n")),
-        6,
-    )
-    rows = agg.select("i", "j", cval.alias("c")).collect()
+    rows = q_emb_covariance(spark, sf_dir).select("i", "j", "cov").collect()
     if not rows:
         raise ValueError("covariance build: empty embeddings corpus")
     d = max(r["i"] for r in rows) + 1
     C = np.zeros((d, d), dtype=np.float64)
     for r in rows:
-        C[r["i"], r["j"]] = r["c"]
-        C[r["j"], r["i"]] = r["c"]
+        C[r["i"], r["j"]] = r["cov"]
+        C[r["j"], r["i"]] = r["cov"]
     return C
 
 
-def _v0(d: int):
-    """The deterministic all-positive unit start vector v₀ = 1/√d —
-    the identical Python expression the r14 frame version embedded via
-    F.lit(1.0 / (d ** 0.5))."""
+def _qsum_np(x, scale: int, axis=None):
+    """Σ floor(x·scale + 0.5) as an exact int64 sum, divided by scale.
+    Integer terms make the sum independent of summation order, which is
+    how numpy here, Spark's folds and DuckDB's SUM agree bit for bit;
+    ``x`` holds the already-multiplied operands (the IEEE product chain
+    the oracles evaluate, left to right)."""
     import numpy as np
 
-    return np.full(d, 1.0 / (d ** 0.5), dtype=np.float64)
+    return (
+        np.floor(x * scale + 0.5).astype(np.int64).sum(axis=axis).astype(np.float64)
+        / scale
+    )
 
 
-def _pi_rounds(C, iters: int | None = None):
-    """``iters`` quantized matvec+renormalize rounds over a dense d×d
-    numpy matrix from v₀ — the exact loop body q_emb_top_eigvec
-    verified, now evaluated on the driver (r15; d-bounded work needs
-    no cluster). Arithmetic is REPRODUCED OPERATION-FOR-OPERATION from
-    the r14 distributed plan, so the result is bit-identical:
+def _power_iteration(C, k: int):
+    """Block power iteration on the driver over a dense d×d numpy
+    matrix: ``k`` columns iterate jointly for ``_PI_ITERS`` rounds
+    (read at call time, so the mutation pin binds). Returns ``(cols,
+    norms)``: the k unit eigvec arrays in pos order and each column's
+    norm in the last round (λ estimates; norms[0] is λ₁).
 
-    - matvec term: floor((c·val)·10¹² + 0.5) — the identical
-      left-associated IEEE product chain; int64 term values (≤ ~10¹²
-      per term, d-term sums ≪ 2⁶³) sum EXACTLY, so neither numpy's
-      batching nor Spark's partition order can move a bit;
-    - norm: sqrt(Σ floor((w·w)·10¹² + 0.5) / 10¹²) — math.sqrt is the
-      same correctly-rounded IEEE sqrt as Spark's Math.sqrt and
-      DuckDB's sqrt;
-    - renormalize: floor((w/nrm)·10⁹ + 0.5)/10⁹ — one identical IEEE
-      division/multiply chain per component.
-
-    ``iters`` resolves the module-level _PI_ITERS at CALL time (not a
-    def-time default) so the oracle-sensitivity mutation pin still
-    binds the constant."""
+    Each round, per column c in ascending order: w = C·v_c with
+    per-term quantization (``_qsum_np`` at 10¹²); Gram-Schmidt against
+    the columns already finished this round (quantized dot, one IEEE
+    multiply-subtract per component); norm = sqrt(Σ w² quantized);
+    v_c = floor(w/norm·10⁹ + 0.5)/10⁹. The generated oracles mirror
+    this CTE for CTE, so both engines iterate on identical vectors.
+    Column 0 never has a projection subtracted, so k=1 is the plain
+    power iteration and column 0 of any block equals it bit for bit.
+    Start block: v₀ = 1/√d, then pos ≡ c (mod k) indicators. A column
+    whose norm collapses to 0 raises instead of propagating NaN. Cost:
+    k·_PI_ITERS d² matvecs on the driver, no Spark job."""
     import numpy as np
 
-    if iters is None:
-        iters = _PI_ITERS
-    v = _v0(C.shape[0])
-    nrm = None
-    for _ in range(iters):
-        w = (
-            np.floor(C * v[None, :] * _PI_SCALE + 0.5)
-            .astype(np.int64)
-            .sum(axis=1)
-            .astype(np.float64)
-            / _PI_SCALE
-        )
-        nrm = math.sqrt(
-            float(np.floor(w * w * _PI_SCALE + 0.5).astype(np.int64).sum())
-            / _PI_SCALE
-        )
-        v = np.floor(w / nrm * _COV_SCALE + 0.5) / _COV_SCALE
-    return v, nrm
+    d = C.shape[0]
+    cols = [np.full(d, 1.0 / math.sqrt(d), dtype=np.float64)]
+    cols += [(np.arange(d) % k == c).astype(np.float64) for c in range(1, k)]
+    norms = [None] * k
+    for _ in range(_PI_ITERS):
+        done = []
+        for c in range(k):
+            w = _qsum_np(C * cols[c][None, :], _PI_SCALE, axis=1)
+            for vb in done:
+                w = w - _qsum_np(w * vb, _PI_SCALE) * vb
+            norms[c] = math.sqrt(_qsum_np(w * w, _PI_SCALE))
+            if not norms[c] > 0.0:
+                raise ValueError(
+                    f"power iteration column {c} collapsed (norm 0) — "
+                    "block columns are no longer independent"
+                )
+            done.append(np.floor(w / norms[c] * _COV_SCALE + 0.5) / _COV_SCALE)
+        cols = done
+    return cols, norms
 
 
 def _pca_project_rows(spark: SparkSession, sf_dir: str, cols) -> DataFrame:
     """Per-vector quantized projections onto ``cols`` (driver-side numpy
-    eigvec arrays), vectorized in ONE Arrow-batched corpus pass.
-
-    r16 (guide §4.2 — hand whole batches to vectorized native code):
-    the r15 shape folded each projection in-row via zip_with/aggregate
-    higher-order functions, which Spark evaluates INTERPRETED (no
-    whole-stage codegen for HOF lambdas) at a measured ~5 µs per
-    element-eval — 1.2–2.8 s per run for k=4 at sf0.1 and linear in
-    corpus×k×d at scale. The numpy leg computes the IDENTICAL
-    arithmetic per batch: floor((x·v)·10¹² + 0.5) per term — the same
-    left-associated IEEE product chain — summed as int64 (EXACT, so
-    numpy's batching cannot move a bit vs the HOF fold or DuckDB's
-    mirror), then one int64→double cast and one division by 10¹². The
-    eigvecs ship in the UDF closure exactly like q_emb_remove_top_pc_
-    fast's v₁ (a constant index artifact). Rounding (rz) stays in
-    Spark expressions on the returned doubles, so the output surface
-    is unchanged. Oracle-verified hash-identical at sf0.001/0.01/0.1."""
+    eigvec arrays) as ``(vec_id, pc1..pck)``, in ONE Arrow-batched
+    corpus pass. Each projection is ``_qsum_np`` of the x·v terms at
+    10¹², the oracle's per-term int64 sum, so batching cannot move a
+    bit. numpy on whole batches replaces interpreted higher-order
+    lambdas (~5 µs per element). The eigvecs ship in the UDF closure
+    (a constant index artifact); callers round with rz in Spark."""
     import numpy as np
 
     V = [np.asarray(c, dtype=np.float64) for c in cols]
     k = len(V)
-    sc = float(_PI_SCALE)
 
     def leg(batches):
         import pandas as pd
@@ -2472,13 +2278,7 @@ def _pca_project_rows(spark: SparkSession, sf_dir: str, cols) -> DataFrame:
             )
             out = {"vec_id": pdf["vec_id"]}
             for c in range(k):
-                out[f"pc{c + 1}"] = (
-                    np.floor(E * V[c][None, :] * sc + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                    .astype(np.float64)
-                    / sc
-                )
+                out[f"pc{c + 1}"] = _qsum_np(E * V[c][None, :], _PI_SCALE, axis=1)
             yield pd.DataFrame(out)
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2489,7 +2289,7 @@ def _pca_project_rows(spark: SparkSession, sf_dir: str, cols) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Hard-negative mining (r10): the training-data op that turns a corpus
+# Hard-negative mining: the training-data op that turns a corpus
 # + labels into contrastive-learning negatives — for each probe, the
 # top-k most-similar vectors with a DIFFERENT label (similar enough to
 # confuse the model, labeled differently: the standard retrieval/
@@ -2526,12 +2326,7 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes the join predicate); rank_pos ties break on negative_id on
     both engines."""
     v = _vecs(spark, sf_dir)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("label").alias("probe_label"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
+    p = _probes(v, F.col("label").alias("probe_label"))
     w = Window.partitionBy("probe_id").orderBy(
         F.col("cos_raw").desc(), F.col("negative_id").asc()
     )
@@ -2563,7 +2358,7 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# MMR diversified retrieval (r10): Maximal Marginal Relevance
+# MMR diversified retrieval: Maximal Marginal Relevance
 # (Carbonell & Goldstein 1998) — the standard diversification re-rank:
 # greedily pick the candidate maximizing λ·rel(p,c) − (1−λ)·max
 # similarity to the already-selected set. Deployed wherever raw top-k
@@ -2640,16 +2435,11 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast throughout, no corpus-sized shuffle after the pool."""
     lam = _MMR_LAMBDA
     v = _vecs(spark, sf_dir)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
     wrk = Window.partitionBy("probe_id").orderBy(
         F.col("cos_pc").desc(), F.col("cid").asc()
     )
     pool = ckpt(
-        F.broadcast(p)
+        F.broadcast(_probes(v))
         .join(v, F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
@@ -2728,7 +2518,7 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q_emb_whitening — mean-centering + renormalization (r11): the
+# q_emb_whitening — mean-centering + renormalization: the
 # standard anisotropy mitigation ("all-but-the-mean") applied
 # corpus-wide, verified per vector.
 # --------------------------------------------------------------------------
@@ -2823,10 +2613,8 @@ def q_emb_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     centered component sum, first component — computes INSIDE the
     vector's own row with higher-order functions (zip_with/aggregate,
     the engine's cosine idiom), so no row ever leaves its input
-    partition and no repartition round-trip exists (r11 shipped both
-    a corpus repartition and a posexplode→groupBy(vec_id) re-shuffle
-    here; the r11 judge costed them at two corpus-sized wires and
-    this shape removes both — plan pinned in tests/test_plans.py).
+    partition and no repartition round-trip exists (plan pinned in
+    tests/test_plans.py).
     Determinism: the mean is an exact integer ratio (identical double
     both engines); centered values are then single identical IEEE
     subtractions; every cross-term sum quantizes per-term to int64
@@ -2929,13 +2717,9 @@ def q_sim_topk_whitened(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerances are q_sim_topk's (last-ulp norm differences sit ~9
     orders below the ~1e-3 gaps that decide ranks at 4dp rounding)."""
     v = _vecs(spark, sf_dir)
-    # r15: the whitened frame feeds both join sides, and each branch
-    # re-ran the corpus-wide mean aggregate under its own broadcast
-    # (0 ReusedExchange in the before-plan — the branches' projections
-    # differ). The one-row mean materializes once; centering itself
-    # (one subtract per component over the scan) stays recomputed per
-    # side — corpus-float materialization is exactly what this family
-    # avoids.
+    # the whitened frame feeds both join sides with different
+    # projections, so without the checkpoint each side would re-run the
+    # corpus-wide mean; centering itself stays recomputed per side
     mu = ckpt(_mu_row(v))
     wv = (
         v.crossJoin(F.broadcast(mu))
@@ -2949,32 +2733,12 @@ def q_sim_topk_whitened(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("wn") > 0.0)
         .select("vec_id", "we", "wn")
     )
-    p = wv.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("we").alias("pe"),
-        F.col("wn").alias("pn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        F.broadcast(p)
-        .join(wv, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pe", "we", "pn", "wn").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id", "neighbor_id", rz("cos_raw", 4).alias("cosine"), "rank_pos"
-        )
-    )
+    p = _probes(wv, e="we", nrm="wn")
+    return _top_k(_scan(p, wv, _cosine_pre("pe", "we", "pn", "wn")), _K)
 
 
 # --------------------------------------------------------------------------
-# q_sim_ivf_pq (r12): IVF cells × PQ codes — the composed FAISS-IVFPQ
+# q_sim_ivf_pq: IVF cells × PQ codes — the composed FAISS-IVFPQ
 # layout, THE production memory/latency point for 10B+-vector ANN
 # (coarse cells bound the scan, 8-byte codes bound the resident index).
 # --------------------------------------------------------------------------
@@ -3009,68 +2773,6 @@ _IVF_PQ_ORACLE = f"""
     """
 
 
-def _ivf_pq_search(
-    v: DataFrame,
-    c: DataFrame,
-    assign: DataFrame,
-    npq: DataFrame,
-    nprobe: int = 1,
-) -> DataFrame:
-    """The IVFPQ query-time plan shared by q_sim_ivf_pq (in-plan index),
-    q_sim_ivf_pq_persisted (index read back from parquet) and
-    q_sim_ivf_pq_multiprobe (nprobe > 1): probe → its ``nprobe``
-    nearest cells via the broadcast centroid table, one equi-join on
-    cell id against the (assignment ⋈ PQ-reconstruction) members,
-    per-probe asymmetric-PQ top-k window. Corpus assignment is unique,
-    so the fan-out join can never emit a (probe, neighbor) pair twice
-    at any nprobe — the same disjointness argument as _ivf_search."""
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    pw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_c").desc(), F.col("cid").asc()
-    )
-    probe_cell = (
-        p.crossJoin(F.broadcast(c))
-        .withColumn("cos_c", _cent_affinity("pe"))
-        .withColumn("rn", F.row_number().over(pw))
-        .where(F.col("rn") <= nprobe)
-        .select("probe_id", "pe", "pn", "cid")
-    )
-    cell_members = assign.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("cid").alias("ncid")
-    ).join(
-        npq.select(F.col("vec_id").alias("neighbor_id"), "d", "nrm"),
-        "neighbor_id",
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        F.broadcast(probe_cell)
-        .join(
-            cell_members,
-            (F.col("ncid") == F.col("cid"))
-            & (F.col("neighbor_id") != F.col("probe_id")),
-        )
-        .select(
-            "probe_id",
-            "neighbor_id",
-            _cosine_pre("pe", "d", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _IVF_K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            rz("cos_raw", 4).alias("cosine"),
-            "rank_pos",
-        )
-    )
-
-
 @register("q_sim_ivf_pq", oracle=_IVF_PQ_ORACLE)
 def q_sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + PQ composed — the FAISS-IVFPQ production layout: corpus
@@ -3096,20 +2798,16 @@ def q_sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere; cosines round to 4dp through rz()."""
     v = _vecs(spark, sf_dir)
     c = _centroids(v)
-    assign = _ivf_assign(v, c)
-    npq = _pq_index(v)
-    return _ivf_pq_search(v, c, assign, npq)
+    return _ivf_top_k(_probes(v), c, _ivf_assign(v, c), _pq_index(v), "d")
 
 
 @register("q_sim_ivf_pq_persisted", oracle=_IVF_PQ_ORACLE)
 def q_sim_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ivf_pq's index build split out and PERSISTED — the
-    amortized-materialization deployment the in-plan variant cannot be
-    at scale (VERDICT r12 item 3: SCALE.md measured the in-plan ⌈√n⌉-K
-    build at ~45 min for 2M vectors; at 10B vectors the build MUST be
-    a one-time artifact, never per-query work). The build writes the
-    three production IVFPQ artifacts to parquet exactly as
-    q_sim_ivf_kscaled_persisted stages its inverted index:
+    """q_sim_ivf_pq's index build split out and PERSISTED, the
+    deployment shape: at 10B vectors the build must be a one-time
+    artifact, never per-query work (SCALE.md measured the in-plan
+    ⌈√n⌉-K build at ~45 min for 2M vectors). The build writes three
+    IVFPQ artifacts to parquet:
 
     - ``assign/``   — the coarse inverted index (vec_id, cid), written
       partitionBy(cid) so each probe's cell join prunes the read to
@@ -3120,9 +2818,9 @@ def q_sim_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
       artifact, 16 four-bit ids = 8 bytes/vector bit-packed — the 32×
       memory cut that lets a 10B-vector index stay cluster-resident.
 
-    The search leg reads all three back and runs the exact
-    q_sim_ivf_pq query plan against storage (decode = codes ⋈
-    broadcast codebook, then _ivf_pq_search) — so any query batch
+    The search leg reads all three back and runs q_sim_ivf_pq's query
+    plan against storage (decode = codes ⋈ broadcast codebook, then
+    ``_ivf_top_k``), so any query batch
     thereafter pays only the O(batch·n/K) probe, never the O(n·K)
     assignment or the O(n·M·K) encoding. Values are identical to
     q_sim_ivf_pq by construction (same centroids, same codebooks, same
@@ -3134,21 +2832,12 @@ def q_sim_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_index_build(spark: SparkSession, sf_dir: str) -> str:
     """The IVFPQ index BUILD leg (amortized at deployment; bench.py
-    times it separately so the amortization claim is a standing
-    number): coarse-assign + PQ-encode the corpus once, write the
-    three artifacts. assign/ is written partitionBy(cid) — the
-    production layout: a probe's cell equi-join prunes to one cell's
-    files (VERDICT r13 item 6). Returns the per-call index path."""
+    times it separately): coarse-assign + PQ-encode the corpus once and
+    write the three artifacts, assign/ by ``_write_cells``. Returns the
+    per-call ``_ivf_index_path``."""
     v = _vecs(spark, sf_dir)
-    c = _centroids(v)
     path = _ivf_index_path(sf_dir)
-    (
-        _ivf_assign(v, c)
-        .repartition("cid")  # one file per cell — see _ivf_persisted_search
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{path}/assign")
-    )
+    _write_cells(_ivf_assign(v, _centroids(v)), f"{path}/assign")
     sub_cb, codes = _pq_parts(v)
     sub_cb.write.mode("overwrite").parquet(f"{path}/codebook")
     codes.write.mode("overwrite").parquet(f"{path}/codes")
@@ -3156,18 +2845,16 @@ def _ivfpq_index_build(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _ivfpq_query_leg(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
-    """The IVFPQ QUERY leg against the read-back artifacts (the cast
-    restores the partition column's join-key type)."""
+    """The IVFPQ QUERY leg against ``_ivfpq_index_build``'s artifacts:
+    ``_ivf_top_k`` over the read-back assignment and the decoded
+    codes."""
     v = _vecs(spark, sf_dir)
-    c = _centroids(v)
-    assign = spark.read.parquet(f"{path}/assign").select(
-        "vec_id", F.col("cid").cast("bigint").alias("cid")
-    )
+    assign = _read_cells(spark, f"{path}/assign", "vec_id")
     npq = _pq_decode(
         spark.read.parquet(f"{path}/codes"),
         spark.read.parquet(f"{path}/codebook"),
     )
-    return _ivf_pq_search(v, c, assign, npq)
+    return _ivf_top_k(_probes(v), _centroids(v), assign, npq, "d")
 
 
 @register(
@@ -3223,12 +2910,11 @@ def q_sim_ivf_pq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vecs(spark, sf_dir)
     c = _centroids(v)
     assign = _ivf_assign(v, c)
-    npq = _pq_index(v)
-    return _ivf_pq_search(v, c, assign, npq, nprobe=_NPROBE)
+    return _ivf_top_k(_probes(v), c, assign, _pq_index(v), "d", _NPROBE)
 
 
 # --------------------------------------------------------------------------
-# q_emb_remove_top_pc (r12): "all-but-the-top" — remove the dominant
+# q_emb_remove_top_pc: "all-but-the-top" — remove the dominant
 # principal direction from every embedding (Mu & Viswanath 2018), the
 # step AFTER mean-centering (q_emb_whitening) in the standard embedding
 # post-processing chain. Composes the verified power-iteration eigvec
@@ -3239,20 +2925,18 @@ def q_sim_ivf_pq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_emb_remove_top_pc", oracle=_remove_pc_oracle())
 def q_emb_remove_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant-direction removal per vector: e′ = e − (e·v₁)v₁ with v₁
-    the verified top eigenvector (``_power_iterate``, the exact frame
-    q_emb_top_eigvec reads out). Output pins the transform per vector:
+    the top eigenvector q_emb_top_eigvec reads out (``_power_iteration``
+    at k=1). Output pins the transform per vector:
     the projection coefficient e·v₁ and the norm before/after removal
     (‖e′‖² = ‖e‖² − proj² up to quantization — the anisotropy energy
     the dominant direction was carrying).
 
     Scale shape (100 TB): the corpus is touched exactly twice — once
     by the one-pass partial-Gram build (mapInPandas partials, d²-row
-    shuffle) and once by the per-vector transform, which computes
-    INSIDE each row via zip_with/aggregate over v₁ broadcast as ONE
-    d-element array row (the q_emb_whitening broadcast-mean
-    discipline; no vec_id shuffle, no repartition). The iteration
-    itself is d-bounded, corpus-free, and runs on the driver (r15 —
-    see _power_iterate).
+    shuffle) and once by the per-vector transform, one Arrow-batched
+    numpy pass with v₁ in the closure (no vec_id shuffle, no
+    repartition). The iteration itself is d-bounded, corpus-free, and
+    runs on the driver.
 
     Determinism: v₁ is bit-identical across engines (the power
     iteration quantizes every reduction per-term to int64 and
@@ -3264,25 +2948,12 @@ def q_emb_remove_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pc1_proj can round to a tiny negative → rz()."""
     import numpy as np
 
-    v_eig, _ = _power_iterate(spark, sf_dir)
+    (v1,), _ = _power_iteration(_build_cov(spark, sf_dir), 1)
 
-    # r16 (guide §4.2): the r15 projection folded proj/rx/nb/na in-row
-    # via zip_with/aggregate HOFs — interpreted lambda evaluation, a
-    # measured ~2.4 s per run at sf0.1 and linear in corpus×d at scale.
-    # The numpy leg below computes the IDENTICAL arithmetic per Arrow
-    # batch: proj and both norms are exact int64 sums of the same
-    # floor((·)·scale + 0.5) terms (order-independent, so batching
-    # cannot move a bit); each residual component x − proj·w is the
-    # same single IEEE multiply+subtract on bit-identical doubles;
-    # np.sqrt and Spark's Math.sqrt are the same correctly-rounded
-    # IEEE sqrt. v₁ ships in the closure exactly like the _fast twin's.
-    # Final rounding/filtering stays in Spark expressions, so the
-    # output surface (and the unchanged DuckDB oracle's hash) is
-    # identical — verified at sf0.001/0.01/0.1.
-    v1 = np.asarray(v_eig, dtype=np.float64)
-    pis = float(_PI_SCALE)
-    wsq = float(_WHITEN_SQ)
-
+    # one Arrow-batched numpy pass: proj and both norms are exact int64
+    # sums (_qsum_np), each residual component x − proj·v is one IEEE
+    # multiply-subtract, np.sqrt is the correctly rounded IEEE sqrt;
+    # rounding and the na > 0 filter stay Spark expressions.
     def _leg(batches):
         import pandas as pd
 
@@ -3292,28 +2963,10 @@ def q_emb_remove_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             E = np.asarray(
                 [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
             )
-            proj = (
-                np.floor(E * v1[None, :] * pis + 0.5)
-                .astype(np.int64)
-                .sum(axis=1)
-                .astype(np.float64)
-                / pis
-            )
+            proj = _qsum_np(E * v1[None, :], _PI_SCALE, axis=1)
             R = E - proj[:, None] * v1[None, :]
-            nb = np.sqrt(
-                np.floor(E * E * wsq + 0.5)
-                .astype(np.int64)
-                .sum(axis=1)
-                .astype(np.float64)
-                / wsq
-            )
-            na = np.sqrt(
-                np.floor(R * R * wsq + 0.5)
-                .astype(np.int64)
-                .sum(axis=1)
-                .astype(np.float64)
-                / wsq
-            )
+            nb = np.sqrt(_qsum_np(E * E, _WHITEN_SQ, axis=1))
+            na = np.sqrt(_qsum_np(R * R, _WHITEN_SQ, axis=1))
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "proj": proj, "nb": nb, "na": na}
             )
@@ -3332,28 +2985,26 @@ def q_emb_remove_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_emb_remove_top_pc_fast")  # no oracle BY DESIGN: see docstring
 def q_emb_remove_top_pc_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION projection leg q_emb_remove_top_pc's docstring
-    documents, landed as a benched twin (VERDICT r12 item 7): same v₁
-    from the verified power iteration, but the per-vector transform
+    """The production projection leg of q_emb_remove_top_pc, as a
+    benched twin: same v₁ from the power iteration, but the per-vector transform
     runs as one Arrow-batched mapInPandas doing plain float64 BLAS
     (E·v₁, rank-1 residual, row norms) — no per-term int64
     quantization, which exists ONLY to make the cross-engine hash
     deterministic, never for correctness. Dropping it removes the
     determinism-quantization constant from the corpus-sized leg (the
-    α₁₀₀ ≈ 0.79 row's linear term); the measured delta is recorded in
-    BASELINE.md §r13.
+    α₁₀₀ ≈ 0.79 row's linear term; BASELINE.md has the measured delta).
 
     Deliberately registered WITHOUT a DuckDB oracle: unquantized
     float reductions are partition-order dependent in their last
     ulps, so no SQL mirror can hash-match — the driver records the
     rows-only check, and the value-level contract is pinned by a
     pytest tolerance cross-check against the exact twin (every field
-    within 2e-6). v₁ is the driver-side numpy eigenvector (r15 —
-    _power_iterate) and ships to executors in the UDF closure, exactly
-    how a production job would broadcast a constant index artifact."""
+    within 2e-6). v₁ is the driver-side numpy eigenvector and ships to
+    executors in the UDF closure, as a production job would broadcast
+    a constant index artifact."""
     import numpy as np
 
-    v1, _ = _power_iterate(spark, sf_dir)  # numpy float64, pos order
+    (v1,), _ = _power_iteration(_build_cov(spark, sf_dir), 1)
 
     def _leg(batches):
         import pandas as pd
@@ -3389,7 +3040,7 @@ def q_emb_remove_top_pc_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q_emb_pca2 (r12): two-component PCA projection via DEFLATION — the
+# q_emb_pca2: two-component PCA projection via DEFLATION — the
 # 2-D corpus map (cluster plots, drift dashboards, outlier triage)
 # every embedding-health pipeline ends at. Composes the verified power
 # iteration with a rank-1 deflation and a second, identical iteration.
@@ -3451,35 +3102,28 @@ def q_emb_pca2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): the corpus is touched exactly twice — the
     one-pass partial-Gram build (shared, d²-bounded shuffle) and the
-    per-vector projection, which folds in-row against BOTH eigvecs
-    broadcast as one-row arrays (the q_emb_remove_top_pc discipline —
-    no vec_id shuffle, no repartition). The deflation itself is a
-    d²-row broadcast-scale join; both iteration chains are
-    corpus-free. Adding components is linear in this d²-bounded work
-    (deflate again), never in corpus passes.
+    per-vector projection (``_pca_project_rows``, one Arrow-batched
+    pass — no vec_id shuffle, no repartition). The deflation and both
+    iteration chains are d²-bounded driver work, corpus-free. Adding
+    components grows only this d²-bounded work (deflate again), never
+    the corpus passes.
 
     Determinism: λ₁, v₁ and every C entry are bit-identical
     cross-engine (the proven chain), so each deflated cell is ONE
     identical IEEE expression (c − λ·vᵢ·vⱼ, left-associated
     identically in both engines); chain 2 then re-quantizes per round
     exactly like chain 1 (shared generator on the oracle side, shared
-    ``_pi_rounds`` on the Spark side). Projections are exact int64
+    ``_power_iteration`` on the Spark side). Projections are exact int64
     sums of floor(x·v·10¹²) terms; rounded through rz() (either
     coordinate can be a tiny negative)."""
     import numpy as np
 
     C = _build_cov(spark, sf_dir)
-    v1, nrm1 = _pi_rounds(C)
+    (v1,), (nrm1,) = _power_iteration(C, 1)
     # rank-1 deflation, cell-wise c − ((nrm·vᵢ)·vⱼ): np.outer(nrm1·v1, v1)
-    # is exactly that left-associated IEEE product chain per cell —
-    # the identical expression the r14 frame plan (and the oracle's
-    # cov2 CTE) evaluates on bit-identical operands.
-    C2 = C - np.outer(nrm1 * v1, v1)
-    v2, _ = _pi_rounds(C2)
-    # r16: the two quantized projections run vectorized in one Arrow
-    # pass (_pca_project_rows — arithmetic identical to the previous
-    # in-row _qdot_expr folds, which interpreted-HOF-evaluate at ~5 µs
-    # per element); rz stays a Spark expression on the exact doubles.
+    # is that left-associated IEEE product chain per cell, the oracle's
+    # cov2 expression on bit-identical operands
+    (v2,), _ = _power_iteration(C - np.outer(nrm1 * v1, v1), 1)
     return _pca_project_rows(spark, sf_dir, [v1, v2]).select(
         "vec_id",
         rz("pc1", 6).alias("pc1"),
@@ -3488,10 +3132,9 @@ def q_emb_pca2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q_emb_pca_k (r13): k-component PCA via BLOCK power iteration — one
-# joint matvec per round for ALL k columns + per-round Gram-Schmidt,
-# so k components cost ~one chain's scheduling rounds instead of
-# pca2's k serial deflation chains (VERDICT r12 item 4).
+# q_emb_pca_k: k-component PCA via BLOCK power iteration — one joint
+# matvec per round for ALL k columns + per-round Gram-Schmidt, instead
+# of pca2's k serial deflation chains.
 # --------------------------------------------------------------------------
 
 _PCA_K = 4
@@ -3591,109 +3234,32 @@ def _pca_k_oracle() -> str:
     )
 
 
-def _block_pi_cols(C, k: int | None = None, iters: int | None = None):
-    """BLOCK power iteration over a dense d×d numpy matrix, iterating
-    ``k`` columns JOINTLY — per round one matvec for the whole block,
-    then Gram-Schmidt in ascending column order (quantized dots,
-    single-IEEE subtractions, quantized norms — _pi_rounds' exact
-    discipline). Returns k numpy float64 eigvec arrays (pos order).
-
-    r15: evaluated on the DRIVER (guide §1.2 step 1 — the state is a
-    d·k block and the matrix is the d²-bounded collected covariance;
-    the r14 distributed form paid one scheduled Spark job per round
-    for microseconds of arithmetic). The arithmetic is byte-copied
-    from the r14 `_gs_rows` mapInPandas body (which already ran these
-    exact numpy expressions, just inside one executor task), so every
-    emitted block is bit-identical and the generated oracle's
-    CTE-for-CTE mirror is untouched:
-
-    - matvec term: floor((c·val)·10¹² + 0.5), int64-exact sums;
-    - GS dot: floor((w·v_b)·10¹² + 0.5) int64 sums / 10¹²; update
-      ``w − dot·v_b`` in ascending b order;
-    - norm via ``(Σ floor((w·w)·10¹²+0.5)/10¹²) ** 0.5`` (the
-      `_gs_rows` expression, oracle-verified); collapsed columns
-      still fail loudly (ADVICE r13);
-    - renormalize floor((w/nrm)·10⁹ + 0.5)/10⁹.
-
-    Column 0 never has projections subtracted, so its rounds are
-    arithmetic-identical to _pi_rounds from the same v₀ — pinning
-    pc1 ≡ q_emb_pca2.pc1 bit-for-bit. Start block: v₀ = 1/√d in
-    column 0 plus unnormalized pos-residue-class indicators (pos ≡ c
-    mod k) — deterministic, linearly independent, normalized away by
-    the first round. ``k``/``iters`` resolve module globals at CALL
-    time (not def-time defaults) so mutation pins still bind."""
-    import numpy as np
-
-    if k is None:
-        k = _PCA_K
-    if iters is None:
-        iters = _PI_ITERS
-    d = C.shape[0]
-    cols = [_v0(d)]
-    for c in range(1, k):
-        cols.append((np.arange(d) % k == c).astype(np.float64))
-    for _ in range(iters):
-        finals: dict[int, object] = {}
-        for c in range(k):
-            w = (
-                np.floor(C * cols[c][None, :] * _PI_SCALE + 0.5)
-                .astype(np.int64)
-                .sum(axis=1)
-                .astype(np.float64)
-                / _PI_SCALE
-            )
-            for b in range(c):
-                vb = finals[b]
-                dot = (
-                    float(
-                        np.floor(w * vb * _PI_SCALE + 0.5)
-                        .astype(np.int64)
-                        .sum()
-                    )
-                    / _PI_SCALE
-                )
-                w = w - dot * vb
-            nrm = (
-                float(
-                    np.floor(w * w * _PI_SCALE + 0.5).astype(np.int64).sum()
-                )
-                / _PI_SCALE
-            ) ** 0.5
-            if not nrm > 0.0:
-                # a collapsed GS column would otherwise normalize to
-                # NaN/Inf that propagates into the block and surfaces
-                # only as an opaque oracle hash mismatch (ADVICE r13)
-                # — fail loudly at the round that did it.
-                raise ValueError(
-                    f"Gram-Schmidt column {c} collapsed (norm 0) — "
-                    "block columns are no longer independent"
-                )
-            finals[c] = np.floor(w / nrm * _COV_SCALE + 0.5) / _COV_SCALE
-        cols = [finals[c] for c in range(k)]
-    return cols
+def _block_pi_cols(C, k: int | None = None):
+    """q_emb_pca_k's eigvecs: ``_power_iteration`` over ``k`` columns,
+    ``k`` defaulting to ``_PCA_K`` read at call time (so the mutation
+    pin binds). Returns the k arrays in pos order."""
+    return _power_iteration(C, _PCA_K if k is None else k)[0]
 
 
 @register("q_emb_pca_k", oracle=_pca_k_oracle())
 def q_emb_pca_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-component PCA coordinates per vector (k = _PCA_K = 4) via
-    BLOCK power iteration — the generalization VERDICT r12 item 4
-    asked for: one joint matvec for all k columns per round plus
-    per-round Gram-Schmidt orthonormalization — and since r15 the
-    whole d·k-bounded iteration runs on the driver (_block_pi_cols),
-    so k components cost zero scheduled rounds beyond the shared
-    one-pass Gram build. Output (vec_id, pc1..pc{{k}}): the k-D corpus
+    BLOCK power iteration: one joint matvec for all k columns per round
+    plus per-round Gram-Schmidt orthonormalization, the whole
+    d·k-bounded iteration on the driver (``_block_pi_cols``), so k
+    components cost no Spark job beyond the shared one-pass Gram
+    build. Output (vec_id, pc1..pc{{k}}): the k-D corpus
     map behind drift dashboards and cluster scatter.
 
     Scale shape (100 TB): the corpus is touched exactly twice — the
     shared one-pass partial-Gram build (d²-bounded shuffle) and the
-    per-vector projection, which folds in-row against all k eigvecs
-    broadcast as one-row arrays (q_emb_pca2's discipline — no vec_id
-    shuffle). Iteration state is a (d·k)-row block; every GS dot/norm
+    per-vector projection (``_pca_project_rows`` — no vec_id shuffle).
+    Iteration state is a (d·k)-row block; every GS dot/norm
     is a d-row reduction. Raising k grows only the d-bounded work.
 
     Determinism: the matvec/GS/normalize arithmetic is per-term
-    int64-quantized with per-round 10⁻⁹ re-quantization (the
-    _pi_rounds discipline), mirrored CTE-for-CTE by the generated
+    int64-quantized with per-round 10⁻⁹ re-quantization
+    (``_power_iteration``), mirrored CTE-for-CTE by the generated
     oracle, so both engines iterate on IDENTICAL blocks. Column 0
     never has projections subtracted — its rounds are byte-equivalent
     to the q_emb_top_eigvec chain, so pc1 here ≡ q_emb_pca2.pc1
@@ -3703,11 +3269,7 @@ def q_emb_pca_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance, not bit-exactly — the k=2 cross-check pins sign-aligned
     agreement. GS column order ascending; start block: v₀ plus pos ≡ c
     (mod k) indicator columns — deterministic and mirrored."""
-    C = _build_cov(spark, sf_dir)
-    cols = _block_pi_cols(C)
-    # r16: the k quantized projections run vectorized in one Arrow
-    # pass (_pca_project_rows — arithmetic identical to the previous
-    # in-row _qdot_expr folds); rz stays a Spark expression.
+    cols = _block_pi_cols(_build_cov(spark, sf_dir))
     return _pca_project_rows(spark, sf_dir, cols).select(
         "vec_id",
         *[rz(f"pc{c + 1}", 6).alias(f"pc{c + 1}") for c in range(len(cols))],
@@ -3715,7 +3277,7 @@ def q_emb_pca_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q_sim_ivf_pq_rerank (r12): IVFPQ + exact re-rank of the PQ top-R —
+# q_sim_ivf_pq_rerank: IVFPQ + exact re-rank of the PQ top-R —
 # the FAISS "refine" stage that closes the IVFPQ recall story (codes
 # select candidates cheaply; full-precision vectors decide the final k).
 # --------------------------------------------------------------------------
@@ -3780,40 +3342,12 @@ def q_sim_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sim_pq_rerank discipline; output rounds at 4dp through rz()."""
     v = _vecs(spark, sf_dir)
     c = _centroids(v)
-    assign = _ivf_assign(v, c)
-    npq = _pq_index(v)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    pw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_c").desc(), F.col("cid").asc()
-    )
-    probe_cell = (
-        p.crossJoin(F.broadcast(c))
-        .withColumn("cos_c", _cent_affinity("pe"))
-        .withColumn("rn", F.row_number().over(pw))
-        .where(F.col("rn") == 1)
-        .select("probe_id", "pe", "pn", "cid")
-    )
-    cell_members = assign.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("cid").alias("ncid")
-    ).join(
-        npq.select(F.col("vec_id").alias("neighbor_id"), "d", "nrm"),
-        "neighbor_id",
-    )
+    pairs = _cell_pairs(_probes(v), c, _ivf_assign(v, c), _pq_index(v), "d")
     aw = Window.partitionBy("probe_id").orderBy(
         F.col("cos_pq").desc(), F.col("neighbor_id").asc()
     )
     cand = (
-        F.broadcast(probe_cell)
-        .join(
-            cell_members,
-            (F.col("ncid") == F.col("cid"))
-            & (F.col("neighbor_id") != F.col("probe_id")),
-        )
-        .select(
+        pairs.select(
             "probe_id",
             "pe",
             "pn",
@@ -3824,30 +3358,7 @@ def q_sim_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rpq") <= _PQ_RERANK_R)
         .select("probe_id", "pe", "pn", "neighbor_id")
     )
-    nv = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(nv, "neighbor_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(rw))
-        .where(F.col("rank_pos") <= _IVF_K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            rz("cos_raw", 4).alias("cosine"),
-            "rank_pos",
-        )
-    )
+    return _top_k(_rescore(cand, v), _IVF_K)
 
 
 @register(
@@ -3902,31 +3413,21 @@ def q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a recall regression from ANY index change — centroid drift, an
     assignment bug, a probe-routing bug — lands in this op's hash."""
     v = _vecs(spark, sf_dir)
-    p = v.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        F.broadcast(p)
-        .join(v, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= _IVF_K)
-        .select("probe_id", "neighbor_id")
-    )
-    ivf = _ivf_search(spark, sf_dir, nprobe=1).select(
-        "probe_id", "neighbor_id", F.lit(1).alias("hit")
-    )
+    c = _centroids(v)
+    exact = _top_k(_scan(_probes(v), v), _IVF_K)
+    ivf = _ivf_top_k(_probes(v), c, _ivf_assign(v, c), v)
+    return _recall(exact, ivf)
+
+
+def _recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-probe recall of ``approx`` against ``exact`` (both top-k
+    frames): ``(probe_id, n_hit, n_exact, recall)``, recall = hits /
+    |exact| rounded to 4dp. Hit counts are exact integers, so only the
+    one rounded ratio is floating point."""
+    hit = approx.select("probe_id", "neighbor_id", F.lit(1).alias("hit"))
     return (
-        exact.join(ivf, ["probe_id", "neighbor_id"], "left")
+        exact.select("probe_id", "neighbor_id")
+        .join(hit, ["probe_id", "neighbor_id"], "left")
         .groupBy("probe_id")
         .agg(
             F.sum(F.coalesce(F.col("hit"), F.lit(0)))
@@ -4122,10 +3623,16 @@ def q_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking cannot drift; the rerank reuses the house raw-double
     cosine ranking with vec_id tie-break (accepted-ulp class, 4dp
     display rounding)."""
-    v = _vecs(spark, sf_dir)
+    n = _bq_sketch(_vecs(spark, sf_dir))
+    return _hamming_top_k(_sketch_pairs(n), "hamming")
+
+
+def _bq_sketch(v: DataFrame) -> DataFrame:
+    """``(vec_id, e, nrm, w0, w1)``: the 64 sign bits (x > 0) packed
+    into two 32-bit words. Powers of two are distinct, so the integer
+    sum is the bitwise OR and the words are exact on both engines."""
 
     def pack(lo: int) -> Column:
-        # distinct powers of two, so the integer sum IS the bitwise OR;
         # (x, i) -> i is the index within the 32-element slice
         return F.expr(
             f"aggregate(transform(slice(e, {lo}, 32), "
@@ -4133,19 +3640,30 @@ def q_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "0L, (a, b) -> a + b)"
         )
 
-    n = v.select("vec_id", "e", "nrm", pack(1).alias("w0"), pack(33).alias("w1"))
-    p = n.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-        F.col("w0").alias("pw0"),
-        F.col("w1").alias("pw1"),
+    return v.select(
+        "vec_id", "e", "nrm", pack(1).alias("w0"), pack(33).alias("w1")
     )
-    hw = Window.partitionBy("probe_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
+
+
+def _bq_probes(n: DataFrame) -> DataFrame:
+    """The probe batch of a ``_bq_sketch`` frame, words as pw0/pw1."""
+    return _probes(n, F.col("w0").alias("pw0"), F.col("w1").alias("pw1"))
+
+
+def _hamming() -> Column:
+    """Integer Hamming distance between a sketch and the probe's."""
+    return (
+        F.expr("bit_count(w0 ^ pw0) + bit_count(w1 ^ pw1)")
+        .cast("bigint")
+        .alias("hamming")
     )
-    cand = (
-        F.broadcast(p)
+
+
+def _sketch_pairs(n: DataFrame) -> DataFrame:
+    """Flat sketch candidates: every probe against every other sketch,
+    ``(probe_id, pe, pn, neighbor_id, ne, nn, hamming)``."""
+    return (
+        F.broadcast(_bq_probes(n))
         .join(n, F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
@@ -4154,33 +3672,31 @@ def q_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             F.col("e").alias("ne"),
             F.col("nrm").alias("nn"),
-            F.expr("bit_count(w0 ^ pw0) + bit_count(w1 ^ pw1)")
-            .cast("bigint")
-            .alias("hamming"),
+            _hamming(),
         )
-        .withColumn("hrank", F.row_number().over(hw))
+    )
+
+
+def _hamming_top_k(pairs: DataFrame, *carry) -> DataFrame:
+    """The binary-index search: keep each probe's ``_BQ_RERANK_R``
+    nearest candidates by Hamming distance (neighbor_id asc on ties),
+    rerank those by exact cosine, and cut at ``_K`` (``_top_k``).
+    ``pairs`` is ``(probe_id, pe, pn, neighbor_id, ne, nn, hamming)``.
+    Only R rows per probe pay the float cosine."""
+    hw = Window.partitionBy("probe_id").orderBy(
+        F.col("hamming").asc(), F.col("neighbor_id").asc()
+    )
+    scored = (
+        pairs.withColumn("hrank", F.row_number().over(hw))
         .where(F.col("hrank") <= _BQ_RERANK_R)
-    )
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.select(
-            "probe_id",
-            "neighbor_id",
-            "hamming",
-            _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(rw))
-        .where(F.col("rank_pos") <= _K)
         .select(
             "probe_id",
             "neighbor_id",
-            "hamming",
-            rz("cos_raw", 4).alias("cosine"),
-            "rank_pos",
+            *carry,
+            _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
         )
     )
+    return _top_k(scored, _K, *carry)
 
 
 #: Matryoshka-truncation audit geometry: rank with only the first
@@ -4269,53 +3785,10 @@ def q_emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("tn") > 0.0)
     )
-    p = t.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("te").alias("pte"),
-        F.col("nrm").alias("pn"),
-        F.col("tn").alias("ptn"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    cand = F.broadcast(p).join(t, F.col("vec_id") != F.col("probe_id"))
-    full_k = (
-        cand.select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= _K)
-        .select("probe_id", "neighbor_id")
-    )
-    trunc_k = (
-        cand.select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pte", "te", "ptn", "tn").alias("cos_raw"),
-        )
-        .withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= _K)
-        .select("probe_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    return (
-        full_k.join(trunc_k, ["probe_id", "neighbor_id"], "left")
-        .groupBy("probe_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_hit"),
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                / (F.lit(1.0) * F.count(F.lit(1))),
-                4,
-            ).alias("recall"),
-        )
-    )
-
+    p = _probes(t, F.col("te").alias("pte"), F.col("tn").alias("ptn"))
+    full_k = _top_k(_scan(p, t), _K)
+    trunc_k = _top_k(_scan(p, t, _cosine_pre("pte", "te", "ptn", "tn")), _K)
+    return _recall(full_k, trunc_k)
 
 
 @register(
@@ -4365,9 +3838,9 @@ def q_emb_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): the centroid build is one (label, pos)
     two-phase aggregate (shuffle carries |labels|·dim partial sums);
     the L-row model collapses to ONE sorted array row broadcast to the
-    corpus scan, and the argmax runs ENTIRELY IN-ROW (the r13
-    PQ-encode pattern: transform computes each centroid's cosine once
-    — the d2-double-evaluation lesson — then a fold keeps the best) —
+    corpus scan, and the argmax runs ENTIRELY IN-ROW (the PQ-encode
+    pattern: transform computes each centroid's cosine once, then a
+    fold keeps the best) —
     zero joins, zero windows, zero shuffles on the corpus side.
 
     Determinism: centroid components are the quantized exact means
@@ -4491,78 +3964,9 @@ def q_sim_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a one-off test measurement. Deliberately pays the exact
     all-pairs leg over the bounded probe batch (O(|probes|·n), the
     standing audit-cost rule)."""
-    v = _vecs(spark, sf_dir)
-
-    def pack(lo: int) -> Column:
-        return F.expr(
-            f"aggregate(transform(slice(e, {lo}, 32), "
-            "(x, i) -> IF(x > 0D, shiftleft(1L, i), 0L)), "
-            "0L, (a, b) -> a + b)"
-        )
-
-    n = v.select("vec_id", "e", "nrm", pack(1).alias("w0"), pack(33).alias("w1"))
-    p = n.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-        F.col("w0").alias("pw0"),
-        F.col("w1").alias("pw1"),
-    )
-    hw = Window.partitionBy("probe_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    joined = F.broadcast(p).join(n, F.col("vec_id") != F.col("probe_id"))
-    sketch_k = (
-        joined.select(
-            "probe_id",
-            "pe",
-            "pn",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("e").alias("ne"),
-            F.col("nrm").alias("nn"),
-            F.expr("bit_count(w0 ^ pw0) + bit_count(w1 ^ pw1)")
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .withColumn("hrank", F.row_number().over(hw))
-        .where(F.col("hrank") <= _BQ_RERANK_R)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(rw))
-        .where(F.col("rank_pos") <= _K)
-        .select("probe_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    exact_k = (
-        joined.select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(rw))
-        .where(F.col("rank_pos") <= _K)
-        .select("probe_id", "neighbor_id")
-    )
-    return (
-        exact_k.join(sketch_k, ["probe_id", "neighbor_id"], "left")
-        .groupBy("probe_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_hit"),
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                / (F.lit(1.0) * F.count(F.lit(1))),
-                4,
-            ).alias("recall"),
-        )
-    )
+    n = _bq_sketch(_vecs(spark, sf_dir))
+    exact_k = _top_k(_scan(_bq_probes(n), n), _K)
+    return _recall(exact_k, _hamming_top_k(_sketch_pairs(n)))
 
 
 #: pigeonhole bucket geometry for the BUCKETED sign-bit search: the 64
@@ -4641,7 +4045,7 @@ _BQ_BLOCK_MASK = (1 << _BQ_BLOCK_W) - 1
 )
 def q_sim_binary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed binary ANN — the pigeonhole-blocked SEARCH leg for the
-    sign-bit index (VERDICT r14 item 3): the 64-bit sketch splits into
+    sign-bit index: the 64-bit sketch splits into
     {_BQ_NBLOCKS} blocks of {_BQ_BLOCK_W} bits and candidate generation
     becomes an EQUI join on (block, value) — exactly the Hamming block
     decomposition proven in the SimHash dedup family
@@ -4677,16 +4081,7 @@ def q_sim_binary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers on both engines; ranking ties break on neighbor_id;
     the rerank reuses the house raw-double cosine with 4dp display
     rounding (accepted-ulp class)."""
-    v = _vecs(spark, sf_dir)
-
-    def pack(lo: int) -> Column:
-        return F.expr(
-            f"aggregate(transform(slice(e, {lo}, 32), "
-            "(x, i) -> IF(x > 0D, shiftleft(1L, i), 0L)), "
-            "0L, (a, b) -> a + b)"
-        )
-
-    n = v.select("vec_id", "e", "nrm", pack(1).alias("w0"), pack(33).alias("w1"))
+    n = _bq_sketch(_vecs(spark, sf_dir))
     # block geometry re-derived AT CALL TIME from _BQ_NBLOCKS (the
     # _EWMA_BETA rule): width and mask can never desynchronize from it.
     nb_blocks = int(_BQ_NBLOCKS)
@@ -4701,13 +4096,7 @@ def q_sim_binary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" & {mask}L"
         ).alias("bval"),
     )
-    p = n.where(_PROBE_FILTER).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("e").alias("pe"),
-        F.col("nrm").alias("pn"),
-        F.col("w0").alias("pw0"),
-        F.col("w1").alias("pw1"),
-    )
+    p = _bq_probes(n)
     probe_blocks = p.select("probe_id", "pw0", "pw1", blks).select(
         "probe_id",
         "blk",
@@ -4731,13 +4120,7 @@ def q_sim_binary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rebalance so verification keeps full parallelism (see simhash).
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    hw = Window.partitionBy("probe_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
+    pairs = (
         cand0.join(
             n.select(
                 F.col("vec_id").alias("neighbor_id"),
@@ -4749,35 +4132,9 @@ def q_sim_binary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
         )
         .join(F.broadcast(p), "probe_id")
-        .select(
-            "probe_id",
-            "pe",
-            "pn",
-            "neighbor_id",
-            "ne",
-            "nn",
-            F.expr("bit_count(w0 ^ pw0) + bit_count(w1 ^ pw1)")
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .withColumn("hrank", F.row_number().over(hw))
-        .where(F.col("hrank") <= _BQ_RERANK_R)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            "hamming",
-            _cosine_pre("pe", "ne", "pn", "nn").alias("cos_raw"),
-        )
-        .withColumn("rank_pos", F.row_number().over(rw))
-        .where(F.col("rank_pos") <= _K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            "hamming",
-            rz("cos_raw", 4).alias("cosine"),
-            "rank_pos",
-        )
+        .select("probe_id", "pe", "pn", "neighbor_id", "ne", "nn", _hamming())
     )
+    return _hamming_top_k(pairs, "hamming")
 
 
 #: the CDC-delta slice for incremental index maintenance: ~9% of the
@@ -4802,8 +4159,8 @@ _IDX_OLD_IMAGE = "concat(slice(e, 2, size(e) - 1), slice(e, 1, 1))"
 
 @register("q_sim_ivf_pq_cdc", oracle=_IVF_PQ_ORACLE)
 def q_sim_ivf_pq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL maintenance of the persisted IVFPQ index (VERDICT
-    r14 item 4) — the operation a standing 100 TB deployment runs
+    """INCREMENTAL maintenance of the persisted IVFPQ index — the
+    operation a standing 100 TB deployment runs
     daily: apply a CDC update batch to the partitioned index by
     touching only the delta and its cells, then prove the maintained
     index answers queries BIT-IDENTICALLY to a full rebuild (this op
@@ -4856,13 +4213,9 @@ def q_sim_ivf_pq_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _IDX_DELTA_FILTER guarantees — and whose violation the mutation
     # pin proves hash-red.
     #
-    # r15 (guide §1.2 step 1 — don't recompute what three legs share):
-    # the centroid table collects ONCE (it previously re-collected in
-    # every _ivf_assign call — base build + two delta assigns), the
-    # codebook builds ONCE (previously rebuilt inside the base build),
-    # and its one-row broadcast form is checkpointed so each encode leg
-    # reuses the materialized row instead of re-running the
-    # collect_list aggregate per action.
+    # the centroid table collects and the codebook builds ONCE for the
+    # base build and both delta legs; the one-row codebook is
+    # checkpointed so each encode leg reuses it.
     c = _centroids(old)
     cent_rows = _collect_centroids(c)
     sub_cb, cb_row = _pq_codebook(old)
@@ -4909,18 +4262,16 @@ def _ivfpq_cdc_base_build(
     layout (members/ partitionBy(cid) + codebook/). Amortized in
     production; split out so tests can snapshot the on-disk state
     between base build and delta apply. ``sub_cb``/``cb_row`` may be
-    passed in (r15) so the op body computes the codebook once for all
-    three legs; omitted, they build here (the test surface)."""
+    passed in so the op body computes the codebook once for all three
+    legs; omitted, they build here (the test surface)."""
     if sub_cb is None or cb_row is None:
         sub_cb, cb_row = _pq_codebook(old)
     path = _ivf_index_path(sf_dir)
-    (
-        _pq_encode(old.select("vec_id", "e"), cb_row)
-        .join(_ivf_assign(old, c), "vec_id")
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{path}/members")
+    _write_cells(
+        _pq_encode(old.select("vec_id", "e"), cb_row).join(
+            _ivf_assign(old, c), "vec_id"
+        ),
+        f"{path}/members",
     )
     sub_cb.write.mode("overwrite").parquet(f"{path}/codebook")
     return path
@@ -4937,11 +4288,9 @@ def _ivfpq_cdc_apply(
     the affected cell list so tests can pin the touched-partition
     set against the on-disk files."""
     # the CDC log: op='U' rows carrying before+after images.
-    # r15: the delta frame feeds four consumers (two assigns, the
-    # encode, the anti-join) and the new-assign feeds two actions
-    # (affected-cell collect + stage write) — materialize each once so
-    # neither the corpus filter nor a mapInPandas assign leg re-runs
-    # per action. All delta-sized.
+    # the delta frame feeds four consumers (two assigns, the encode,
+    # the anti-join) and the new-assign feeds two actions (affected-cell
+    # collect + stage write): materialize each once, delta-sized.
     delta = ckpt(
         v.where(_IDX_DELTA_FILTER).select(
             "vec_id",
@@ -4962,13 +4311,12 @@ def _ivfpq_cdc_apply(
         | {r["cid"] for r in d_new_assign.select("cid").distinct().collect()}
     )
 
-    members = spark.read.parquet(f"{path}/members")
-    survivors = members.where(
-        F.col("cid").cast("bigint").isin([int(x) for x in affected])
-    ).join(delta.select("vec_id"), "vec_id", "left_anti")
-    updated = survivors.select(
-        "vec_id", "m", "code_id", F.col("cid").cast("bigint").alias("cid")
-    ).unionByName(d_new_codes.join(d_new_assign, "vec_id"))
+    survivors = (
+        _read_cells(spark, f"{path}/members", "vec_id", "m", "code_id")
+        .where(F.col("cid").isin(affected))
+        .join(delta.select("vec_id"), "vec_id", "left_anti")
+    )
+    updated = survivors.unionByName(d_new_codes.join(d_new_assign, "vec_id"))
     # stage the delta-sized replacement content (Spark cannot overwrite
     # a currently-read path), then dynamic-overwrite ONLY those cells
     updated.repartition("cid").write.mode("overwrite").parquet(
@@ -4980,12 +4328,7 @@ def _ivfpq_cdc_apply(
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            staged.repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(f"{path}/members")
-        )
+        _write_cells(staged, f"{path}/members")
     finally:
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", prior_mode
@@ -5010,9 +4353,7 @@ def _ivfpq_cdc_query_leg(
 ) -> DataFrame:
     """QUERY leg against the maintained inverted-list-with-codes index:
     the exact q_sim_ivf_pq plan over the members/ read-back."""
-    mem = spark.read.parquet(f"{path}/members").select(
-        "vec_id", "m", "code_id", F.col("cid").cast("bigint").alias("cid")
-    )
+    mem = _read_cells(spark, f"{path}/members", "vec_id", "m", "code_id")
     # every vector owns exactly one cell and _PQ_M code rows, so the
     # m=0 slice IS the assignment table — no distinct shuffle needed
     assign = mem.where(F.col("m") == 0).select("vec_id", "cid")
@@ -5020,4 +4361,4 @@ def _ivfpq_cdc_query_leg(
         mem.select("vec_id", "m", "code_id"),
         spark.read.parquet(f"{path}/codebook"),
     )
-    return _ivf_pq_search(v, c, assign, npq)
+    return _ivf_top_k(_probes(v), c, assign, npq, "d")

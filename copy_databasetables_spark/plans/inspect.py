@@ -1,8 +1,7 @@
 """Plan-inspection helpers: the programmatic face of SCALE.md.
 
-Used by tests/test_plans.py and by hand when iterating on an operator —
-``explain_check(df)`` is the loop: run, read the final AQE plan, assert
-the properties that matter at 100 TB.
+Used by tools/dump_plans.py to read an operator's final AQE plan and
+count the properties that matter at 100 TB.
 """
 
 from __future__ import annotations
@@ -49,24 +48,3 @@ def plan_facts(df: DataFrame, execute: bool = True) -> PlanFacts:
         codegen_stages=p.count("*("),
     )
 
-
-def explain_check(
-    df: DataFrame,
-    *,
-    max_shuffles: int | None = None,
-    require_jvm_only: bool = False,
-    require_broadcast: bool = False,
-) -> PlanFacts:
-    """Assert scale-critical plan properties; returns the facts so
-    callers can assert more."""
-    facts = plan_facts(df)
-    if max_shuffles is not None and facts.shuffle_exchanges > max_shuffles:
-        raise AssertionError(
-            f"plan has {facts.shuffle_exchanges} shuffles (max {max_shuffles}):\n"
-            + final_plan(df, execute=False)
-        )
-    if require_jvm_only and not facts.jvm_only:
-        raise AssertionError("plan crosses to Python:\n" + final_plan(df, execute=False))
-    if require_broadcast and facts.broadcast_joins == 0:
-        raise AssertionError("expected a broadcast join:\n" + final_plan(df, execute=False))
-    return facts

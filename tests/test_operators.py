@@ -3182,12 +3182,12 @@ def test_pca_k_first_col_is_chain1_and_block_is_orthonormal(spark):
         _PCA_K,
         _block_pi_cols,
         _build_cov,
-        _pi_rounds,
+        _power_iteration,
     )
     from tests.conftest import SF_SMOKE
 
     C = _build_cov(spark, SF_SMOKE)
-    chain1, _ = _pi_rounds(C)
+    (chain1,), _ = _power_iteration(C, 1)
     cols = _block_pi_cols(C, k=2)
     # (a) bit-identical, not approximately (r15: both are driver-side
     # numpy arrays in pos order — exact elementwise equality)
@@ -4504,3 +4504,61 @@ def _run_ivfpq_cdc_file_pin(spark, SF_SMOKE):
         .collect()
     }
     assert maintained == rebuilt
+
+
+#: every key whose rows are (probe_id, neighbor_id, ..., cosine,
+#: rank_pos), with the similarity constant that bounds its rank
+_RANKED_KEYS = {
+    "q_sim_topk": "_K",
+    "q_sim_topk_blas": "_K",
+    "q_sim_quantized": "_K",
+    "q_sim_pq": "_K",
+    "q_sim_pq_rerank": "_K",
+    "q_sim_hybrid": "_K",
+    "q_sim_topk_whitened": "_K",
+    "q_sim_binary_hamming": "_K",
+    "q_sim_binary_bucketed": "_K",
+    "q_sim_ivf": "_IVF_K",
+    "q_sim_ivf_kscaled": "_IVF_K",
+    "q_sim_ivf_persisted": "_IVF_K",
+    "q_sim_ivf_kscaled_persisted": "_IVF_K",
+    "q_sim_ivf_multiprobe": "_IVF_K",
+    "q_sim_hybrid_ivf": "_IVF_K",
+    "q_sim_ivf_pq": "_IVF_K",
+    "q_sim_ivf_pq_persisted": "_IVF_K",
+    "q_sim_ivf_pq_multiprobe": "_IVF_K",
+    "q_sim_ivf_pq_rerank": "_IVF_K",
+    "q_sim_ivf_pq_cdc": "_IVF_K",
+}
+
+
+@pytest.mark.parametrize("key", sorted(_RANKED_KEYS))
+def test_ranking_contract(spark, key):
+    """The per-probe top-k cut every retrieval op ends in: rank_pos
+    runs 1..n with n ≤ the op's k, cosine never increases with rank,
+    a probe never returns itself, and no (probe, neighbor) pair
+    repeats."""
+    from collections import defaultdict
+
+    from copy_databasetables_spark.operators import all_queries, similarity
+    from tests.conftest import SF_SMOKE
+
+    k = getattr(similarity, _RANKED_KEYS[key])
+    rows = (
+        all_queries()[key](spark, SF_SMOKE)
+        .select("probe_id", "neighbor_id", "cosine", "rank_pos")
+        .collect()
+    )
+    assert rows
+    by_probe = defaultdict(list)
+    for r in rows:
+        by_probe[r["probe_id"]].append(r)
+    for probe, ranked in by_probe.items():
+        ranked.sort(key=lambda r: r["rank_pos"])
+        assert [r["rank_pos"] for r in ranked] == list(range(1, len(ranked) + 1))
+        assert len(ranked) <= k
+        cos = [r["cosine"] for r in ranked]
+        assert all(a >= b for a, b in zip(cos, cos[1:])), (probe, cos)
+        ids = [r["neighbor_id"] for r in ranked]
+        assert probe not in ids
+        assert len(set(ids)) == len(ids)

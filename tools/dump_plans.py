@@ -2,6 +2,7 @@
 bench headline query, with the scale-critical facts summarized.
 
     python tools/dump_plans.py          # writes PLANS.md at repo root
+    python tools/dump_plans.py --digest q_sim_topk q_sim_ivf   # plan hashes
 
 This is the artifact of the explain-and-iterate loop: broadcast choices,
 shuffle counts, partial aggregation, codegen spans, and Python-boundary
@@ -10,7 +11,10 @@ crossings are all visible and diffable commit to commit.
 
 from __future__ import annotations
 
+import argparse
+import hashlib
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -319,9 +323,37 @@ NOTES.update(
 )
 
 
+#: what varies between two builds of one plan, not the plan itself:
+#: lambda-variable suffixes, expression ids, per-call index directories
+#: (``_ivf_index_path``) and checkpoint RDD ids.
+_PLAN_NOISE = [
+    (re.compile(r"_\d+#\d+"), "_#"),
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"[0-9a-f]{12}_\d+_\d+"), "<index>"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+]
+
+
+def plan_digest(df) -> str:
+    """sha256 of ``df``'s optimized logical plan with _PLAN_NOISE masked:
+    equal digests mean the same plan, across processes and refactors."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for pat, rep in _PLAN_NOISE:
+        plan = pat.sub(rep, plan)
+    return hashlib.sha256(plan.encode()).hexdigest()
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--digest", nargs="+", metavar="KEY",
+                    help="print each key's plan digest instead of PLANS.md")
+    args = ap.parse_args()
     spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
     qs = operators.all_queries()
+    if args.digest:
+        for key in args.digest:
+            print(f"{plan_digest(qs[key](spark, SF_DIR))}  {key}", flush=True)
+        return
     out = [
         "# PLANS — executed physical plans of the bench headline queries",
         "",

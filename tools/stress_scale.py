@@ -268,26 +268,22 @@ def build_facts_blowup(spark, src_dir: str, out_dir: str, copies: int) -> None:
 
 def ivf_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
     """Measure the IVF SEARCH leg against a PREBUILT index at fixed
-    K=32 vs K=⌈√n⌉ (VERDICT r6 item 6). The assignment — the index
-    BUILD, O(n·K) — runs once per K, unmeasured, and is written to
-    parquet exactly as a production index build would persist it; the
-    timed leg is a FIXED 32-probe query batch (query size, not a
-    corpus fraction) probing its own cell: fetch probe cells from the
-    index, join cell members, score, top-k. Expected separation: cell
-    population is n/K, so per-batch search work is O(batch·n/32) at
-    fixed K (alpha→1 in corpus size) vs O(batch·√n) at scaled K
-    (alpha→0.5)."""
+    K=32 vs K=⌈√n⌉. The assignment (the index BUILD, O(n·K)) runs once
+    per K, unmeasured, and is persisted to parquet; the timed leg is a
+    FIXED 32-probe query batch (query size, not a corpus fraction)
+    running the production search, ``_ivf_top_k``: route each probe to
+    its cell, join the cell's members, score, top-k. Expected
+    separation: cell population is n/K, so per-batch search work is
+    O(batch·n/32) at fixed K (alpha→1 in corpus size) vs O(batch·√n)
+    at scaled K (alpha→0.5)."""
     import math as m
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     from copy_databasetables_spark.operators.similarity import (
-        _IVF_K,
         _IVF_MAX_CENTROIDS,
         _centroids,
-        _cosine_pre,
         _ivf_assign,
+        _ivf_top_k,
+        _probes,
         _vecs,
     )
 
@@ -299,52 +295,15 @@ def ivf_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
         ("sqrt_k", m.ceil(m.sqrt(n))),
     ]:
         idx_path = f"{out_base}/ivf_index_{kname}"
-        # index BUILD (unmeasured): the production _ivf_assign body —
-        # NOT a local re-implementation, so the A/B always measures the
-        # index q_sim_ivf* actually build — persisted, the amortized
-        # one-time cost this A/B factors out.
-        _ivf_assign(v, _centroids(v, k)).write.mode("overwrite").parquet(idx_path)
+        c = _centroids(v, k)
+        _ivf_assign(v, c).write.mode("overwrite").parquet(idx_path)
         best = float("inf")
         for _ in range(runs):
             t0 = time.perf_counter()
+            probes = _probes(v).orderBy("probe_id").limit(32)
             index = spark.read.parquet(idx_path)
-            probes = (
-                v.where("vec_id % 50 = 0")
-                .select(
-                    F.col("vec_id").alias("probe_id"),
-                    F.col("e").alias("pe"),
-                    F.col("nrm").alias("pn"),
-                )
-                .orderBy("probe_id")
-                .limit(32)
-            )
-            probe_cell = probes.join(
-                index.select(F.col("vec_id").alias("probe_id"), "cid"),
-                "probe_id",
-            )
-            members = index.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("cid").alias("ncid")
-            ).join(
-                v.select(F.col("vec_id").alias("neighbor_id"), "e", "nrm"),
-                "neighbor_id",
-            )
-            w = Window.partitionBy("probe_id").orderBy(
-                F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-            )
             (
-                F.broadcast(probe_cell)
-                .join(
-                    members,
-                    (F.col("ncid") == F.col("cid"))
-                    & (F.col("neighbor_id") != F.col("probe_id")),
-                )
-                .select(
-                    "probe_id",
-                    "neighbor_id",
-                    _cosine_pre("pe", "e", "pn", "nrm").alias("cos_raw"),
-                )
-                .withColumn("rank_pos", F.row_number().over(w))
-                .where(F.col("rank_pos") <= _IVF_K)
+                _ivf_top_k(probes, c, index, v)
                 .write.format("noop")
                 .mode("overwrite")
                 .save()
@@ -356,111 +315,68 @@ def ivf_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
 
 
 def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
-    """Measure the PERSISTED-IVFPQ search leg against a PREBUILT index
-    (VERDICT r12 item 3's α target). Build (unmeasured, amortized):
-    K=⌈√n⌉ coarse centroids persisted as their own table, PQ codebook
-    persisted, and the codes JOINED WITH THEIR CELL ID and written
-    ``partitionBy(cid)`` — the 10B-vector layout where a probe prunes
-    to its own cell's files. The timed leg is the fixed 32-probe query
-    batch paying ONLY query-time work: re-quantize probes against the
-    broadcast centroid read-back (O(batch·K)), read the ≤32 probed
-    cells' code files (partition-pruned — never the corpus), decode
-    them against the broadcast codebook, score asymmetric-PQ, top-k.
-    Uses the production bodies (_centroids/_ivf_assign/_pq_parts/
-    _pq_decode/_cosine_pre), not a re-implementation. Expected: with
-    cell population n/K = √n, per-batch work is O(batch·√n) on top of
-    a scheduling floor — third-decade alpha ≈ 0.1, the
-    q_sim_ivf_kscaled_persisted search-leg curve."""
+    """Measure the PERSISTED-IVFPQ search leg against a PREBUILT index.
+    Build (timed once, amortized): K=⌈√n⌉ coarse centroids persisted as
+    their own table, PQ codebook persisted, and the codes JOINED WITH
+    THEIR CELL ID and written ``partitionBy(cid)``, the layout where a
+    probe prunes to its own cell's files. The timed leg is the fixed
+    32-probe query batch paying ONLY query-time work, through the
+    production bodies: route probes to cells by ``_probe_cells``
+    (the quantized centroid affinity q_sim_ivf_pq_persisted routes
+    by) against the centroid read-back, read only the probed cells'
+    code files, decode them against the codebook, and run
+    ``_ivf_top_k``. Expected: with cell population n/K = √n, per-batch
+    work is O(batch·√n) on top of a scheduling floor."""
     import math as m
 
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from copy_databasetables_spark.operators.similarity import (
-        _IVF_K,
         _centroids,
-        _cosine_pre,
         _ivf_assign,
+        _ivf_top_k,
         _pq_decode,
         _pq_parts,
+        _probe_cells,
+        _probes,
+        _read_cells,
         _vecs,
+        _write_cells,
     )
 
     v = _vecs(spark, sf_dir).persist()
     n = v.count()
     k = m.ceil(m.sqrt(n))
     idx = f"{out_base}/ivfpq_index_sqrtk_{n}"
-    # ---- index BUILD (one-time, amortized; timed since r14 so the
-    # map-side-assignment build is a standing number — r13's window
-    # formulation needed a 48 GiB heap at the 2M-vector point) ----
     tb = time.perf_counter()
     c = _centroids(v, k)
     c.write.mode("overwrite").parquet(f"{idx}/centroids")
     sub_cb, codes = _pq_parts(v)
     sub_cb.write.mode("overwrite").parquet(f"{idx}/codebook")
-    (
-        codes.join(_ivf_assign(v, c), "vec_id")
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{idx}/codes_by_cell")
-    )
+    _write_cells(codes.join(_ivf_assign(v, c), "vec_id"), f"{idx}/codes_by_cell")
     build_s = round(time.perf_counter() - tb, 3)
     best = float("inf")
     for _ in range(runs):
         t0 = time.perf_counter()
         cents = spark.read.parquet(f"{idx}/centroids")
-        cb = spark.read.parquet(f"{idx}/codebook")
-        probes = (
-            v.where("vec_id % 50 = 0")
-            .select(
-                F.col("vec_id").alias("probe_id"),
-                F.col("e").alias("pe"),
-                F.col("nrm").alias("pn"),
-            )
-            .orderBy("probe_id")
-            .limit(32)
-        )
-        pw = Window.partitionBy("probe_id").orderBy(
-            F.col("cos_c").desc(), F.col("cid").asc()
-        )
-        probe_cell = (
-            probes.crossJoin(F.broadcast(cents))
-            .withColumn("cos_c", _cosine_pre("pe", "ce", "pn", "cn"))
-            .withColumn("rn", F.row_number().over(pw))
-            .where(F.col("rn") == 1)
-            .select("probe_id", "pe", "pn", "cid")
-        )
+        probes = _probes(v).orderBy("probe_id").limit(32)
         # bounded driver pull: <=32 probed cell ids -> partition pruning
-        cells = [r["cid"] for r in probe_cell.select("cid").distinct().collect()]
-        cell_codes = spark.read.parquet(f"{idx}/codes_by_cell").where(
-            F.col("cid").isin(cells)
+        cells = [
+            r["cid"]
+            for r in _probe_cells(probes, cents, 1).select("cid").distinct().collect()
+        ]
+        cell_codes = _read_cells(
+            spark, f"{idx}/codes_by_cell", "vec_id", "m", "code_id"
+        ).where(F.col("cid").isin(cells))
+        npq = _pq_decode(
+            cell_codes.select("vec_id", "m", "code_id"),
+            spark.read.parquet(f"{idx}/codebook"),
         )
-        npq = _pq_decode(cell_codes.select("vec_id", "m", "code_id"), cb).join(
-            cell_codes.select("vec_id", "cid").distinct(), "vec_id"
-        )
-        w = Window.partitionBy("probe_id").orderBy(
-            F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-        )
+        # one code row per (vector, subspace): the m=0 slice is the
+        # assignment, as in the CDC query leg
+        assign = cell_codes.where(F.col("m") == 0).select("vec_id", "cid")
         (
-            F.broadcast(probe_cell)
-            .join(
-                npq.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("cid").alias("ncid"),
-                    "d",
-                    "nrm",
-                ),
-                (F.col("ncid") == F.col("cid"))
-                & (F.col("neighbor_id") != F.col("probe_id")),
-            )
-            .select(
-                "probe_id",
-                "neighbor_id",
-                _cosine_pre("pe", "d", "pn", "nrm").alias("cos_raw"),
-            )
-            .withColumn("rank_pos", F.row_number().over(w))
-            .where(F.col("rank_pos") <= _IVF_K)
+            _ivf_top_k(probes, cents, assign, npq, "d")
             .write.format("noop")
             .mode("overwrite")
             .save()
