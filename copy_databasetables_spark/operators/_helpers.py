@@ -175,6 +175,22 @@ def rz(c: Column | str, scale: int) -> Column:
 SQL_RZ = "(round({x}, {n}) + 0.0)"
 
 
+def _dot(a: str, b: str) -> Column:
+    """Dot product of two double-array columns: the zip_with products
+    folded left to right from 0.0, in whole-stage codegen."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _cosine_pre(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine with precomputed per-vector norms: ONE array aggregate per
+    pair (the dot product). sqrt(sa)·sqrt(sb) vs sqrt(sa·sb) differ only
+    in the last ulp — nine orders below both the ~1e-3 cosine gaps that
+    decide ranks/thresholds on this data and the 4dp output rounding."""
+    return _dot(a, b) / (F.col(na) * F.col(nb))
+
+
 # --- SQL-expression bloom filter -------------------------------------
 #
 # Spark exposes no SQL bloom_filter_agg, and df.stat.bloomFilter detours

@@ -38,6 +38,7 @@ from copy_databasetables_spark.io import load_table
 from copy_databasetables_spark.operators import register
 from copy_databasetables_spark.operators._helpers import (
     _SCALE,
+    _cosine_pre,
     _scaled,
     ckpt,
     rz,
@@ -144,29 +145,6 @@ def _bounded_probes(v: DataFrame) -> DataFrame:
         .orderBy("vec_id")
         .limit(_BLAS_MAX_PROBES)
     )
-
-
-def _dot(a: str, b: str) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _cosine(a: str, b: str) -> Column:
-    """Self-contained cosine (recomputes both norms) — for callers that
-    don't carry precomputed norm columns."""
-    sq = lambda c: F.aggregate(  # noqa: E731
-        F.col(c), F.lit(0.0), lambda acc, x: acc + x * x
-    )
-    return _dot(a, b) / F.sqrt(sq(a) * sq(b))
-
-
-def _cosine_pre(a: str, b: str, na: str, nb: str) -> Column:
-    """Cosine with precomputed per-vector norms: ONE array aggregate per
-    pair (the dot product). sqrt(sa)·sqrt(sb) vs sqrt(sa·sb) differ only
-    in the last ulp — nine orders below both the ~1e-3 cosine gaps that
-    decide ranks/thresholds on this data and the 4dp output rounding."""
-    return _dot(a, b) / (F.col(na) * F.col(nb))
 
 
 def _qdot(a: str, b: str) -> Column:

@@ -209,16 +209,19 @@ def test_embed_recall_is_total_on_identical_vectors(spark, tmp_path):
 
 
 def test_cosine_self_similarity_and_symmetry(spark):
-    from copy_databasetables_spark.operators.similarity import _cosine
+    from copy_databasetables_spark.operators._helpers import _cosine_pre
 
+    norm = lambda c: F.sqrt(  # noqa: E731
+        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
+    )
     df = spark.createDataFrame(
         [([1.0, 2.0, 3.0], [1.0, 2.0, 3.0]), ([1.0, 0.0, 0.0], [0.0, 1.0, 0.0])],
         "a array<double>, b array<double>",
-    )
+    ).select("a", "b", norm("a").alias("na"), norm("b").alias("nb"))
     rows = df.select(
-        _cosine("a", "a").alias("self"),
-        _cosine("a", "b").alias("ab"),
-        _cosine("b", "a").alias("ba"),
+        _cosine_pre("a", "a", "na", "na").alias("self"),
+        _cosine_pre("a", "b", "na", "nb").alias("ab"),
+        _cosine_pre("b", "a", "nb", "na").alias("ba"),
     ).collect()
     for r in rows:
         assert r["self"] == pytest.approx(1.0, abs=1e-12)
@@ -740,14 +743,30 @@ def _build_jobs(spark, key: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_dedup_cluster_build_job_count(spark):
-    """Local contraction leaves the probe loop one converging round and
-    one verifying probe, and the pair count and each round's label sum
-    are observed on the checkpoint jobs that materialize them. A
-    ``q_dedup_cluster`` build ran 39–41 Spark jobs before the
-    contraction pass, 17–18 with it, and 13 once the counts were
-    observed; pinned at that + 1."""
-    assert 1 <= _build_jobs(spark, "q_dedup_cluster") <= 14
+_DEDUP_BUILD_JOBS = [
+    ("q_dedup_cluster", 14),
+    ("q_dedup_cluster_lsh", 18),
+    ("q_dedup_survivor_pagerank", 19),
+    ("q_dedup_minhash_est", 2),
+    ("q_dedup_incremental", 2),
+]
+
+
+@pytest.mark.parametrize(
+    "key, bound", _DEDUP_BUILD_JOBS, ids=[k for k, _ in _DEDUP_BUILD_JOBS]
+)
+def test_dedup_build_job_count(spark, key, bound):
+    """Eager jobs a dedup build runs before it returns, pinned at the
+    measured count + 1 (the highest of repeated builds where it varies
+    by one). Local contraction leaves the CC probe loop one converging
+    round and one verifying probe, and the pair count and each round's
+    label sum are observed on the checkpoint jobs that materialize
+    them: ``q_dedup_cluster`` ran 39–41 jobs before the contraction
+    pass, 17–18 with it, 13–14 once the counts were observed.
+    Measured: cluster_lsh 16–17, survivor_pagerank 17–18, minhash_est
+    and incremental 1 (the shuffle below the token-hash checkpoint,
+    which AQE runs when that checkpoint is planned)."""
+    assert 1 <= _build_jobs(spark, key) <= bound
 
 
 def test_bm25_persisted_build_job_count(spark):

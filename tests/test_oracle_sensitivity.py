@@ -55,6 +55,10 @@ MUTATIONS = [
     (dedup, "_EMB_BUCKET_CAP", 1, "q_dedup_embed_recall"),
     (dedup, "_N_BANDS", 2, "q_dedup_lsh_recall"),
     (dedup, "_SUBSTR_K", 7, "q_dedup_substring"),
+    # the shared verify step (dedup._verify) reads each threshold at call
+    # time on the LSH paths too — verified to KILL on sf0.001 on entry:
+    (dedup, "_JACCARD_TAU", 0.90, "q_dedup_minhash"),
+    (dedup, "_EMBED_TAU", 0.41, "q_dedup_embed_lsh_scaled"),
     (similarity, "_IVF_K", 4, "q_sim_ivf"),
     (similarity, "_K", 4, "q_sim_topk"),
     (text, "_CASC_MIN_TOK", 25, "q_quality_cascade"),

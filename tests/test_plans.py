@@ -177,9 +177,12 @@ def test_simhash_candidates_use_bucket_equi_join(spark):
 def test_ngram_join_carries_size_band(spark):
     """The τ=0.60 size-ratio band must appear in the ngram join
     condition (it prunes the per-language O(n²) soundly)."""
+    import re
+
     df = all_queries()["q_dedup_ngram"](spark, SF_SMOKE)
     p = full_plan(df)
-    assert "gsz" in p
+    assert re.search(r"\(sz_a#\d+ \* 100\) >= \(sz_b#\d+ \* 60\)", p)
+    assert re.search(r"\(sz_b#\d+ \* 100\) >= \(sz_a#\d+ \* 60\)", p)
 
 
 def test_topk_per_group_pushes_window_group_limit(spark):
@@ -533,7 +536,7 @@ def test_scaled_embed_lsh_is_cartesian_free_and_id_lean(spark):
     ]
     pair_dedups = [ln for ln in dedup_lines if "vec_id_a" in ln and "vec_id_b" in ln]
     assert pair_dedups, "expected an id-pair dedup stage in the plan"
-    assert not any(re.search(r"\be[ab]\b", ln) for ln in pair_dedups), (
+    assert not any(re.search(r"\be_[ab]\b", ln) for ln in pair_dedups), (
         "vector columns must not pass through the pair-dedup exchange"
     )
 
@@ -1446,3 +1449,26 @@ def test_recall_report_exact_leg_materialized_once(spark):
     # three consumers of the single checkpointed exact frame
     assert len(exact) == 3 and len(scans) == 3
     assert len({n.rdd().id() for n in scans}) == 1
+
+
+def test_plan_digest_sees_through_checkpoints(spark, monkeypatch):
+    """``tools/dump_plans.py --digest`` hashes every frame a build
+    checkpointed, not only the returned one. q_dedup_cluster returns a
+    window over a checkpoint (``LogicalRDD``), so its pair generation —
+    and the Jaccard threshold in it — shows only below the checkpoints:
+    mutating the threshold must change the digest, and two builds of
+    the same plan must not."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
+    from dump_plans import plan_digest
+
+    from copy_databasetables_spark.operators import dedup
+
+    base = plan_digest(spark, "q_dedup_cluster", SF_SMOKE)
+    assert plan_digest(spark, "q_dedup_cluster", SF_SMOKE) == base
+    monkeypatch.setattr(dedup, "_JACCARD_TAU", 0.90)
+    assert plan_digest(spark, "q_dedup_cluster", SF_SMOKE) != base

@@ -2,7 +2,8 @@
 bench headline query, with the scale-critical facts summarized.
 
     python tools/dump_plans.py          # writes PLANS.md at repo root
-    python tools/dump_plans.py --digest q_sim_topk q_sim_ivf   # plan hashes
+    python tools/dump_plans.py --digest q_sim_topk q_sim_ivf   # plan hashes,
+                                        # checkpointed inputs included
 
 This is the artifact of the explain-and-iterate loop: broadcast choices,
 shuffle counts, partial aggregation, codegen spans, and Python-boundary
@@ -22,6 +23,7 @@ sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from copy_databasetables_spark import get_spark, operators  # noqa: E402
+from copy_databasetables_spark.operators._helpers import _PLAN_PINS  # noqa: E402
 from copy_databasetables_spark.plans.inspect import final_plan, plan_facts  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -30,13 +32,13 @@ SF_DIR = "/root/testdata/sf0.01"
 #: needs to interpret a LOCAL plan against the 100 TB posture.
 NOTES = {
     "q_dedup_minhash": (
-        "No broadcast HINT exists anywhere in this pipeline (round 2 "
-        "removed them): every broadcast below is AQE's size-based choice "
-        "on this tiny local input, and "
+        "The candidate step (dedup._candidates) and the verify step "
+        "(dedup._verify) carry no broadcast hint: every broadcast below "
+        "is AQE's size-based choice on this small local input, and "
         "tests/test_plans.py::test_minhash_verify_join_strategy_is_size_driven "
         "proves the whole pipeline compiles to shuffle joins the moment "
-        "broadcast is disabled — i.e. at corpus scale the verify join "
-        "shuffles on doc_id as designed."
+        "broadcast is disabled — at corpus scale the verify joins "
+        "shuffle on doc_id."
     ),
     "q_join_multi_star": (
         "Only nation/region (fixed 25/5 rows) carry broadcast hints; the "
@@ -127,21 +129,23 @@ SCALE_REPS = [
 NOTES.update(
     {
         "q_dedup_incremental": (
-            "Batch-vs-index LSH: the band join's left side is only the "
-            "incoming batch's bands (|batch| ≪ |index|); any broadcast "
+            "Batch-vs-index LSH: the candidate step (dedup._candidates, "
+            "no id order) joins only the incoming batch's bands "
+            "(|batch| ≪ |index|) to the index's bands; any broadcast "
             "below is AQE's size call on this local input — at scale the "
-            "index bands are a PRE-PARTITIONED persisted table probed in "
-            "place, and the verify joins shuffle on doc_id exactly like "
-            "q_dedup_near (no broadcast hints anywhere in the pipeline)."
+            "index bands are a pre-partitioned persisted table probed in "
+            "place, and the verify joins (dedup._verify) shuffle on "
+            "doc_id (no broadcast hints anywhere in the pipeline)."
         ),
         "q_dedup_cluster": (
-            "One ROUND of the min-label-propagation loop (the full run "
-            "executes this plan ~diameter times with localCheckpoint "
-            "truncating lineage between rounds). Both the message join "
-            "and the min-aggregate key on doc_id, so each round is one "
-            "co-partitioned shuffle; the convergence check is a label "
-            "sum observed on the round's checkpoint job, not a "
-            "labels⋈labels diff."
+            "The returned plan is only the cluster-size window over the "
+            "converged labels' checkpoint. Pair generation "
+            "(dedup._exact_tau_pairs), the per-partition contraction "
+            "(dedup._local_contract) and each probe round of "
+            "dedup._min_label_propagate sit below checkpoints; "
+            "`--digest` hashes all of them. Each round's message join and "
+            "min-aggregate key on doc_id, and its convergence check is a "
+            "label sum observed on the round's checkpoint job."
         ),
         "q_emb_outlier": (
             "The centroid side is |labels| rows (two-phase aggregate "
@@ -325,8 +329,11 @@ NOTES.update(
 
 #: what varies between two builds of one plan, not the plan itself:
 #: lambda-variable suffixes, expression ids, per-call index directories
-#: (``_ivf_index_path``) and checkpoint RDD ids.
+#: (``_ivf_index_path``), checkpoint RDD ids, and the generated name and
+#: dataset id of every ``Observation`` (``CollectMetrics``).
 _PLAN_NOISE = [
+    (re.compile(r"CollectMetrics [0-9a-f-]{36}, (.*), \d+$", re.M),
+     r"CollectMetrics <obs>, \1, <id>"),
     (re.compile(r"_\d+#\d+"), "_#"),
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"[0-9a-f]{12}_\d+_\d+"), "<index>"),
@@ -334,13 +341,26 @@ _PLAN_NOISE = [
 ]
 
 
-def plan_digest(df) -> str:
-    """sha256 of ``df``'s optimized logical plan with _PLAN_NOISE masked:
-    equal digests mean the same plan, across processes and refactors."""
+def _masked_plan(df) -> str:
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     for pat, rep in _PLAN_NOISE:
         plan = pat.sub(rep, plan)
-    return hashlib.sha256(plan.encode()).hexdigest()
+    return plan
+
+
+def plan_digest(spark, key: str, sf_dir: str) -> str:
+    """sha256 over the optimized logical plans of one build of ``key``:
+    every frame the build checkpointed (``_helpers._PLAN_PINS``, in call
+    order), then the returned frame, each with _PLAN_NOISE masked. A
+    checkpoint hides its input behind a ``LogicalRDD`` leaf, so hashing
+    the returned frame alone misses everything built below one. Equal
+    digests mean the same plans, across processes and refactors."""
+    n0 = len(_PLAN_PINS)
+    out = operators.all_queries()[key](spark, sf_dir)
+    h = hashlib.sha256()
+    for df in _PLAN_PINS[n0:] + [out]:
+        h.update(_masked_plan(df).encode() + b"\n")
+    return h.hexdigest()
 
 
 def main() -> None:
@@ -352,13 +372,19 @@ def main() -> None:
     qs = operators.all_queries()
     if args.digest:
         for key in args.digest:
-            print(f"{plan_digest(qs[key](spark, SF_DIR))}  {key}", flush=True)
+            print(f"{plan_digest(spark, key, SF_DIR)}  {key}", flush=True)
         return
     out = [
         "# PLANS — executed physical plans of the bench headline queries",
         "",
         f"Generated by `python tools/dump_plans.py` at {SF_DIR} "
         "(plans are shape-identical across SFs; AQE-final after execution).",
+        f"Session: master `{spark.sparkContext.master}` on a "
+        f"{os.cpu_count()}-core host, `spark.sql.shuffle.partitions="
+        f"{spark.conf.get('spark.sql.shuffle.partitions')}`, "
+        "`spark.sql.adaptive.coalescePartitions.initialPartitionNum="
+        f"{spark.conf.get('spark.sql.adaptive.coalescePartitions.initialPartitionNum')}`"
+        " (the width AQE gives each exchange before coalescing it).",
         "Facts legend: shuffles = hash/range exchanges · bc = broadcast hash "
         "joins · smj = sort-merge joins · py = Python evaluation nodes · "
         "codegen = whole-stage-codegen spans.",

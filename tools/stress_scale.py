@@ -314,7 +314,7 @@ def ivf_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
     return out
 
 
-def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
+def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 5) -> dict:
     """Measure the PERSISTED-IVFPQ search leg against a PREBUILT index.
     Build (timed once, amortized): K=⌈√n⌉ coarse centroids persisted as
     their own table, PQ codebook persisted, and the codes JOINED WITH
@@ -326,8 +326,13 @@ def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
     by) against the centroid read-back, read only the probed cells'
     code files, decode them against the codebook, and run
     ``_ivf_top_k``. Expected: with cell population n/K = √n, per-batch
-    work is O(batch·√n) on top of a scheduling floor."""
+    work is O(batch·√n) on top of a scheduling floor.
+
+    One untimed warm-up query runs first, then ``runs`` timed ones;
+    ``search_sec`` is their median and ``search_spread_sec`` their
+    max − min, so one slow run cannot set the scaling exponent."""
     import math as m
+    import statistics
 
     from pyspark.sql import functions as F
 
@@ -355,8 +360,8 @@ def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
     sub_cb.write.mode("overwrite").parquet(f"{idx}/codebook")
     _write_cells(codes.join(_ivf_assign(v, c), "vec_id"), f"{idx}/codes_by_cell")
     build_s = round(time.perf_counter() - tb, 3)
-    best = float("inf")
-    for _ in range(runs):
+
+    def search() -> float:
         t0 = time.perf_counter()
         cents = spark.read.parquet(f"{idx}/centroids")
         probes = _probes(v).orderBy("probe_id").limit(32)
@@ -381,13 +386,18 @@ def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 2) -> dict:
             .mode("overwrite")
             .save()
         )
-        best = min(best, time.perf_counter() - t0)
+        return time.perf_counter() - t0
+
+    search()  # warm-up: JVM code paths and the index files' first read
+    times = sorted(search() for _ in range(runs))
     v.unpersist()
     return {
         "n_vectors": n,
         "k": k,
         "build_sec": build_s,
-        "search_sec": round(best, 3),
+        "search_sec": round(statistics.median(times), 3),
+        "search_spread_sec": round(times[-1] - times[0], 3),
+        "search_runs_sec": [round(t, 3) for t in times],
     }
 
 
@@ -399,24 +409,21 @@ def candidates_leg(spark, sf_dir: str, runs: int = 2) -> dict:
     bucket COLLISION counts (does the bucket join's output stay ~linear
     in corpus size, or do accidental cross-copy collisions bend it?),
     not by the verify join the 10×/100× runs already price. Uses the
-    production stage bodies (_toks_df/_band_keyed/_band_candidates),
-    not a re-implementation."""
+    production stage bodies (_toks_df/_sigs/_band_keyed and the
+    candidate step, _lsh_candidates), not a re-implementation."""
     from pyspark.sql import functions as F
 
     from copy_databasetables_spark.operators.dedup import (
-        _MINHASH_SIG,
         _TOKH,
-        _band_candidates,
         _band_keyed,
+        _lsh_candidates,
+        _sigs,
         _toks_df,
     )
 
     def cand_df():
         toks = _toks_df(spark, sf_dir).withColumn("tokh", F.expr(_TOKH))
-        sigs = toks.select(
-            "doc_id", "lang", "sz", F.expr(_MINHASH_SIG).alias("sig")
-        )
-        return _band_candidates(spark, _band_keyed(sigs))
+        return _lsh_candidates(_band_keyed(_sigs(toks)))
 
     best = float("inf")
     for _ in range(runs):
@@ -580,8 +587,11 @@ def main() -> None:
             math.log(tn / t1) / math.log(args.copies), 2
         )
         print(
-            f"ivfpq persisted search 1x={t1:8.3f}s "
-            f"{args.copies}x={tn:8.3f}s  alpha={ab['alpha_search']}",
+            f"ivfpq persisted search (median) 1x={t1:8.3f}s "
+            f"±{ab['1x']['search_spread_sec']:.3f} "
+            f"{args.copies}x={tn:8.3f}s "
+            f"±{ab[f'{args.copies}x']['search_spread_sec']:.3f}  "
+            f"alpha={ab['alpha_search']}",
             file=sys.stderr,
         )
         print(json.dumps(ab))
