@@ -27,7 +27,6 @@ overwrite partitioned tables by partition (partitionOverwriteMode=dynamic).
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 from dataclasses import dataclass
@@ -37,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from copy_databasetables_spark.io import load_table
+from copy_databasetables_spark.io import footer_schema, load_table
 
 #: FK-respecting order (FIXTURES.md): parents before children, so a
 #: relational target with constraints can load without violations.
@@ -114,17 +113,6 @@ class CopyVerificationError(RuntimeError):
     checksums differ)."""
 
 
-def _footer_schema(path: str) -> str:
-    """The schema Spark recorded in the first written file's footer: what
-    its schema inference would read, without inference's Spark job."""
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(glob.escape(path) + "/**/*.parquet", recursive=True))
-    meta = (pq.read_schema(files[0]).metadata if files else None) or {}
-    rec = meta.get(b"org.apache.spark.sql.parquet.row.metadata", b'{"fields": []}')
-    return T.StructType.fromJson(json.loads(rec)).simpleString()
-
-
 def _write_verified(
     out: DataFrame, path: str, label: str, checksum: bool, by: str | None = None
 ) -> int:
@@ -157,7 +145,7 @@ def _verify_target(
     ``CopyVerificationError``."""
     back = like.sparkSession.read.schema(like.schema).parquet(path)
     cols = T.StructType([f for f in like.schema if f.name != by]).simpleString()
-    if len(want) > 1 and (landed := _footer_schema(path)) != cols:
+    if len(want) > 1 and (landed := footer_schema(path)) != cols:
         raise CopyVerificationError(
             f"{label}: schema/content error: target is {landed}, expected {cols}"
         )

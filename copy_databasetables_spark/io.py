@@ -4,7 +4,7 @@ Tables (TESTDATA.md / FIXTURES.md): region nation customer supplier part
 orders lineitem events documents embeddings — one parquet file per table
 under /root/testdata/sf{0.001,0.01,0.1}/.
 
-Two deliberate design points:
+Three deliberate design points:
 
 1. **Explicit schemas.** Fixed StructTypes declared from FIXTURES.md;
    the reference reads schemas from the SQL Server catalog, never infers
@@ -26,6 +26,11 @@ Two deliberate design points:
    Either way every timestamp in the engine has uniform NTZ semantics
    and agrees with DuckDB reading the same file.
 
+3. **Artifacts the engine wrote** (persisted indexes, copy targets) are
+   read back with the schema they were written with, after comparing
+   it with the Spark schema in the parquet footer (``footer_schema``,
+   ``read_written``): no inference job, and a stale file fails.
+
 Scale note (100 TB): loaders return plain lazy DataFrames — no caching,
 no collect. Partitioning of a scan is governed by
 ``spark.sql.files.maxPartitionBytes`` (default 128 MB) which is the right
@@ -35,6 +40,8 @@ scan because every downstream operator is declarative.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -249,6 +256,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         n = max(1, min(cap, int(size_mb)))
         if n > 1:
             df = df.repartition(n)
+    return df
+
+
+def footer_schema(path: str) -> str:
+    """The schema Spark recorded in the footer of the first parquet file
+    under ``path`` (partition directories included): what its schema
+    inference would read, without inference's Spark job. A file written
+    by another engine carries no Spark schema and reads as ``struct<>``."""
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(glob.escape(path) + "/**/*.parquet", recursive=True))
+    meta = (pq.read_schema(files[0]).metadata if files else None) or {}
+    rec = meta.get(b"org.apache.spark.sql.parquet.row.metadata", b'{"fields": []}')
+    return T.StructType.fromJson(json.loads(rec)).simpleString()
+
+
+def read_written(
+    spark: SparkSession, path: str, schema: T.StructType | str, by: str | None = None
+) -> DataFrame:
+    """Read back a parquet artifact the engine wrote with the schema
+    (StructType or DDL string; partition column ``by`` last) it was
+    written with, so no schema-inference job runs. The footer must hold
+    that schema, less ``by``: a stale or retyped artifact raises
+    ``ValueError`` instead of reading a missing column as NULLs or
+    widening a narrower type."""
+    df = spark.read.schema(schema).parquet(path)
+    want = T.StructType([f for f in df.schema if f.name != by]).simpleString()
+    if (landed := footer_schema(path)) != want:
+        raise ValueError(f"{path}: written as {landed}, read as {want}")
     return df
 
 

@@ -1,8 +1,8 @@
 """§2.10 Deduplication operators for training-data pipelines.
 
 Families over ``documents`` and ``embeddings``, all JVM-side DataFrame
-expressions (the one Python pass is the connected-components
-contraction, ``_local_contract``):
+expressions (the one Python pass is the connected-components union-find,
+``_union_find``):
 
 - exact content hash (``sha2``);
 - exact blocked Jaccard over token sets and bigram shingles;
@@ -27,6 +27,11 @@ Pair contract: a pair producer returns ``(doc_id_a, doc_id_b, …)`` with
 ``doc_id_a < doc_id_b`` (embedding producers ``vec_id_a < vec_id_b``;
 vec ids double as doc ids). Connected components, survivor choice,
 PageRank and triangle counts consume it.
+
+Connected components (``_cluster_over_pairs``) is one round when the
+pairs fit one partition: a single ``mapInPandas`` union-find over them.
+Larger graphs contract each partition with the same union-find and
+join the stars up with the min-label probe loop.
 
 Every hash is md5-derived (Spark ``conv(…, 16, 10)`` ↔ DuckDB
 ``CAST('0x…' AS BIGINT)``), so sketches, buckets and candidates are the
@@ -1270,7 +1275,9 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pairs are ``q_dedup_near``'s exact lang-blocked join, quadratic per
     language (α ≈ 1.25 at the 10× stress step, SCALE.md) — the exact
     reference; ``q_dedup_cluster_lsh`` runs the same CC over MinHash-LSH
-    pairs. CC is ``_cluster_over_pairs``: per-partition contraction,
+    pairs. CC is ``_cluster_over_pairs``: below 250k pairs one
+    union-find pass over all of them, which labels each vertex with
+    its component minimum directly; above, per-partition contraction
     then the min-label loop. Contraction keeps every vertex and exactly
     the pairs' connectivity; the loop's labels always name a vertex of
     the same component, only decrease, and at the fixpoint equal the
@@ -1303,21 +1310,24 @@ def _cluster_over_pairs(
     cluster_id, n_members), cluster_id the component's minimum doc_id.
 
     ``_pair_ckpt`` materializes the pairs (the smallest frame) once and
-    its observed count sizes ``parts``. The pairs are coalesced to
-    ``parts`` partitions and each is contracted by ``_local_contract``
-    (a narrow ``mapInPandas`` pass) into star edges to its local
-    component minima; ``_min_label_propagate`` iterates those to the
-    global fixpoint. With ``parts == 1`` the stars are already the
-    answer and the loop only verifies it. Pass ``n_pairs`` with a frame
-    ``_pair_ckpt`` already returned to share that materialization."""
+    its observed count sizes ``parts``. With ``parts == 1`` the answer
+    is one lazy ``mapInPandas`` pass over the checkpointed pairs
+    (``_local_components``): the union-find over the whole graph, with
+    ``n_members`` from a bincount of its labels. Otherwise the pairs
+    are coalesced to ``parts`` partitions, each is contracted by
+    ``_local_contract`` into star edges to its local component minima,
+    and ``_min_label_propagate`` iterates those to the global fixpoint.
+    Pass ``n_pairs`` with a frame ``_pair_ckpt`` already returned to
+    share that materialization."""
     if n_pairs is None:
         pair_df, n_pairs = _pair_ckpt(pair_df)
     parts = _pair_parts(spark, n_pairs)
-    edges = (
-        pair_df.select("doc_id_a", "doc_id_b")
-        .coalesce(parts)
-        .mapInPandas(_local_contract, "src long, dst long")
-    )
+    pairs = pair_df.select("doc_id_a", "doc_id_b").coalesce(parts)
+    if parts == 1:
+        return pairs.mapInPandas(
+            _local_components, "doc_id long, cluster_id long, n_members long"
+        )
+    edges = pairs.mapInPandas(_local_contract, "src long, dst long")
     labels = _min_label_propagate(edges, parts)
     w = Window.partitionBy("cluster_id")
     return labels.select("doc_id", F.col("label").alias("cluster_id")).withColumn(
@@ -1325,22 +1335,17 @@ def _cluster_over_pairs(
     )
 
 
-def _local_contract(batches):
-    """``mapInPandas`` body: one partition's ``(doc_id_a, doc_id_b)``
-    pairs → symmetric star edges ``(src, dst)`` over the partition-local
-    components. A vectorised union-find (min-label steps + pointer
-    jumping over ``np.unique`` vertex indices, to a fixpoint) labels
-    each vertex with its local component minimum ``r``; every vertex
-    ``v`` then emits ``(v, r)`` and, unless it is ``r``, ``(r, v)`` —
-    so every vertex is still a ``dst``, each root keeps a self-loop,
-    and the edge set links exactly the vertices the input pairs did.
-    An empty partition emits nothing."""
+def _union_find(batches):
+    """One partition's ``(doc_id_a, doc_id_b)`` pair batches → ``(verts,
+    label)``: the sorted distinct vertices and, per vertex, the index
+    of its component's minimum vertex; ``None`` for an empty partition.
+    A vectorised union-find: min-label steps + pointer jumping over
+    ``np.unique`` vertex indices, to a fixpoint."""
     import numpy as np
-    import pandas as pd
 
     frames = [b for b in batches if len(b)]
     if not frames:
-        return
+        return None
     a = np.concatenate([f["doc_id_a"].to_numpy(np.int64) for f in frames])
     b = np.concatenate([f["doc_id_b"].to_numpy(np.int64) for f in frames])
     verts, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
@@ -1353,7 +1358,43 @@ def _local_contract(batches):
         np.minimum.at(label, ib, label[ia])
         label = label[label]
         if np.array_equal(label, prev):
-            break
+            return verts, label
+
+
+def _local_components(batches):
+    """``mapInPandas`` body over ALL the pairs (one partition): every
+    vertex with its component minimum and the component's size,
+    ``(doc_id, cluster_id, n_members)``. An empty graph emits
+    nothing."""
+    import numpy as np
+    import pandas as pd
+
+    if (uf := _union_find(batches)) is None:
+        return
+    verts, label = uf
+    yield pd.DataFrame(
+        {
+            "doc_id": verts,
+            "cluster_id": verts[label],
+            "n_members": np.bincount(label)[label],
+        }
+    )
+
+
+def _local_contract(batches):
+    """``mapInPandas`` body: one partition's ``(doc_id_a, doc_id_b)``
+    pairs → symmetric star edges ``(src, dst)`` over the partition-local
+    components (``_union_find``): every vertex ``v`` with local
+    component minimum ``r`` emits ``(v, r)`` and, unless it is ``r``,
+    ``(r, v)`` — so every vertex is still a ``dst``, each root keeps a
+    self-loop, and the edge set links exactly the vertices the input
+    pairs did. An empty partition emits nothing."""
+    import numpy as np
+    import pandas as pd
+
+    if (uf := _union_find(batches)) is None:
+        return
+    verts, label = uf
     root = verts[label]
     leaf = label != np.arange(len(verts))
     yield pd.DataFrame(

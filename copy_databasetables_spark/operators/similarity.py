@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from copy_databasetables_spark.io import load_table
+from copy_databasetables_spark.io import load_table, read_written
 from copy_databasetables_spark.operators import register
 from copy_databasetables_spark.operators._helpers import (
     _SCALE,
@@ -647,6 +647,14 @@ def _ivf_top_k(
     return _top_k(scored, _IVF_K, *carry)
 
 
+#: the columns of the persisted IVF / IVF-PQ artifacts, as their builds
+#: write them: assignments (``_write_cells``, cid in the directories),
+#: PQ codes (also a ``_write_cells`` members list) and the codebook
+_ASSIGN_COLS = "vec_id bigint"
+_CODES_COLS = "vec_id bigint, m int, code_id int"
+_CODEBOOK_COLS = "code_id int, m int, cw array<double>"
+
+
 def _write_cells(df: DataFrame, path: str) -> None:
     """Write an index artifact ``partitionBy(cid)``, one file per cell
     (``repartition("cid")`` first), so a probe's cell join prunes the
@@ -656,13 +664,12 @@ def _write_cells(df: DataFrame, path: str) -> None:
     )
 
 
-def _read_cells(spark: SparkSession, path: str, *cols: str) -> DataFrame:
-    """Read a ``_write_cells`` artifact back as ``(*cols, cid)``. cid
-    returns as a partition directory; the BIGINT cast restores the
-    join-key type of the in-plan index."""
-    return spark.read.parquet(path).select(
-        *cols, F.col("cid").cast("bigint").alias("cid")
-    )
+def _read_cells(spark: SparkSession, path: str, cols: str) -> DataFrame:
+    """Read a ``_write_cells`` artifact back as ``(cols, cid)``, ``cols``
+    the DDL of its written columns (``read_written``). cid returns from
+    the partition directories, declared BIGINT: the join-key type of
+    the in-plan index."""
+    return read_written(spark, path, f"{cols}, cid bigint", by="cid")
 
 
 def _ivf_oracle(c_cte: str) -> str:
@@ -775,7 +782,7 @@ def _ivf_persisted_search(
     c = _centroids(v, k)
     path = _ivf_index_path(sf_dir)
     _write_cells(_ivf_assign(v, c), path)
-    return _ivf_top_k(_probes(v), c, _read_cells(spark, path, "vec_id"), v)
+    return _ivf_top_k(_probes(v), c, _read_cells(spark, path, _ASSIGN_COLS), v)
 
 
 @register("q_sim_ivf_persisted", oracle=_ivf_oracle(_C_SQL))
@@ -2827,10 +2834,10 @@ def _ivfpq_query_leg(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     ``_ivf_top_k`` over the read-back assignment and the decoded
     codes."""
     v = _vecs(spark, sf_dir)
-    assign = _read_cells(spark, f"{path}/assign", "vec_id")
+    assign = _read_cells(spark, f"{path}/assign", _ASSIGN_COLS)
     npq = _pq_decode(
-        spark.read.parquet(f"{path}/codes"),
-        spark.read.parquet(f"{path}/codebook"),
+        read_written(spark, f"{path}/codes", _CODES_COLS),
+        read_written(spark, f"{path}/codebook", _CODEBOOK_COLS),
     )
     return _ivf_top_k(_probes(v), _centroids(v), assign, npq, "d")
 
@@ -4290,7 +4297,7 @@ def _ivfpq_cdc_apply(
     )
 
     survivors = (
-        _read_cells(spark, f"{path}/members", "vec_id", "m", "code_id")
+        _read_cells(spark, f"{path}/members", _CODES_COLS)
         .where(F.col("cid").isin(affected))
         .join(delta.select("vec_id"), "vec_id", "left_anti")
     )
@@ -4300,7 +4307,7 @@ def _ivfpq_cdc_apply(
     updated.repartition("cid").write.mode("overwrite").parquet(
         f"{path}/stage"
     )
-    staged = spark.read.parquet(f"{path}/stage")
+    staged = read_written(spark, f"{path}/stage", updated.schema)
     prior_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
@@ -4331,12 +4338,12 @@ def _ivfpq_cdc_query_leg(
 ) -> DataFrame:
     """QUERY leg against the maintained inverted-list-with-codes index:
     the exact q_sim_ivf_pq plan over the members/ read-back."""
-    mem = _read_cells(spark, f"{path}/members", "vec_id", "m", "code_id")
+    mem = _read_cells(spark, f"{path}/members", _CODES_COLS)
     # every vector owns exactly one cell and _PQ_M code rows, so the
     # m=0 slice IS the assignment table — no distinct shuffle needed
     assign = mem.where(F.col("m") == 0).select("vec_id", "cid")
     npq = _pq_decode(
         mem.select("vec_id", "m", "code_id"),
-        spark.read.parquet(f"{path}/codebook"),
+        read_written(spark, f"{path}/codebook", _CODEBOOK_COLS),
     )
     return _ivf_top_k(_probes(v), c, assign, npq, "d")

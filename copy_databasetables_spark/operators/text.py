@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from copy_databasetables_spark.io import load_table
+from copy_databasetables_spark.io import load_table, read_written
 from copy_databasetables_spark.operators import register
 from copy_databasetables_spark.operators._helpers import ckpt
 
@@ -661,6 +661,9 @@ _BM25_B = 0.75
 _BM25_QUERY = ("hash", "merge", "window")
 _BM25_IN = ", ".join(f"'{t}'" for t in _BM25_QUERY)
 _BM25_TOPN = 20
+#: the persisted index's artifacts, as ``_bm25_index_build`` writes them
+_BM25_POSTINGS = "term string, doc_id bigint, tf bigint, dl int, df bigint"
+_BM25_STATS = "n_docs bigint, avgdl double"
 
 
 #: shared by q_text_bm25 and q_text_bm25_persisted — the persisted
@@ -792,13 +795,15 @@ def q_text_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
       for a term-bucketed layout at 10B docs.
     - ``stats/`` — the single (n_docs, avgdl) row.
 
-    The query leg reads both back and pays |Q|-bounded work: a pruned
-    postings scan, the one-row stats broadcast, the per-doc score sum,
-    and a TakeOrdered top-N. No tokenize, no explode, no corpus-sized
-    read or shuffle at query time — plan-pinned (no Generate node;
-    In(term) reaches PushedFilters). df per term counts the term's
-    postings (each is one distinct (doc, term)) — identical to the
-    base op's count_distinct(doc_id). Values are identical to
+    The query leg reads both back with the schemas the build wrote
+    (``_BM25_POSTINGS``, ``_BM25_STATS``; a stale index raises) and
+    pays |Q|-bounded work: a pruned postings scan, the one-row stats
+    broadcast, the per-doc score sum, and a TakeOrdered top-N. No
+    tokenize, no explode, no corpus-sized read or shuffle at query
+    time — plan-pinned (no Generate node; In(term) reaches
+    PushedFilters). df per term counts the term's postings (each is one
+    distinct (doc, term)) — identical to the base op's
+    count_distinct(doc_id). Values are identical to
     q_text_bm25 by construction, which the shared oracle pins.
 
     Accepted ulp risk (ADVICE r13, noted not "fixed"): the ≤|Q|=3-term
@@ -885,11 +890,15 @@ def _bm25_index_build(spark: SparkSession, sf_dir: str) -> str:
 def _bm25_query_leg(spark: SparkSession, path: str) -> DataFrame:
     """The BM25 QUERY leg: |Q|-bounded work against the read-back index
     — pruned postings scan (df rides the postings), one-row stats
-    broadcast, per-doc sum, TakeOrdered top-N."""
-    p = spark.read.parquet(f"{path}/postings").where(
+    broadcast, per-doc sum, TakeOrdered top-N. Both artifacts are read
+    by ``read_written`` with the schema the build wrote, so no
+    schema-inference job runs, and an index whose footer schema differs
+    (a stale build, a retyped or missing column) raises instead of
+    scoring NULLs."""
+    p = read_written(spark, f"{path}/postings", _BM25_POSTINGS).where(
         F.col("term").isin(*_BM25_QUERY)
     )
-    st = F.broadcast(spark.read.parquet(f"{path}/stats"))
+    st = F.broadcast(read_written(spark, f"{path}/stats", _BM25_STATS))
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )

@@ -54,13 +54,28 @@ REQUIRED_RUNTIME_CONFS = {
 }
 
 
+#: The confs that set a shuffle's width: AQE starts every exchange at
+#: initialPartitionNum, so shuffle.partitions alone does not.
+_PARTITION_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+)
+#: The session conf that holds a ``set_shuffle_partitions`` count.
+_EXPLICIT_PARTITIONS = "spark.graft.shufflePartitions"
+
+
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply REQUIRED_RUNTIME_CONFS to an existing session (idempotent).
+    """Apply REQUIRED_RUNTIME_CONFS to an existing session (idempotent),
+    with both partition confs at the ``set_shuffle_partitions`` count
+    when one is set.
 
     The correctness driver constructs its own SparkSession; every query
     entry point calls this defensively before touching testdata.
     """
-    for key, value in REQUIRED_RUNTIME_CONFS.items():
+    confs = REQUIRED_RUNTIME_CONFS
+    if (n := spark.conf.get(_EXPLICIT_PARTITIONS, None)) is not None:
+        confs = {**confs, **dict.fromkeys(_PARTITION_CONFS, n)}
+    for key, value in confs.items():
         try:
             spark.conf.set(key, value)
         except Exception:
@@ -68,6 +83,17 @@ def configure_session(spark: SparkSession) -> SparkSession:
             # effective value is wrong, which the loader will surface.
             pass
     return spark
+
+
+def set_shuffle_partitions(spark: SparkSession, n: int | None) -> SparkSession:
+    """Run every shuffle of ``spark`` at exactly ``n`` partitions: set
+    both partition confs to ``n`` and keep them there through every
+    later ``configure_session``. ``None`` restores the defaults."""
+    if n is None:
+        spark.conf.unset(_EXPLICIT_PARTITIONS)
+    else:
+        spark.conf.set(_EXPLICIT_PARTITIONS, str(n))
+    return configure_session(spark)
 
 
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -102,18 +128,18 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32) for local runs;
     on a real cluster pass ``None`` with a spark-submit-provided master.
+    ``shuffle_partitions`` runs every shuffle at exactly that count
+    (``set_shuffle_partitions``); ``None`` keeps the defaults, 32
+    partitions that AQE starts at 512.
     """
     _ensure_worker_pythonpath()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -122,4 +148,4 @@ def get_spark(
     )
     for key, value in REQUIRED_RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    return configure_session(builder.getOrCreate())
+    return set_shuffle_partitions(builder.getOrCreate(), shuffle_partitions)

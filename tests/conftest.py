@@ -14,5 +14,5 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("tests", master="local[8]")
     yield s

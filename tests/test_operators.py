@@ -662,16 +662,24 @@ def _cc_cases():
 
 
 def test_local_contract_keeps_connectivity():
-    """``_local_contract`` alone (plain pandas, no Spark): its star
-    edges are symmetric, cover every input vertex, label with the same
-    components as the input, and an empty partition emits nothing."""
+    """``_local_contract`` and ``_local_components`` alone (plain pandas,
+    no Spark): the star edges are symmetric, cover every input vertex
+    and label with the same components as the input; the components
+    are the reference labels with their sizes; an empty partition emits
+    nothing from either."""
+    from collections import Counter
+
     import pandas as pd
 
-    from copy_databasetables_spark.operators.dedup import _local_contract
+    from copy_databasetables_spark.operators.dedup import (
+        _local_components,
+        _local_contract,
+    )
 
-    assert list(_local_contract(iter([]))) == []
     empty = pd.DataFrame({"doc_id_a": [], "doc_id_b": []}, dtype="int64")
-    assert list(_local_contract(iter([empty]))) == []
+    for body in (_local_contract, _local_components):
+        assert list(body(iter([]))) == []
+        assert list(body(iter([empty]))) == []
     for name, pairs in _cc_cases().items():
         half = len(pairs) // 2
         batches = [
@@ -681,24 +689,40 @@ def test_local_contract_keeps_connectivity():
         out = pd.concat(list(_local_contract(iter(batches))))
         star = list(zip(out["src"].tolist(), out["dst"].tolist()))
         assert set(star) == {(d, s) for s, d in star}, name
-        assert _uf_min_labels(star) == _uf_min_labels(pairs), name
+        ref = _uf_min_labels(pairs)
+        assert _uf_min_labels(star) == ref, name
+        (comp,) = _local_components(iter(batches))
+        sizes = Counter(ref.values())
+        assert {
+            (d, c, n) for d, c, n in comp.itertuples(index=False)
+        } == {(d, c, sizes[c]) for d, c in ref.items()}, name
 
 
-def test_cluster_over_pairs_matches_union_find(spark):
-    """``_cluster_over_pairs`` (contraction + verifying probe loop)
-    labels every vertex of every case with the reference union-find's
-    component minimum, with matching cluster sizes."""
+def test_cluster_over_pairs_matches_union_find(spark, monkeypatch):
+    """``_cluster_over_pairs`` labels every vertex of every case with the
+    reference union-find's component minimum, with matching cluster
+    sizes — on both paths: the one-pass ``_local_components`` at one
+    partition, and contraction + ``_min_label_propagate`` when
+    ``_pair_parts`` asks for 3 (the sparse 2000-vertex graph is left to
+    the one-pass path, as in the test below)."""
     from collections import Counter
 
-    from copy_databasetables_spark.operators.dedup import _cluster_over_pairs
+    from copy_databasetables_spark.operators import dedup
 
-    for name, pairs in _cc_cases().items():
-        ref = _uf_min_labels(pairs)
-        df = spark.createDataFrame(pairs, "doc_id_a long, doc_id_b long")
-        rows = _cluster_over_pairs(spark, df).collect()
-        assert {r["doc_id"]: r["cluster_id"] for r in rows} == ref, name
-        sizes = Counter(ref.values())
-        assert all(r["n_members"] == sizes[r["cluster_id"]] for r in rows), name
+    for parts in (1, 3):
+        monkeypatch.setattr(dedup, "_pair_parts", lambda spark, n, p=parts: p)
+        for name, pairs in _cc_cases().items():
+            if parts > 1 and name == "random_2000v_1200e":
+                continue
+            ref = _uf_min_labels(pairs)
+            df = spark.createDataFrame(pairs, "doc_id_a long, doc_id_b long")
+            rows = dedup._cluster_over_pairs(spark, df).collect()
+            got = {r["doc_id"]: r["cluster_id"] for r in rows}
+            assert got == ref, (parts, name)
+            sizes = Counter(ref.values())
+            assert all(
+                r["n_members"] == sizes[r["cluster_id"]] for r in rows
+            ), (parts, name)
 
 
 @pytest.mark.parametrize("parts", [3, 8])
@@ -728,7 +752,7 @@ def test_contracted_partitions_converge_to_union_find(spark, parts):
 
 def _build_jobs(spark, key: str) -> int:
     """Spark jobs one call of query ``key`` runs before it returns its
-    DataFrame (sf0.001; the fixture's local[8], 8 shuffle partitions)."""
+    DataFrame (sf0.001; the fixture's local[8], default partitions)."""
     from copy_databasetables_spark.operators import all_queries
     from tests.conftest import SF_SMOKE
 
@@ -744,9 +768,9 @@ def _build_jobs(spark, key: str) -> int:
 
 
 _DEDUP_BUILD_JOBS = [
-    ("q_dedup_cluster", 14),
-    ("q_dedup_cluster_lsh", 18),
-    ("q_dedup_survivor_pagerank", 19),
+    ("q_dedup_cluster", 4),
+    ("q_dedup_cluster_lsh", 7),
+    ("q_dedup_survivor_pagerank", 8),
     ("q_dedup_minhash_est", 2),
     ("q_dedup_incremental", 2),
 ]
@@ -757,25 +781,53 @@ _DEDUP_BUILD_JOBS = [
 )
 def test_dedup_build_job_count(spark, key, bound):
     """Eager jobs a dedup build runs before it returns, pinned at the
-    measured count + 1 (the highest of repeated builds where it varies
-    by one). Local contraction leaves the CC probe loop one converging
-    round and one verifying probe, and the pair count and each round's
-    label sum are observed on the checkpoint jobs that materialize
-    them: ``q_dedup_cluster`` ran 39–41 jobs before the contraction
-    pass, 17–18 with it, 13–14 once the counts were observed.
-    Measured: cluster_lsh 16–17, survivor_pagerank 17–18, minhash_est
-    and incremental 1 (the shuffle below the token-hash checkpoint,
-    which AQE runs when that checkpoint is planned)."""
+    measured count + 1. Below 250k pairs CC runs no job of its own: the
+    pair checkpoint (its count observed on that job) is the last, and
+    the union-find is a lazy pass over it. ``q_dedup_cluster`` ran
+    39–41 jobs with the min-label loop on the raw pairs, 13–14 with
+    contraction and a verifying probe, 3 now. Measured over six builds
+    each: cluster_lsh 6, survivor_pagerank 7, minhash_est and
+    incremental 1 (the shuffle below the token-hash checkpoint, which
+    AQE runs when that checkpoint is planned)."""
     assert 1 <= _build_jobs(spark, key) <= bound
+
+
+@pytest.mark.parametrize("stale", ["tf_as_int", "df_missing"])
+def test_bm25_query_leg_rejects_stale_index(spark, tmp_path, stale):
+    """An index whose postings were written with another schema — ``tf``
+    as int, or without ``df`` — raises in the query leg instead of
+    widening ``tf`` or scoring a missing ``df`` as NULL."""
+    from copy_databasetables_spark.operators.text import _bm25_query_leg
+
+    cols = {
+        "tf_as_int": "term, doc_id, cast(tf as int) as tf, dl, df",
+        "df_missing": "term, doc_id, tf, dl",
+    }[stale]
+    spark.sql(
+        "select 'hash' as term, 1L as doc_id, 2L as tf, 7 as dl, 1L as df"
+    ).selectExpr(*cols.split(", ")).write.parquet(f"{tmp_path}/postings")
+    spark.sql("select 1L as n_docs, 7d as avgdl").write.parquet(
+        f"{tmp_path}/stats"
+    )
+    with pytest.raises(ValueError, match="written as"):
+        _bm25_query_leg(spark, str(tmp_path)).collect()
 
 
 def test_bm25_persisted_build_job_count(spark):
     """The BM25 index is written in one pass (postings with df, one
     shuffle, corpus stats observed on that write, stats from literals),
-    and the query leg reads no df artifact. A ``q_text_bm25_persisted``
-    build ran 12 Spark jobs with three corpus-derived sinks and runs 5
-    now."""
-    assert 1 <= _build_jobs(spark, "q_text_bm25_persisted") <= 5
+    and the query leg reads both artifacts with their written schemas,
+    so no inference job runs. A ``q_text_bm25_persisted`` build ran 12
+    Spark jobs with three corpus-derived sinks, 5 with inferred reads,
+    and runs 3 now."""
+    assert 1 <= _build_jobs(spark, "q_text_bm25_persisted") <= 4
+
+
+def test_ivf_pq_persisted_build_job_count(spark):
+    """The IVF-PQ index's read-back (assign cells, codes, codebook) runs
+    no schema-inference job: a ``q_sim_ivf_pq_persisted`` build ran 19
+    Spark jobs with inferred reads and runs 16 now."""
+    assert 1 <= _build_jobs(spark, "q_sim_ivf_pq_persisted") <= 17
 
 
 @pytest.mark.parametrize("exchange", [False, True])

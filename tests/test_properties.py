@@ -209,8 +209,14 @@ def test_results_invariant_under_shuffle_partition_count(spark):
     dependence on partition boundaries (a first()/limit leak, an
     unseeded per-partition tiebreak, float accumulation order) shows up
     as a diff here long before it shows up on a 1000-executor
-    cluster."""
+    cluster. The effective counts are asserted after every run: each
+    operator re-applies the session confs, which must keep both."""
     from copy_databasetables_spark.operators import all_queries
+    from copy_databasetables_spark.session import (
+        _PARTITION_CONFS,
+        REQUIRED_RUNTIME_CONFS,
+        set_shuffle_partitions,
+    )
 
     sf = "/root/testdata/sf0.001"
     qs = all_queries()
@@ -222,17 +228,21 @@ def test_results_invariant_under_shuffle_partition_count(spark):
         "q_sim_ivf_kscaled_persisted",
     ]
     conf = spark.conf
-    saved = conf.get("spark.sql.shuffle.partitions")
     try:
         results = {}
-        for n_shuffle in ("5", saved):
-            conf.set("spark.sql.shuffle.partitions", n_shuffle)
+        for n_shuffle in (5, None):
+            set_shuffle_partitions(spark, n_shuffle)
+            want = [
+                str(n_shuffle) if n_shuffle else REQUIRED_RUNTIME_CONFS[k]
+                for k in _PARTITION_CONFS
+            ]
             for op in ops:
                 rows = sorted(
                     tuple(r) for r in qs[op](spark, sf).collect()
                 )
                 results.setdefault(op, []).append(rows)
+                assert [conf.get(k) for k in _PARTITION_CONFS] == want, op
     finally:
-        conf.set("spark.sql.shuffle.partitions", saved)
+        set_shuffle_partitions(spark, None)
     for op, (a, b) in results.items():
         assert a == b, f"{op} changed under a different shuffle-partition count"

@@ -114,9 +114,10 @@ def main() -> int:
     ap.add_argument(
         "--shuffle-partitions",
         type=int,
-        default=8,
+        default=None,
         metavar="N",
-        help="shuffle-partition count for the Spark session (default 8). "
+        help="run every shuffle at exactly N partitions (default: the "
+        "engine's 32, which AQE starts at 512). "
         "Running the whole gate under a DIFFERENT count is the "
         "cluster-resize adversarial check: every operator's value hash "
         "must be partition-count-invariant, so any hidden dependence on "

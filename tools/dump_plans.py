@@ -138,14 +138,17 @@ NOTES.update(
             "doc_id (no broadcast hints anywhere in the pipeline)."
         ),
         "q_dedup_cluster": (
-            "The returned plan is only the cluster-size window over the "
-            "converged labels' checkpoint. Pair generation "
-            "(dedup._exact_tau_pairs), the per-partition contraction "
+            "The returned plan is one MapInPandas "
+            "(dedup._local_components) over the checkpointed pairs, "
+            "coalesced to one partition: below 250k pairs the whole "
+            "graph's union-find runs there and emits every vertex's "
+            "component minimum and size. Pair generation "
+            "(dedup._exact_tau_pairs) sits below the pair checkpoint; "
+            "`--digest` hashes it too. Above that, the contraction "
             "(dedup._local_contract) and each probe round of "
-            "dedup._min_label_propagate sit below checkpoints; "
-            "`--digest` hashes all of them. Each round's message join and "
-            "min-aggregate key on doc_id, and its convergence check is a "
-            "label sum observed on the round's checkpoint job."
+            "dedup._min_label_propagate are checkpoints of their own, "
+            "and the plan is the cluster-size window over the converged "
+            "labels."
         ),
         "q_emb_outlier": (
             "The centroid side is |labels| rows (two-phase aggregate "
@@ -368,7 +371,7 @@ def main() -> None:
     ap.add_argument("--digest", nargs="+", metavar="KEY",
                     help="print each key's plan digest instead of PLANS.md")
     args = ap.parse_args()
-    spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("plans", master="local[8]")
     qs = operators.all_queries()
     if args.digest:
         for key in args.digest:

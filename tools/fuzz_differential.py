@@ -1152,7 +1152,7 @@ def main() -> int:
 
     sf_dir = f"/root/testdata/{args.sf}"
     con = check.duck_connect(sf_dir)
-    spark = get_spark("fuzz", shuffle_partitions=8)
+    spark = get_spark("fuzz")
     gen = Gen(con, sf_dir)
 
     seeds = args.seed_list if args.seed_list is not None else range(args.seeds)

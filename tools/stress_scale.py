@@ -54,7 +54,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from copy_databasetables_spark import get_spark  # noqa: E402
-from copy_databasetables_spark.io import TABLES, load_table, table_path  # noqa: E402
+from copy_databasetables_spark.io import (  # noqa: E402
+    TABLES,
+    load_table,
+    read_written,
+    table_path,
+)
 from copy_databasetables_spark.operators import all_queries  # noqa: E402
 
 OPS = [
@@ -337,6 +342,8 @@ def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 5) -> dict:
     from pyspark.sql import functions as F
 
     from copy_databasetables_spark.operators.similarity import (
+        _CODEBOOK_COLS,
+        _CODES_COLS,
         _centroids,
         _ivf_assign,
         _ivf_top_k,
@@ -371,11 +378,11 @@ def ivfpq_search_ab(spark, sf_dir: str, out_base: str, runs: int = 5) -> dict:
             for r in _probe_cells(probes, cents, 1).select("cid").distinct().collect()
         ]
         cell_codes = _read_cells(
-            spark, f"{idx}/codes_by_cell", "vec_id", "m", "code_id"
+            spark, f"{idx}/codes_by_cell", _CODES_COLS
         ).where(F.col("cid").isin(cells))
         npq = _pq_decode(
             cell_codes.select("vec_id", "m", "code_id"),
-            spark.read.parquet(f"{idx}/codebook"),
+            read_written(spark, f"{idx}/codebook", _CODEBOOK_COLS),
         )
         # one code row per (vector, subspace): the m=0 slice is the
         # assignment, as in the CDC query leg
