@@ -17,10 +17,13 @@ Spark-first re-expression:
 Scale notes (100 TB): a copy is scan → write with NO shuffle unless
 repartitioning is requested; both sides stream per-partition. Verifying
 is one pass per side: the write observes the count (and checksum) of its
-rows; ONE aggregate over the files, read with the written schema (no
-inference job), recomputes it — 3 Spark jobs a table under AQE.
-``verify_copy`` runs the same target check on an existing copy, with
-one aggregate over the source as the expectation. Re-runs
+rows; ONE observed scan of the files, read with the written schema (no
+inference job) into a noop sink, recomputes it — 2 Spark jobs a table,
+neither with an exchange. ``verify_copy`` runs the same target check on
+an existing copy, with one observed scan of the source as the
+expectation. The modes that read an existing target (merge, delete,
+SCD2, CDC, incremental) read it with the schema its footer records
+(``_read_target_if_exists``). Re-runs
 overwrite partitioned tables by partition (partitionOverwriteMode=dynamic).
 """
 
@@ -36,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from copy_databasetables_spark.io import footer_schema, load_table
+from copy_databasetables_spark.io import footer_schema, load_table, read_written
 
 #: FK-respecting order (FIXTURES.md): parents before children, so a
 #: relational target with constraints can load without violations.
@@ -93,7 +96,17 @@ def checksum_aggs(columns: list[str]) -> list:
 
 def content_checksum(df: DataFrame) -> tuple:
     """Order-insensitive content checksum over all columns, one pass."""
-    return tuple(df.agg(*checksum_aggs(df.columns)).first())
+    return tuple(_observed(df, checksum_aggs(df.columns)).values())
+
+
+def _observed(df: DataFrame, aggs: list) -> dict:
+    """``aggs`` over ``df`` in ONE Spark job: an ``Observation`` on a
+    noop-sink write of the scan, so no aggregate exchange and no final
+    stage. The scan's result stage reports it: a result task's metrics
+    count once even when the task is retried."""
+    seen = Observation()
+    df.observe(seen, *aggs).write.format("noop").mode("overwrite").save()
+    return seen.get
 
 
 @dataclass
@@ -135,23 +148,27 @@ def _verify_target(
     """The engine's one target check: ``path`` must hold the rows of
     ``like`` (partitioned by ``by``) whose ``checksum_aggs`` values are
     ``want`` (the count alone, or the full triple); returns the row
-    count. ONE aggregate over the files, read back with ``like``'s schema
-    (no inference job), recomputes them. With the triple the footer's
-    column types must match too: the reader widens e.g. int32 file
+    count. ONE observed scan of the files (``_observed``: one job, no
+    exchange), read back with ``like``'s schema (no inference job),
+    recomputes them. With the triple the footer's column types must
+    match too (``read_written``): the reader widens e.g. int32 file
     columns to bigint, and xxhash64 hashes a short as an int and binary
     as string bytes. A file whose footer carries no Spark schema
     (written by another engine) is a mismatch. A missing ``path`` raises
     Spark's own error; any other failure to read the files back is a
     ``CopyVerificationError``."""
-    back = like.sparkSession.read.schema(like.schema).parquet(path)
-    cols = T.StructType([f for f in like.schema if f.name != by]).simpleString()
-    if len(want) > 1 and (landed := footer_schema(path)) != cols:
-        raise CopyVerificationError(
-            f"{label}: schema/content error: target is {landed}, expected {cols}"
+    spark = like.sparkSession
+    try:
+        back = (
+            read_written(spark, path, like.schema, by)
+            if len(want) > 1
+            else spark.read.schema(like.schema).parquet(path)
         )
+    except ValueError as err:
+        raise CopyVerificationError(f"{label}: schema/content error: {err}") from err
     aggs = checksum_aggs(like.columns)[: len(want)]
     try:
-        got = back.select(*like.columns).agg(*aggs).first().asDict()
+        got = _observed(back.select(*like.columns), aggs)
     except Exception as err:
         first_line = str(err).partition("\n")[0]
         raise CopyVerificationError(
@@ -193,12 +210,13 @@ def verify_copy(
 ) -> int:
     """Re-verify an existing copy of ``table`` at ``target_path`` without
     copying (incident re-checks, scheduled integrity sweeps): ONE
-    aggregate over the source is the expectation for the same target
-    check a copy runs, column types included under ``verify_checksum``.
-    Returns the row count; raises ``CopyVerificationError`` on mismatch."""
+    observed scan of the source is the expectation for the same target
+    check a copy runs, column types included under ``verify_checksum``
+    — 2 Spark jobs. Returns the row count; raises
+    ``CopyVerificationError`` on mismatch."""
     src = load_table(spark, sf_dir, table)
-    want = src.agg(*checksum_aggs(src.columns)[: 3 if verify_checksum else 1])
-    return _verify_target(src, target_path, table, want.first().asDict())
+    want = _observed(src, checksum_aggs(src.columns)[: 3 if verify_checksum else 1])
+    return _verify_target(src, target_path, table, want)
 
 
 def copy_table_mapped(
@@ -252,10 +270,19 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     error) re-raises: treating it as 'first run' would make the caller
     OVERWRITE the target with source-only data — for merge that silently
     deletes every target-only row; for incremental it turns a blip into
-    a full rewrite."""
+    a full rewrite.
+
+    An unpartitioned target whose footer records a Spark schema (every
+    target this engine writes) is read with that schema, so no
+    schema-inference job runs. A target with ``key=value`` partition
+    directories, or written by another engine, is read by inference."""
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    schema = footer_schema(path)
+    parted = any(os.path.isdir(d) for d in glob.glob(glob.escape(path) + "/*=*"))
+    if schema is None or parted:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 #: parquet physical types whose row-group min/max stats are exact and
@@ -332,7 +359,7 @@ def copy_table_incremental(
         src.write.mode("overwrite").parquet(target_path)
     else:
         src.where(F.col(key) > F.lit(hwm)).write.mode("append").parquet(target_path)
-    copied = spark.read.parquet(target_path)
+    copied = _read_target_if_exists(spark, target_path)
     n_src, n_dst = src.count(), copied.count()
     if n_src != n_dst:
         raise CopyVerificationError(

@@ -259,17 +259,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def footer_schema(path: str) -> str:
+def footer_schema(path: str) -> T.StructType | None:
     """The schema Spark recorded in the footer of the first parquet file
     under ``path`` (partition directories included): what its schema
-    inference would read, without inference's Spark job. A file written
-    by another engine carries no Spark schema and reads as ``struct<>``."""
+    inference would read, without inference's Spark job. ``None`` when
+    there is no file, or its writer (another engine) recorded no Spark
+    schema."""
     import pyarrow.parquet as pq
 
     files = sorted(glob.glob(glob.escape(path) + "/**/*.parquet", recursive=True))
     meta = (pq.read_schema(files[0]).metadata if files else None) or {}
-    rec = meta.get(b"org.apache.spark.sql.parquet.row.metadata", b'{"fields": []}')
-    return T.StructType.fromJson(json.loads(rec)).simpleString()
+    rec = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return T.StructType.fromJson(json.loads(rec)) if rec else None
 
 
 def read_written(
@@ -283,8 +284,9 @@ def read_written(
     widening a narrower type."""
     df = spark.read.schema(schema).parquet(path)
     want = T.StructType([f for f in df.schema if f.name != by]).simpleString()
-    if (landed := footer_schema(path)) != want:
-        raise ValueError(f"{path}: written as {landed}, read as {want}")
+    landed = footer_schema(path)
+    if (got := landed.simpleString() if landed else "no Spark schema") != want:
+        raise ValueError(f"{path}: written as {got}, read as {want}")
     return df
 
 

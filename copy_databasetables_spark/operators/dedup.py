@@ -1222,8 +1222,7 @@ def q_dedup_survivor_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     SemDeDup-style pipeline ships (embed → scaled-LSH candidates →
     exact-cosine verify → CC → quality pick). q_dedup_survivor_lsh with
     the pair source swapped to sign-LSH."""
-    clusters = _cluster_over_pairs(spark, _scaled_pair_frame(spark, sf_dir))
-    return _survivor_over_clusters(spark, sf_dir, clusters)
+    return _survivor_over_pairs(spark, sf_dir, _scaled_pair_frame(spark, sf_dir))
 
 
 _BUCKET_CAP = 40  # max docs per (lang, band, bucket) before it's "boilerplate"
@@ -1428,25 +1427,28 @@ def q_dedup_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate cluster keep the highest-quality member (longest
     text, ``n_chars``; min doc_id on ties) and flag the rest droppable.
     Min-doc_id survivors would bias toward whatever was crawled first.
-    ``_survivor_over_clusters`` over q_dedup_cluster."""
-    return _survivor_over_clusters(spark, sf_dir, q_dedup_cluster(spark, sf_dir))
+    ``_survivor_over_pairs`` over q_dedup_cluster's pairs."""
+    return _survivor_over_pairs(spark, sf_dir, q_dedup_near(spark, sf_dir))
 
 
-def _survivor_over_clusters(
-    spark: SparkSession, sf_dir: str, clusters: DataFrame
+def _survivor_over_pairs(
+    spark: SparkSession, sf_dir: str, pair_df: DataFrame
 ) -> DataFrame:
-    """(doc_id, cluster_id, n_members) clusters → (doc_id, cluster_id,
-    n_members, keep): per cluster the longest ``n_chars`` wins, min
-    doc_id on ties.
+    """A pair-contract frame's clusters (``_cluster_over_pairs``) →
+    (doc_id, cluster_id, n_members, keep): per cluster the longest
+    ``n_chars`` wins, min doc_id on ties.
 
     The clusters are vertex-sized (docs in ≥ 1 pair), so the quality
-    join broadcasts them against the corpus scan — but only below
-    ``_SURVIVOR_BROADCAST_MAX_ROWS`` counted rows: in a
+    join broadcasts them against the corpus scan — but only while they
+    can have at most ``_SURVIVOR_BROADCAST_MAX_ROWS`` rows: in a
     boilerplate-heavy corpus they can be a large share of it, and past
-    the threshold a shuffle join is the right plan. The count is one
-    job over the checkpointed labels; the pick is one row_number window
-    per cluster."""
-    if clusters.count() <= _SURVIVOR_BROADCAST_MAX_ROWS:
+    the threshold a shuffle join is the right plan. A pair names at
+    most 2 vertices, so the bound is 2 × the pair count ``_pair_ckpt``
+    observed, and the choice costs no job; the pick is one row_number
+    window per cluster."""
+    pairs, n_pairs = _pair_ckpt(pair_df)
+    clusters = _cluster_over_pairs(spark, pairs, n_pairs)
+    if 2 * n_pairs <= _SURVIVOR_BROADCAST_MAX_ROWS:
         clusters = F.broadcast(clusters)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     w = Window.partitionBy("cluster_id").orderBy(
@@ -1468,9 +1470,7 @@ def q_dedup_survivor_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale dedup decision: banded candidates → exact-Jaccard
     verify → CC → per-cluster quality winner (cluster_lsh α 0.37 at the
     10× stress step, SCALE.md). q_dedup_survivor is the exact twin."""
-    return _survivor_over_clusters(
-        spark, sf_dir, q_dedup_cluster_lsh(spark, sf_dir)
-    )
+    return _survivor_over_pairs(spark, sf_dir, q_dedup_minhash(spark, sf_dir))
 
 
 def _min_label_propagate(

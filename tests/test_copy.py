@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import os
+import uuid
 
 import pytest
 
@@ -97,23 +98,133 @@ def test_copy_verification_raises_on_divergent_target(spark, tmp_path, monkeypat
         copy_table(spark, SF_SMOKE, "nation", str(tmp_path / "nation"), verify_checksum=True)
 
 
-def test_verified_copy_runs_at_most_three_jobs(spark, tmp_path):
-    """One pass per side: the write job observes the verification triple
-    and ONE aggregate over the written files recomputes it (its shuffle
-    stage is a job of its own under AQE). No source re-scan and no
-    schema-inference job."""
+def _jobs(spark, run) -> tuple[int, object]:
+    """The number of Spark jobs ``run()`` runs, and its result."""
     sc = spark.sparkContext
-    group = "test_verified_copy_jobs"
-    sc.setJobGroup(group, "copy_table with checksum verification")
+    group = f"test_copy_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "copy engine job count")
     try:
-        res = copy_table(
-            spark, SF_SMOKE, "orders", str(tmp_path / "orders"), verify_checksum=True
-        )
+        res = run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), res
+
+
+def test_verified_copy_runs_at_most_two_jobs(spark, tmp_path):
+    """One pass per side: the write job observes the verification triple
+    and ONE observed scan of the written files recomputes it. No
+    aggregate exchange (under AQE its final stage would be a third
+    job), no source re-scan and no schema-inference job."""
+    target = str(tmp_path / "orders")
+    n, res = _jobs(
+        spark, lambda: copy_table(spark, SF_SMOKE, "orders", target, verify_checksum=True)
+    )
     assert res.rows_copied == 1500
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert 1 <= n <= 2
+
+
+def test_verify_copy_with_checksum_runs_at_most_two_jobs(spark, tmp_path):
+    """``verify_copy`` observes the source triple on one scan and checks
+    the target with the copy's own one-scan check: 2 jobs (4 with an
+    aggregate on each side)."""
+    from copy_databasetables_spark.copy.engine import verify_copy
+
+    target = str(tmp_path / "orders")
+    copy_table(spark, SF_SMOKE, "orders", target, verify_checksum=True)
+    n, rows = _jobs(
+        spark, lambda: verify_copy(spark, SF_SMOKE, "orders", target, verify_checksum=True)
+    )
+    assert rows == 1500
+    assert 1 <= n <= 2
+
+
+def test_cdc_apply_on_existing_target_runs_at_most_four_jobs(spark, tmp_path):
+    """A CDC apply onto an existing target infers the change log's
+    schema (1 job), reads the target with its footer schema (no job),
+    writes the staged state (its shuffle and result stages are a job
+    each under AQE) and checks it with one observed scan: 4 jobs, 6
+    with an inferred target read and an aggregate check."""
+    from copy_databasetables_spark.copy.engine import cdc_apply_table
+
+    target, log = str(tmp_path / "orders"), str(tmp_path / "log")
+    copy_table(spark, SF_SMOKE, "orders", target)
+    load_table(spark, SF_SMOKE, "orders").where("o_orderkey <= 40").selectExpr(
+        "*", "'D' AS op", "1L AS seq"
+    ).write.parquet(log)
+    n_deleted = load_table(spark, SF_SMOKE, "orders").where("o_orderkey <= 40").count()
+    n, res = _jobs(
+        spark, lambda: cdc_apply_table(spark, log, "orders", target, "o_orderkey")
+    )
+    assert res.rows_copied == 1500 - n_deleted
+    assert 1 <= n <= 4
+
+
+def _pyarrow_target(spark, path: str) -> None:
+    """A copy of nation written by pyarrow: no Spark schema in the footer."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    src = pq.read_table(os.path.join(SF_SMOKE, "nation.parquet"))
+    pq.write_table(src, os.path.join(path, "part-0.parquet"))
+
+
+#: Target layouts ``_read_target_if_exists`` reads: how each is made, and
+#: whether it is read with its footer schema (no job) or by inference.
+_TARGETS = {
+    "unpartitioned": (
+        lambda spark, p: copy_table(spark, SF_SMOKE, "nation", p), True
+    ),
+    "partitioned": (
+        lambda spark, p: copy_table(
+            spark, SF_SMOKE, "nation", p, partition_by="n_regionkey"
+        ),
+        False,
+    ),
+    "pyarrow_written": (_pyarrow_target, False),
+}
+
+
+@pytest.mark.parametrize("layout", sorted(_TARGETS))
+def test_target_reader_matches_inference(spark, tmp_path, layout):
+    """Merge, delete, SCD2, CDC and incremental copies read an existing
+    target with the Spark schema in its footer, so no inference job
+    runs. A partitioned target (whose footers lack the partition column)
+    and one another engine wrote (no Spark schema) fall back to
+    inference. Every layout reads the schema and rows inference does."""
+    from copy_databasetables_spark.copy.engine import _read_target_if_exists
+    from copy_databasetables_spark.io import footer_schema
+
+    path = str(tmp_path / "nation")
+    make, by_footer = _TARGETS[layout]
+    make(spark, path)
+    n, got = _jobs(spark, lambda: _read_target_if_exists(spark, path))
+    inferred = spark.read.parquet(path)
+    assert got.schema == inferred.schema
+    assert "n_regionkey" in got.columns
+    assert (n == 0) == by_footer
+    assert (footer_schema(path) is None) == (layout == "pyarrow_written")
+    assert got.exceptAll(inferred).count() == 0 and got.count() == 25
+
+
+def test_empty_table_passes_verified_copy(spark, tmp_path):
+    """A 0-row table copies and verifies: the write still lands one file
+    carrying the schema, and both sides observe (0, NULL, NULL)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from copy_databasetables_spark.copy.engine import verify_copy
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([], pa.int32()), "r_name": pa.array([], pa.string())}),
+        str(sf / "region.parquet"),
+    )
+    target = str(tmp_path / "region")
+    res = copy_table(spark, str(sf), "region", target, verify_checksum=True)
+    assert res.rows_copied == 0 and res.verified
+    assert verify_copy(spark, str(sf), "region", target, verify_checksum=True) == 0
 
 
 def test_copy_tables_fk_order(spark):

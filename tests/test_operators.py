@@ -792,6 +792,16 @@ def test_dedup_build_job_count(spark, key, bound):
     assert 1 <= _build_jobs(spark, key) <= bound
 
 
+def test_survivor_runs_no_more_build_jobs_than_cluster(spark):
+    """The survivor pick adds no eager job to CC: its broadcast choice
+    comes from the pair count the pair checkpoint observed, not from a
+    count of the clusters, which on the one-pass path re-ran the whole
+    union-find (4 jobs against ``q_dedup_cluster``'s 3)."""
+    assert _build_jobs(spark, "q_dedup_survivor") <= _build_jobs(
+        spark, "q_dedup_cluster"
+    )
+
+
 @pytest.mark.parametrize("stale", ["tf_as_int", "df_missing"])
 def test_bm25_query_leg_rejects_stale_index(spark, tmp_path, stale):
     """An index whose postings were written with another schema — ``tf``

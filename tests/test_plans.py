@@ -56,8 +56,9 @@ def test_survivor_quality_join_broadcasts_cluster_side(spark):
     """q_dedup_survivor's corpus join must broadcast the (tiny,
     vertex-sized) cluster table — a shuffle here would re-shuffle the
     whole corpus at scale just to look up n_chars. The hint is gated on
-    a counted size (dedup._SURVIVOR_BROADCAST_MAX_ROWS); at smoke scale
-    the cluster table is far below the gate, so the hint must fire."""
+    a size bound (2 × the observed pair count against
+    dedup._SURVIVOR_BROADCAST_MAX_ROWS); at smoke scale the cluster
+    table is far below the gate, so the hint must fire."""
     p = plan(all_queries()["q_dedup_survivor"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in p
 
@@ -568,8 +569,8 @@ def test_scaled_embed_lsh_width_follows_corpus_size(spark):
 
 
 def test_survivor_broadcast_gate_falls_back_above_threshold(spark, monkeypatch):
-    """The other half of the size-driven proof: when the counted cluster
-    table exceeds the broadcast gate (threshold forced to 0 here), the
+    """The other half of the size-driven proof: when the cluster table's
+    bound exceeds the broadcast gate (threshold forced to 0 here), the
     survivor quality join must compile WITHOUT the broadcast hint —
     with auto-broadcast disabled too, a shuffle join. Together with
     test_survivor_quality_join_broadcasts_cluster_side this pins that
