@@ -272,12 +272,20 @@ def _read_target_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     deletes every target-only row; for incremental it turns a blip into
     a full rewrite.
 
-    An unpartitioned target whose footer records a Spark schema (every
-    target this engine writes) is read with that schema, so no
-    schema-inference job runs. A target with ``key=value`` partition
-    directories, or written by another engine, is read by inference."""
+    An existing target is read by ``_read_parquet``: with its footer's
+    Spark schema when unpartitioned (every target this engine writes),
+    else by inference."""
     if not os.path.exists(path):
         return None
+    return _read_parquet(spark, path)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet data at ``path``, read with the Spark schema its
+    footer records when it is unpartitioned, so no schema-inference job
+    runs; a ``key=value`` partitioned layout, a file from another
+    writer, or a missing path goes through inference (which raises for
+    a missing path)."""
     schema = footer_schema(path)
     parted = any(os.path.isdir(d) for d in glob.glob(glob.escape(path) + "/*=*"))
     if schema is None or parted:
@@ -667,8 +675,10 @@ def cdc_apply_table(
     old target while staging writes elsewhere, so an interrupted run
     leaves the previous state intact. A missing target bootstraps from
     an empty base (a pure-insert log materializes the initial state);
-    the staged count is verified against the count its write observed."""
-    changes = spark.read.parquet(changes_path)
+    the staged count is verified against the count its write observed.
+    Log and target are both read by ``_read_parquet``, so a log Spark
+    wrote costs no schema-inference job; a missing log raises."""
+    changes = _read_parquet(spark, changes_path)
     missing = [c for c in (key, op_col, seq_col) if c not in changes.columns]
     if missing:
         raise ValueError(

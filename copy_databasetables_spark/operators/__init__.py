@@ -67,6 +67,41 @@ _loaded = False
 #: keys on the shared probe and top-k plan pieces — the four whose
 #: optimized plan changed first.
 DRIVER_WINDOW: list[str] = [
+    # text and dedup keys on the shared window / span / BM25 pieces;
+    # optimized plan changed
+    "q_text_strip_spans",
+    "q_text_strip_spans_keep1",
+    "q_text_bm25_multi",
+    "q_text_keywords",
+    "q_text_ngrams",
+    "q_text_fingerprint",
+    "q_text_lm_bigram",
+    "q_text_collocations",
+    "q_dedup_substring",
+    "q_dedup_substring_minimizer",
+    "q_dedup_ngram",
+    "q_dedup_containment",
+    "q_dedup_cluster_containment",
+    # the other text keys
+    "q_text_bm25",
+    "q_text_bm25_persisted",
+    "q_text_wordcount",
+    "q_text_tfidf",
+    "q_text_stats",
+    "q_text_langid",
+    "q_text_quality",
+    "q_text_token_count",
+    "q_text_fuzzy_match",
+    "q_text_anonymize",
+    "q_text_boilerplate",
+    "q_text_chunk",
+    "q_text_repetition",
+    "q_text_lm_score",
+    "q_quality_cascade",
+    "q_text_phrase_search",
+    "q_text_entropy",
+    # the change log is read with its footer schema
+    "copy_table_cdc_apply",
     # dedup keys on the shared pair plan; plan columns renamed
     "q_dedup_embed",
     "q_dedup_embed_lsh",
@@ -76,51 +111,17 @@ DRIVER_WINDOW: list[str] = [
     "q_dedup_cluster_embed",
     "q_dedup_survivor_embed",
     "q_dedup_simhash",
-    "q_dedup_ngram",
     "q_dedup_incremental",
     "q_graph_triangles",
-    # dedup keys on the shared pair plan; plan identical
-    "q_dedup_cluster",
-    "q_dedup_cluster_lsh",
-    "q_dedup_cluster_containment",
-    "q_dedup_survivor",
-    "q_dedup_survivor_lsh",
-    "q_dedup_survivor_pagerank",
-    "q_dedup_exact",
-    "q_dedup_near",
-    "q_dedup_substring",
-    "q_dedup_substring_minimizer",
-    "q_dedup_minhash",
-    "q_dedup_minhash_capped",
-    "q_dedup_minhash_est",
-    "q_dedup_bucket_stats",
-    "q_dedup_lsh_recall",
-    "q_graph_pagerank",
-    "q_dedup_containment",
     # rewritten since their last attestation
     "q_sim_recall_report",
     "copy_table",
     "copy_table_partitioned",
     "copy_table_mapped",
     "copy_tables_many",
-    "copy_table_cdc_apply",
     "copy_table_scd2",
-    "q_text_bm25_persisted",
-    # similarity keys on the shared plan pieces; plan changed
     "q_sim_quantized",
     "q_sim_hard_negatives",
-    "q_sim_ivf_pq_rerank",
-    "q_emb_mrl_recall",
-    # similarity keys on the shared plan pieces; plan identical
-    "q_sim_topk",
-    "q_knn_label",
-    "q_sim_topk_blas",
-    "q_sim_ivf",
-    "q_sim_ivf_kscaled",
-    "q_sim_ivf_persisted",
-    "q_sim_ivf_kscaled_persisted",
-    "q_sim_ivf_multiprobe",
-    "q_sim_pq",
 ]
 
 def _prior_driver_green(repo: str | None = None) -> set[str]:

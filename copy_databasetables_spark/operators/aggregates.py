@@ -938,7 +938,7 @@ _CMS_D = 4   # hash rows (depth): P[err > ε] ≤ (1/2)^d per probe
 _CMS_W = 64  # buckets per row (width): E[err] ≤ n_rows / w per cell
 
 #: portable per-(key, seed) bucket — the md5-derived 60-bit integer both
-#: engines compute identically (dedup._H's idiom), reduced mod width.
+#: engines compute identically (_helpers._H's idiom), reduced mod width.
 _CMS_BUCKET = (
     "conv(substring(md5(concat(cast(user_id as string), '#', "
     "cast(seed as string))), 1, 15), 16, 10)"

@@ -49,12 +49,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from copy_databasetables_spark.io import load_table
-from copy_databasetables_spark.operators import register
+from copy_databasetables_spark.operators import _helpers, register
 from copy_databasetables_spark.operators._helpers import (
+    _D_H,
+    _H,
     _cosine_pre,
     ckpt,
     ckpt_observed,
     rz,
+    span_hashes,
+    token_windows,
 )
 
 # --- shared fragments ----------------------------------------------------
@@ -63,11 +67,6 @@ from copy_databasetables_spark.operators._helpers import (
 _TOKS = "array_distinct(split(text, ' '))"
 #: DuckDB: the same token set.
 _D_TOKS = "list_distinct(string_split(text, ' '))"
-
-#: Spark SQL: portable 60-bit hash of a string expression {x}.
-_H = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
-#: DuckDB: the same 60-bit hash.
-_D_H = "CAST(concat('0x', substring(md5({x}), 1, 15)) AS BIGINT)"
 
 #: Spark/DuckDB: hash each distinct token once (md5 → 60-bit int); the
 #: per-seed hash families below derive from this value arithmetically, so
@@ -419,11 +418,8 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NGRAM_TAU = 0.60
 
-#: Spark SQL: distinct bigram shingles (0-based [] indexing).
-_BIGRAMS = (
-    "array_distinct(transform(slice(split(text,' '), 1, size(split(text,' ')) - 1), "
-    "(t, i) -> concat(t, ' ', split(text,' ')[i + 1])))"
-)
+#: Spark SQL: distinct bigram shingles.
+_BIGRAMS = f"array_distinct({token_windows(2)})"
 #: DuckDB: the same shingles (1-based indexing, range(1,n) = [1..n-1]).
 _D_BIGRAMS = (
     "list_distinct(list_transform(range(1, len(string_split(text,' '))), "
@@ -469,25 +465,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("sz", F.size("grams"))
     )
     return _exact_tau_pairs(d, "grams", _NGRAM_TAU, 60)
-
-
-#: duplicated-span window width (tokens). Production exact-substring
-#: dedup (Lee et al. 2022) uses ~50; 8 here so the small synthetic docs
-#: actually produce cross-doc spans.
-_SUBSTR_K = 8
-
-
-def _spans_sql() -> str:
-    """Spark SQL: the md5 hash of every ``_SUBSTR_K``-token window of
-    ``text``, in position order (empty for shorter documents)."""
-    tok = "split(text, ' ')"
-    span_str = f"array_join(slice({tok}, i, {_SUBSTR_K}), ' ')"
-    return (
-        f"case when size({tok}) >= {_SUBSTR_K} then "
-        f"transform(sequence(1, size({tok}) - {_SUBSTR_K} + 1), "
-        f"i -> {_H.format(x=span_str)}) "
-        "else array() end"
-    )
 
 
 def _dup_fraction(
@@ -545,15 +522,15 @@ def _dup_fraction(
 
 
 #: DuckDB: t(doc_id, tok, n), each document's tokens, and spans(doc_id,
-#: i, h), the hash of the _SUBSTR_K-token window starting at token i.
+#: i, h), the hash of the _SPAN_K-token window starting at token i.
 _D_SPANS = f"""t AS MATERIALIZED (
       SELECT doc_id, string_split(text, ' ') AS tok,
              len(string_split(text, ' ')) AS n
       FROM documents),
     spans AS MATERIALIZED (
       SELECT doc_id, CAST(u.i AS BIGINT) AS i,
-             {_D_H.format(x=f"array_to_string(list_slice(tok, i, i + {_SUBSTR_K} - 1), ' ')")} AS h
-      FROM t, UNNEST(range(1, GREATEST(n - {_SUBSTR_K} + 2, 1))) AS u(i))"""
+             {_D_H.format(x=f"array_to_string(list_slice(tok, i, i + {_helpers._SPAN_K} - 1), ' ')")} AS h
+      FROM t, UNNEST(range(1, GREATEST(n - {_helpers._SPAN_K} + 2, 1))) AS u(i))"""
 
 
 @register(
@@ -564,11 +541,11 @@ _D_SPANS = f"""t AS MATERIALIZED (
     perdoc AS (SELECT s.doc_id, COUNT(*) AS n_dup
                FROM spans s JOIN dup USING (h) GROUP BY s.doc_id)
     SELECT t.doc_id,
-           GREATEST(t.n - {_SUBSTR_K} + 1, 0)::BIGINT AS n_spans,
+           GREATEST(t.n - {_helpers._SPAN_K} + 1, 0)::BIGINT AS n_spans,
            COALESCE(p.n_dup, 0)::BIGINT AS n_dup_spans,
-           CASE WHEN t.n >= {_SUBSTR_K}
+           CASE WHEN t.n >= {_helpers._SPAN_K}
                 THEN ROUND(COALESCE(p.n_dup, 0)::DOUBLE
-                           / (t.n - {_SUBSTR_K} + 1), 4)
+                           / (t.n - {_helpers._SPAN_K} + 1), 4)
                 ELSE 0.0 END AS dup_frac
     FROM t LEFT JOIN perdoc p ON p.doc_id = t.doc_id
     """,
@@ -577,21 +554,21 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-span detection, the exact-substring dedup signal (Lee
     et al. 2022): near-dup docs share whole documents, while template
     spam and boilerplate share spans inside otherwise distinct docs,
-    which doc-level Jaccard never sees. Every ``_SUBSTR_K``-token window
+    which doc-level Jaccard never sees. Every ``_SPAN_K``-token window
     is hashed (portable md5, positional), and a span found in ≥ 2
     distinct docs marks every occurrence; ``_dup_fraction`` reports per
     doc the span count, the duplicated spans and their fraction.
 
     A fixed window approximates the suffix-array algorithm: any run
     duplicated over ≥ K tokens produces duplicated windows."""
-    return _dup_fraction(spark, sf_dir, _spans_sql(), "n_spans", "n_dup_spans")
+    return _dup_fraction(spark, sf_dir, span_hashes(), "n_spans", "n_dup_spans")
 
 
 #: winnowing window (in span-hashes): per window of _MINIMIZER_W
 #: consecutive K-token span hashes, keep only the rightmost-minimal
 #: hash — expected density 2/(w+1) of all spans, with the Schleimer
 #: et al. 2003 guarantee that any duplicated run of
-#: ≥ _SUBSTR_K + _MINIMIZER_W − 1 tokens still shares ≥1 selected span.
+#: ≥ _SPAN_K + _MINIMIZER_W − 1 tokens still shares ≥1 selected span.
 _MINIMIZER_W = 4
 
 
@@ -601,8 +578,8 @@ _MINIMIZER_W = 4
     wins AS MATERIALIZED (
       SELECT s.doc_id, CAST(u.wi AS BIGINT) AS wi, s.i, s.h
       FROM t, UNNEST(range(1,
-             CASE WHEN n - {_SUBSTR_K} + 1 >= 1
-                  THEN GREATEST(n - {_SUBSTR_K} + 1 - {_MINIMIZER_W} + 2, 2)
+             CASE WHEN n - {_helpers._SPAN_K} + 1 >= 1
+                  THEN GREATEST(n - {_helpers._SPAN_K} + 1 - {_MINIMIZER_W} + 2, 2)
                   ELSE 1 END)) AS u(wi)
       JOIN spans s ON s.doc_id = t.doc_id
        AND s.i >= u.wi AND s.i <= u.wi + {_MINIMIZER_W} - 1),
@@ -665,7 +642,7 @@ def q_dedup_substring_minimizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the size() > 0 filter it infers would collapse into a second
     # full evaluation of the winnowing expression below the exchange.
     sel_arr = (
-        f"element_at(transform(array({_spans_sql()}), sp -> "
+        f"element_at(transform(array({span_hashes()}), sp -> "
         f"element_at(transform(array({sel_pos}), ps -> "
         "transform(ps, p -> element_at(sp, p))"
         "), 1)), 1)"

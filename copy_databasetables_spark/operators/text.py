@@ -1,10 +1,25 @@
 """§2.10 Text analysis for training-data pipelines.
 
-Seven operators over ``documents``, all builtin-expression (JVM) code:
-word counts, tf-idf, corpus stats, n-grams, language-ID, quality
-scoring, token counting, and rolling-hash fingerprinting.
+25 operators over ``documents`` (two over ``customer``), all
+builtin-expression (JVM) code:
 
-Scale notes (100 TB): everything here is a scan + one aggregation —
+- corpus counts: word counts, corpus stats, bigram counts, tf-idf and
+  per-document keywords, language-ID by marker profiles;
+- per-document signals: quality score, token counts, repetition,
+  entropy, unigram and bigram LM surprisal, the rule-cascade report,
+  shingle fingerprint, boilerplate prefixes, chunking;
+- retrieval: BM25 (single query, batched, persisted index), exact
+  phrase search, collocation (PMI) mining;
+- duplicated-span removal (cut every occurrence, or keep one);
+- fuzzy name matching and anonymization over ``customer``.
+
+Shared pieces: ``_helpers.token_windows`` builds every n-gram, shingle
+and span with the token array split once per row, and
+``_helpers.span_hashes`` / ``_SPAN_K`` are the spans q_dedup_substring
+detects; ``_strip_spans`` is the one removal plan; ``_bm25_corpus``
+builds the in-plan BM25 inputs and ``_bm25_scores`` is the one scorer.
+
+Scale notes (100 TB): most operators are a scan + one aggregation —
 the canonical map-heavy/reduce-light shape. The explode operators
 multiply rows ~40× *inside the scan stage* (Generate), then partial
 aggregation collapses them before the shuffle, so the wire carries
@@ -18,12 +33,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from copy_databasetables_spark.io import load_table, read_written
-from copy_databasetables_spark.operators import register
-from copy_databasetables_spark.operators._helpers import ckpt
-
-#: Spark/DuckDB portable 60-bit hash (see dedup.py).
-_H = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
-_D_H = "CAST(concat('0x', substring(md5({x}), 1, 15)) AS BIGINT)"
+from copy_databasetables_spark.operators import _helpers, register
+from copy_databasetables_spark.operators._helpers import (
+    _D_H,
+    _H,
+    ckpt,
+    span_hashes,
+    token_windows,
+)
 
 
 @register(
@@ -65,7 +82,7 @@ def q_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tf-idf per (doc, term), smoothed idf = ln((N+1)/(df+1)) + 1.
-    Shape at scale: ONE tokenize+explode pass (r15) — df derives from
+    Shape at scale: ONE tokenize+explode pass — df derives from
     the tf table (one row per (doc, term), so a plain row count per
     term IS the distinct-doc count; guide §2.3 aggregate-then-derive),
     and the materialized tf frame feeds both the df aggregate and the
@@ -137,16 +154,8 @@ def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram frequencies via array slicing (multiset — duplicates count),
     top-30 with deterministic tie-break."""
     d = load_table(spark, sf_dir, "documents")
-    # let-binding idiom (dedup.py's HOF-inlining fix): bind the token
-    # array ONCE per row as a lambda variable — a bare split() inside
-    # the lambda re-splits the whole text per element (O(len²)/doc).
-    bigrams = F.expr(
-        "element_at(transform(array(split(text,' ')), ts -> "
-        "transform(slice(ts, 1, size(ts) - 1), "
-        "(t, i) -> concat(t, ' ', ts[i + 1]))), 1)"
-    )
     return (
-        d.select(F.explode(bigrams).alias("bigram"))
+        d.select(F.explode(F.expr(token_windows(2))).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram").asc())
@@ -325,16 +334,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     core of winnowing-style fingerprint indexes. Identical md5-derived
     integers on both engines."""
     d = load_table(spark, sf_dir, "documents")
-    # let-binding idiom — see q_text_ngrams: bind the lowered token
-    # array once per row instead of re-splitting per shingle.
-    shingle_hashes = F.expr(
-        "element_at(transform(array(split(lower(text),' ')), ts -> "
-        "transform(slice(ts, 1, size(ts) - 2), "
-        "(t, i) -> " + _H.format(
-            x="concat(t, ' ', ts[i + 1], ' ', ts[i + 2])"
-        )
-        + ")), 1)"
-    )
+    shingle_hashes = F.expr(token_windows(3, _H, "split(lower(text), ' ')"))
     return d.select(
         "doc_id",
         F.array_min(shingle_hashes).alias("fingerprint"),
@@ -632,11 +632,10 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
-    # r15: freq feeds two consumers (tot + the score join) — without a
-    # materialization each re-ran the corpus tokenize under the
-    # aggregate; now the LM trains in one pass (the |vocab|-bounded
-    # frame checkpoints; the score join's own token stream is the one
-    # unavoidable second pass).
+    # freq feeds two consumers (tot + the score join): the
+    # |vocab|-bounded frame checkpoints, so the LM trains in one pass
+    # (the score join's own token stream is the one unavoidable second
+    # pass).
     freq = ckpt(
         tok.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -710,18 +709,13 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lexical + vector) retrieval stack, and the standard relevance
     baseline for mining topic-targeted training data out of a crawl.
 
-    idf is the Robertson Okapi form ln((N−df+0.5)/(df+0.5)+1); the tf
-    leg saturates at k1 and is length-normalized by b·dl/avgdl.
-
-    Scale shape (100 TB): the token stream is scanned ONCE; document
-    length and query-term tf come out of it as two partial aggregates
-    (dl keyed by doc, tf keyed by (doc, query-term) — the tf side is
-    pre-filtered to the |Q| query terms, so it is |Q|·|docs| bounded,
-    not |vocab|·|docs|). df and the corpus stats collapse to |Q| rows
-    and ONE row respectively and ride broadcasts onto the per-doc
-    score; the final top-N is a TakeOrdered, not a global sort. Nothing
-    in the plan materializes per-(doc, vocab-term) state, so the wire
-    cost is the dl/tf partials — the same map-heavy/reduce-light shape
+    Scale shape (100 TB): ``_bm25_corpus`` explodes the corpus ONCE,
+    pre-filtered to the |Q| query terms, so the tf side is |Q|·|docs|
+    bounded, not |vocab|·|docs|; dl is a per-doc projection; df and the
+    corpus stats collapse to |Q| rows and ONE row and ride broadcasts
+    onto the per-doc score (``_bm25_scores``); the final top-N is a
+    TakeOrdered, not a global sort. Nothing in the plan materializes
+    per-(doc, vocab-term) state — the same map-heavy/reduce-light shape
     as q_text_tfidf.
 
     Determinism: tf/df/dl/N are exact integers; avgdl is an exact
@@ -729,31 +723,54 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     only float work is the ln and the ≤|Q|-term sum (ulp-level); ranks
     are decided on the 6dp-rounded score with doc_id as total
     tie-break."""
+    return _bm25_top_n(_bm25_corpus(spark, sf_dir, _BM25_QUERY))
+
+
+def _bm25_corpus(spark: SparkSession, sf_dir: str, terms) -> DataFrame:
+    """The in-plan BM25 inputs for the query ``terms``: one
+    (doc_id, term, tf, dl, df, n_docs, avgdl) row per (document, query
+    term it holds), built from ONE corpus explode.
+
+    dl is size(split(...)) per doc — the integer a token explode would
+    count (one row per array element), with the isNotNull guard
+    mirroring explode dropping NULL-text docs — with no explode and no
+    shuffle, materialized once for its two consumers (the stats
+    aggregate and the tf join). tf comes from the explode pre-filtered
+    to ``terms`` and is materialized once for its two consumers; df
+    derives from it (one row per (doc, term), so a row count per term
+    is the distinct-doc count). df and the one-row corpus stats ride
+    broadcasts."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term"))
-    # r15 (guide §2.3/§7.2): the r14 shape evaluated the corpus
-    # tokenize+explode up to 4× (dl, stats-via-dl, qtf, qdf). Now:
-    # dl is size(split(...)) per doc — same integer (explode emits one
-    # row per array element, so the group count IS the array size; the
-    # isNotNull guard mirrors explode dropping NULL-text docs) with no
-    # explode and no shuffle, materialized once for its two consumers;
-    # qdf derives from qtf (one row per (doc, term) → row count per
-    # term ≡ distinct-doc count); qtf materializes once for its two
-    # consumers. Exactly ONE corpus explode pass remains (qtf's).
+    toks = F.split(F.lower("text"), " ")
     dl = ckpt(
-        d.select(
-            "doc_id", F.size(F.split(F.lower("text"), " ")).alias("dl")
-        ).where(F.col("dl").isNotNull())
+        d.select("doc_id", F.size(toks).alias("dl")).where(
+            F.col("dl").isNotNull()
+        )
     )
     stats = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    qtok = tok.where(F.col("term").isin(*_BM25_QUERY))
     qtf = ckpt(
-        qtok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+        d.select("doc_id", F.explode(toks).alias("term"))
+        .where(F.col("term").isin(*terms))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
     qdf = qtf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        qtf.join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .join(F.broadcast(qdf), "term")
+    )
+
+
+def _bm25_scores(frame: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, doc_id, bm25, n_terms_hit) over a (doc_id, term, tf, dl,
+    df, n_docs, avgdl) frame: each document's Σ idf·tf-leg, rounded to
+    6dp, and the number of query terms it holds. idf is the Robertson
+    Okapi form ln((N−df+0.5)/(df+0.5)+1); the tf leg saturates at k1
+    and is length-normalized by b·dl/avgdl."""
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -761,15 +778,17 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tf")
         + _BM25_K1 * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
     )
+    return frame.groupBy(*keys, "doc_id").agg(
+        F.round(F.sum(idf * tf_leg), 6).alias("bm25"),
+        F.count(F.lit(1)).alias("n_terms_hit"),
+    )
+
+
+def _bm25_top_n(frame: DataFrame) -> DataFrame:
+    """The single query's top-N of ``_bm25_scores(frame)``: a
+    TakeOrdered cut (per-partition heaps), not a global sort."""
     return (
-        qtf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(qdf), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum(idf * tf_leg), 6).alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
+        _bm25_scores(frame)
         .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
         .limit(_BM25_TOPN)
         .select("doc_id", "bm25", "n_terms_hit")
@@ -779,8 +798,8 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_text_bm25_persisted", oracle=_BM25_ORACLE)
 def q_text_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_text_bm25's index build split out and PERSISTED — the lexical
-    counterpart of q_sim_ivf_pq_persisted (r13's amortized-index
-    theme): a search engine tokenizes and aggregates the corpus ONCE
+    counterpart of q_sim_ivf_pq_persisted (the amortized-index
+    shape): a search engine tokenizes and aggregates the corpus ONCE
     at index build, and every query thereafter touches only its own
     terms' postings. The build writes two artifacts to parquet:
 
@@ -806,7 +825,7 @@ def q_text_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     count_distinct(doc_id). Values are identical to
     q_text_bm25 by construction, which the shared oracle pins.
 
-    Accepted ulp risk (ADVICE r13, noted not "fixed"): the ≤|Q|=3-term
+    Accepted ulp risk (noted, not "fixed"): the ≤|Q|=3-term
     float score sums in postings-read order here vs shuffle order in
     the base op vs DuckDB's order in the shared oracle. A divergence
     needs a score sitting exactly on a 6dp rounding boundary — none of
@@ -829,8 +848,8 @@ def _bm25_index_build(spark: SparkSession, sf_dir: str) -> str:
     The tokens are hash-partitioned by term ONCE; the (term, doc_id,
     dl) grouping, the sort and the df window all run inside that
     partitioning, so the write is one shuffle. dl is the no-explode
-    size(split(...)) form (see q_text_bm25's comment for the
-    equivalence argument) and is fixed per document, so it rides the
+    size(split(...)) form (see ``_bm25_corpus`` for the equivalence
+    argument) and is fixed per document, so it rides the
     grouping key instead of a tf ⋈ dl join. df is a count window over
     each term's postings (one posting per (doc, term) → row count per
     term ≡ distinct-doc count). The corpus stats are observed on the
@@ -899,24 +918,7 @@ def _bm25_query_leg(spark: SparkSession, path: str) -> DataFrame:
         F.col("term").isin(*_BM25_QUERY)
     )
     st = F.broadcast(read_written(spark, f"{path}/stats", _BM25_STATS))
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    tf_leg = (F.col("tf") * (_BM25_K1 + 1.0)) / (
-        F.col("tf")
-        + _BM25_K1 * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        p.crossJoin(st)
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum(idf * tf_leg), 6).alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(_BM25_TOPN)
-        .select("doc_id", "bm25", "n_terms_hit")
-    )
+    return _bm25_top_n(p.crossJoin(st))
 
 
 #: the fixed multi-query batch: (query_id, term) — literals shared by
@@ -984,58 +986,115 @@ def q_text_bm25_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     across all of them instead of rescanning per query
     (q_text_bm25 is the single-query special case).
 
-    Scale shape (100 TB): identical to q_text_bm25 up to the term
-    match — dl and per-(doc, matched-term) tf come from one token
-    scan, with the tf side pre-filtered to the UNION of all query
-    terms (|terms| · |docs| bounded). The query table (|Q| rows) and
-    df/stats broadcast onto the scored stream; fan-out to queries is
-    the term⋈query-table broadcast join, so adding a query adds join
-    fan-out only for ITS terms, never another corpus pass. The
-    per-query top-N is a rank window partitioned by query_id —
-    |queries| independent group-limits, not a global sort."""
+    Scale shape (100 TB): q_text_bm25's ``_bm25_corpus`` over the
+    UNION of all query terms (|terms| · |docs| bounded), then fan-out
+    to queries through the term⋈query-table broadcast join, so adding a
+    query adds join fan-out only for ITS terms, never another corpus
+    pass. The per-query top-N is a rank window partitioned by query_id
+    — |queries| independent group-limits, not a global sort."""
     q = spark.createDataFrame(
         [(qid, t) for qid, terms in _BM25_BATCH for t in terms],
         "query_id int, term string",
     )
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    qtok = tok.where(F.col("term").isin(_BM25_BATCH_TERMS))
-    qtf = qtok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    qdf = qtok.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    tf_leg = (F.col("tf") * (_BM25_K1 + 1.0)) / (
-        F.col("tf")
-        + _BM25_K1 * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+    scored = _bm25_scores(
+        _bm25_corpus(spark, sf_dir, _BM25_BATCH_TERMS).join(
+            F.broadcast(q), "term"
+        ),
+        "query_id",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("bm25").desc(), F.col("doc_id").asc()
     )
     return (
-        qtf.join(F.broadcast(q), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum(idf * tf_leg), 6).alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-        .withColumn("rank_pos", F.row_number().over(w))
+        scored.withColumn("rank_pos", F.row_number().over(w))
         .where(F.col("rank_pos") <= _BM25_BATCH_TOPN)
         .select("query_id", "doc_id", "bm25", "n_terms_hit", "rank_pos")
     )
 
 
-#: Span width shared with q_dedup_substring (dedup._SUBSTR_K) — the
-#: detection and removal halves must agree on what a "span" is.
-_STRIP_K = 8
+def _strip_spans(spark: SparkSession, sf_dir: str, keep_first: bool) -> DataFrame:
+    """Every document rebuilt without the positions that cross-document
+    duplicated ``_SPAN_K``-token spans cover: (doc_id, n_tokens,
+    n_removed, cleaned_text). With ``keep_first`` the canonical
+    occurrence of each span — min doc_id, then min start — is not cut.
+
+    Spark shape at 100 TB — O(total tokens) rows end to end, nothing
+    quadratic:
+      1. one checkpointed row per doc holding its tokens and
+         ``span_hashes()``; posexplode gives (pos, token) and
+         (i, span-hash) rows, the same row volume as tokenization;
+      2. span-hash groupBy with partial aggregation → dup spans
+         (unbounded, corpus-dependent: NO broadcast hint, the equi-join
+         back shuffles on the 60-bit hash); ``keep_first`` adds one
+         rank window PARTITIONED BY span hash (one counter per hash,
+         never a global window);
+      3. covered positions = explode(sequence(i, i+K-1)) + distinct —
+         keyed (doc_id, pos), ≤ K× span rows;
+      4. left_anti join tokens⟂covered on (doc_id, pos), then one
+         per-doc groupBy whose collect_list is bounded by the document
+         length — the same per-doc bound tokenization already pays.
+    The rebuild sorts (pos, token) structs in-plan (array_sort) so the
+    output text is position-exact, not collection-order-dependent."""
+    k = _helpers._SPAN_K
+    base = ckpt(
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(
+            "doc_id",
+            F.split("text", " ").alias("tok"),
+            F.expr(span_hashes()).alias("spans"),
+        ),
+        # materialized once for the three consumers below; localCheckpoint
+        # (not .persist()) so the blocks are freed by the harness's
+        # free_ckpts sweep (or ContextCleaner as a fallback) when the
+        # result frame is dropped — a CacheManager .persist() here
+        # would pin a corpus-sized frame for the session.
+        eager=True,
+    )
+    toks = base.select(
+        "doc_id", F.posexplode("tok").alias("pos0", "tk")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tk")
+    spans = base.select(
+        "doc_id", F.posexplode("spans").alias("pos0", "h")
+    ).select("doc_id", (F.col("pos0") + 1).alias("i"), "h")
+    dup = (
+        spans.groupBy("h")
+        .agg(F.count_distinct("doc_id").alias("nd"))
+        .where(F.col("nd") > 1)
+        .select("h")
+    )
+    cut = spans.join(dup, "h")
+    if keep_first:
+        occ_w = Window.partitionBy("h").orderBy(
+            F.col("doc_id").asc(), F.col("i").asc()
+        )
+        cut = cut.withColumn("occ_rank", F.row_number().over(occ_w)).where(
+            F.col("occ_rank") > 1
+        )
+    covered = cut.select(
+        "doc_id",
+        F.explode(F.sequence(F.col("i"), F.col("i") + F.lit(k - 1))).alias("pos"),
+    ).distinct()
+    kept = toks.join(covered, ["doc_id", "pos"], "left_anti")
+    rebuilt = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.array_join(
+            F.expr("transform(array_sort(collect_list(struct(pos, tk))), x -> x.tk)"),
+            " ",
+        ).alias("cleaned"),
+    )
+    return (
+        base.select("doc_id", F.size("tok").alias("n_tokens"))
+        .join(rebuilt, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("n_tokens").cast("bigint").alias("n_tokens"),
+            (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
+            .cast("bigint")
+            .alias("n_removed"),
+            F.coalesce(F.col("cleaned"), F.lit("")).alias("cleaned_text"),
+        )
+    )
 
 
 @register(
@@ -1047,13 +1106,13 @@ _STRIP_K = 8
       FROM documents),
     spans AS MATERIALIZED (
       SELECT doc_id, i,
-             {_D_H.format(x=f"array_to_string(list_slice(tok, i, i + {_STRIP_K} - 1), ' ')")} AS h
-      FROM t, UNNEST(range(1, GREATEST(n - {_STRIP_K} + 2, 1))) AS u(i)),
+             {_D_H.format(x=f"array_to_string(list_slice(tok, i, i + {_helpers._SPAN_K} - 1), ' ')")} AS h
+      FROM t, UNNEST(range(1, GREATEST(n - {_helpers._SPAN_K} + 2, 1))) AS u(i)),
     dup AS (SELECT h FROM spans GROUP BY h
             HAVING COUNT(DISTINCT doc_id) > 1),
     cov AS (SELECT DISTINCT s.doc_id, s.i + o.j AS pos
             FROM spans s JOIN dup USING (h),
-                 UNNEST(range(0, {_STRIP_K})) AS o(j)),
+                 UNNEST(range(0, {_helpers._SPAN_K})) AS o(j)),
     toks AS (SELECT doc_id, tok[u.pos] AS tk, u.pos AS pos
              FROM t, UNNEST(range(1, n + 1)) AS u(pos)),
     kept AS (SELECT k.doc_id, k.pos, k.tk FROM toks k
@@ -1077,87 +1136,9 @@ def q_text_strip_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed-token accounting. The conservative cut-all-occurrences
     policy is the decontamination flavor (no occurrence survives);
     keep-one-canonical is a composition with the survivor pattern
-    (q_dedup_survivor) over the span's (min doc_id, min pos) owner.
-
-    Spark shape at 100 TB — O(total tokens) rows end to end, nothing
-    quadratic:
-      1. one Generate per doc → (pos, token) and (i, span-hash) rows,
-         the same row volume as tokenization;
-      2. span-hash groupBy with partial aggregation → dup spans
-         (unbounded, corpus-dependent: NO broadcast hint, the equi-join
-         back shuffles on the 60-bit hash);
-      3. covered positions = explode(sequence(i, i+K-1)) + distinct —
-         keyed (doc_id, pos), ≤ K× span rows;
-      4. left_anti join tokens⟂covered on (doc_id, pos), then one
-         per-doc groupBy whose collect_list is bounded by the document
-         length — the same per-doc bound tokenization already pays.
-    The rebuild sorts (pos, token) structs in-plan (array_sort) so the
-    output text is position-exact, not collection-order-dependent."""
-    tok = "split(text, ' ')"
-    span_str = f"array_join(slice({tok}, i, {_STRIP_K}), ' ')"
-    spans_expr = (
-        f"case when size({tok}) >= {_STRIP_K} then "
-        f"transform(sequence(1, size({tok}) - {_STRIP_K} + 1), "
-        f"i -> struct(i as i, {_H.format(x=span_str)} as h)) "
-        "else array() end"
-    )
-    base = ckpt(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id",
-            F.expr(f"{tok}").alias("tok"),
-            F.expr(spans_expr).alias("spans"),
-        ),
-        # materialized once for the three consumers below; localCheckpoint
-        # (not .persist()) so the blocks are freed by the harness's
-        # free_ckpts sweep (or ContextCleaner as a fallback) when the
-        # result frame is dropped — a CacheManager .persist() here
-        # would pin a corpus-sized frame for the session (r7 ADVICE).
-        eager=True,
-    )
-    toks = base.select(
-        "doc_id", F.posexplode("tok").alias("pos0", "tk")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tk")
-    spans = base.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", F.col("s.i").alias("i"), F.col("s.h").alias("h")
-    )
-    dup = (
-        spans.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .where(F.col("nd") > 1)
-        .select("h")
-    )
-    covered = (
-        spans.join(dup, "h")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("i"), F.col("i") + F.lit(_STRIP_K - 1))
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    kept = toks.join(covered, ["doc_id", "pos"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.expr("transform(array_sort(collect_list(struct(pos, tk))), x -> x.tk)"),
-            " ",
-        ).alias("cleaned"),
-    )
-    return (
-        base.select("doc_id", F.size("tok").alias("n_tokens"))
-        .join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-            F.coalesce(F.col("cleaned"), F.lit("")).alias("cleaned_text"),
-        )
-    )
+    (q_dedup_survivor) over the span's (min doc_id, min pos) owner
+    (q_text_strip_spans_keep1). The plan is ``_strip_spans``."""
+    return _strip_spans(spark, sf_dir, keep_first=False)
 
 
 #: Cascade rule thresholds (integer-exact: every rule is an integer
@@ -1320,8 +1301,8 @@ def q_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents),
     spans AS MATERIALIZED (
       SELECT doc_id, i,
-             {_D_H.format(x=f"array_to_string(list_slice(tok, i, i + {_STRIP_K} - 1), ' ')")} AS h
-      FROM t, UNNEST(range(1, GREATEST(n - {_STRIP_K} + 2, 1))) AS u(i)),
+             {_D_H.format(x=f"array_to_string(list_slice(tok, i, i + {_helpers._SPAN_K} - 1), ' ')")} AS h
+      FROM t, UNNEST(range(1, GREATEST(n - {_helpers._SPAN_K} + 2, 1))) AS u(i)),
     dup AS (SELECT h FROM spans GROUP BY h
             HAVING COUNT(DISTINCT doc_id) > 1),
     occ AS (SELECT s.doc_id, s.i, s.h,
@@ -1329,7 +1310,7 @@ def q_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       ORDER BY s.doc_id, s.i) AS occ_rank
             FROM spans s JOIN dup USING (h)),
     cov AS (SELECT DISTINCT o.doc_id, o.i + u.j AS pos
-            FROM occ o, UNNEST(range(0, {_STRIP_K})) AS u(j)
+            FROM occ o, UNNEST(range(0, {_helpers._SPAN_K})) AS u(j)
             WHERE o.occ_rank > 1),
     toks AS (SELECT doc_id, tok[u.pos] AS tk, u.pos AS pos
              FROM t, UNNEST(range(1, n + 1)) AS u(pos)),
@@ -1358,81 +1339,9 @@ def q_text_strip_spans_keep1(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible (contrast q_text_strip_spans, which cuts ALL
     occurrences — the decontamination flavor).
 
-    Scale shape: identical to q_text_strip_spans plus one rank window
-    PARTITIONED BY span hash (state per hash = one counter; hash
-    cardinality ≈ distinct spans, fully parallel — never a global
-    window). Everything else is the same O(total tokens) explode →
-    groupBy → anti-join → per-doc rebuild."""
-    tok = "split(text, ' ')"
-    span_str = f"array_join(slice({tok}, i, {_STRIP_K}), ' ')"
-    spans_expr = (
-        f"case when size({tok}) >= {_STRIP_K} then "
-        f"transform(sequence(1, size({tok}) - {_STRIP_K} + 1), "
-        f"i -> struct(i as i, {_H.format(x=span_str)} as h)) "
-        "else array() end"
-    )
-    base = ckpt(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id",
-            F.expr(f"{tok}").alias("tok"),
-            F.expr(spans_expr).alias("spans"),
-        ),
-        # materialized once for the three consumers below; localCheckpoint
-        # (not .persist()) so the blocks are freed by the harness's
-        # free_ckpts sweep (or ContextCleaner as a fallback) when the
-        # result frame is dropped — a CacheManager .persist() here
-        # would pin a corpus-sized frame for the session (r7 ADVICE).
-        eager=True,
-    )
-    toks = base.select(
-        "doc_id", F.posexplode("tok").alias("pos0", "tk")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tk")
-    spans = base.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", F.col("s.i").alias("i"), F.col("s.h").alias("h")
-    )
-    dup = (
-        spans.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .where(F.col("nd") > 1)
-        .select("h")
-    )
-    occ_w = Window.partitionBy("h").orderBy(
-        F.col("doc_id").asc(), F.col("i").asc()
-    )
-    covered = (
-        spans.join(dup, "h")
-        .withColumn("occ_rank", F.row_number().over(occ_w))
-        .where(F.col("occ_rank") > 1)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("i"), F.col("i") + F.lit(_STRIP_K - 1))
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    kept = toks.join(covered, ["doc_id", "pos"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.expr("transform(array_sort(collect_list(struct(pos, tk))), x -> x.tk)"),
-            " ",
-        ).alias("cleaned"),
-    )
-    return (
-        base.select("doc_id", F.size("tok").alias("n_tokens"))
-        .join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-            F.coalesce(F.col("cleaned"), F.lit("")).alias("cleaned_text"),
-        )
-    )
+    Scale shape: q_text_strip_spans' plan (``_strip_spans``) plus one
+    rank window PARTITIONED BY span hash."""
+    return _strip_spans(spark, sf_dir, keep_first=True)
 
 
 _PHRASE = ["table", "scan"]  # the registered demo phrase
@@ -1536,33 +1445,17 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break — the rounded values are the cross-engine-identical
     surface the tfidf op's hash already proves, so the top-k selection
     cannot flip on a final-ulp difference the way raw-float ranking
-    could. Scale shape: the same two shared-scan aggregations as
-    tfidf (df side |vocab| rows, broadcast back), then one
+    could. Scale shape: ranks q_text_tfidf's scored frame (its one
+    tokenize pass, df side |vocab| rows broadcast back), then one
     WindowGroupLimit-pushed top-{_KW_TOP} per doc — the shuffle after
     scoring carries at most {_KW_TOP} surviving rows per (doc,
     mapper)."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df = tok.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    idf_raw = F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0
-    scored = (
-        tf.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "term",
-            F.round(F.col("tf") * idf_raw, 6).alias("tfidf"),
-        )
-    )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term")
     )
     return (
-        scored.withColumn("rank_pos", F.row_number().over(w))
+        q_text_tfidf(spark, sf_dir)
+        .withColumn("rank_pos", F.row_number().over(w))
         .where(F.col("rank_pos") <= _KW_TOP)
         .select("doc_id", F.col("term").alias("keyword"), "tfidf", "rank_pos")
     )
@@ -1691,16 +1584,8 @@ def q_text_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-ulp class remains; the smoothing constant k and V are exact
     on both sides."""
     d = load_table(spark, sf_dir, "documents")
-    # let-binding idiom (dedup.py's HOF-inlining fix): bind the token
-    # array ONCE per row as a lambda variable — a bare split() inside
-    # the lambda re-splits the whole text per element (O(len²)/doc).
-    bigrams = F.expr(
-        "element_at(transform(array(split(text,' ')), ts -> "
-        "transform(slice(ts, 1, size(ts) - 1), "
-        "(t, i) -> concat(t, ' ', ts[i + 1]))), 1)"
-    )
-    bg = d.select("doc_id", F.explode(bigrams).alias("bg"))
-    # r15: c12 feeds the left-context aggregate AND the score join —
+    bg = d.select("doc_id", F.explode(F.expr(token_windows(2))).alias("bg"))
+    # c12 feeds the left-context aggregate AND the score join —
     # materialize the |bigram-vocab|-bounded counts once so the corpus
     # bigram pass under it runs once, not per branch.
     c12 = ckpt(
@@ -1814,15 +1699,8 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers. The displayed pmi is one ln on identical exact-integer
     ratios, 6dp-rounded (accepted-ulp class)."""
     d = load_table(spark, sf_dir, "documents")
-    # let-binding idiom (dedup.py's HOF-inlining fix): bind the token
-    # array once per row; a bare split() in the lambda is O(len²)/doc.
-    bigrams = F.expr(
-        "element_at(transform(array(split(text,' ')), ts -> "
-        "transform(slice(ts, 1, size(ts) - 1), "
-        "(t, i) -> concat(t, ' ', ts[i + 1]))), 1)"
-    )
     c12_all = (
-        d.select(F.explode(bigrams).alias("bg"))
+        d.select(F.explode(F.expr(token_windows(2))).alias("bg"))
         .groupBy(
             F.split("bg", " ").getItem(0).alias("w1"),
             F.split("bg", " ").getItem(1).alias("w2"),

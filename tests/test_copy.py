@@ -139,25 +139,68 @@ def test_verify_copy_with_checksum_runs_at_most_two_jobs(spark, tmp_path):
     assert 1 <= n <= 2
 
 
-def test_cdc_apply_on_existing_target_runs_at_most_four_jobs(spark, tmp_path):
-    """A CDC apply onto an existing target infers the change log's
-    schema (1 job), reads the target with its footer schema (no job),
-    writes the staged state (its shuffle and result stages are a job
-    each under AQE) and checks it with one observed scan: 4 jobs, 6
-    with an inferred target read and an aggregate check."""
+def _orders_delete_log(spark, path: str) -> int:
+    """Write a Spark change log deleting orders 1..40; returns how many
+    orders it deletes."""
+    dels = load_table(spark, SF_SMOKE, "orders").where("o_orderkey <= 40")
+    dels.selectExpr("*", "'D' AS op", "1L AS seq").write.parquet(path)
+    return dels.count()
+
+
+def test_cdc_apply_on_existing_target_runs_at_most_three_jobs(spark, tmp_path):
+    """A CDC apply onto an existing target reads the Spark-written change
+    log and the target with their footer schemas (no job), writes the
+    staged state (its shuffle and result stages are a job each under
+    AQE) and checks it with one observed scan: 3 jobs, 4 with an
+    inferred log read."""
     from copy_databasetables_spark.copy.engine import cdc_apply_table
 
     target, log = str(tmp_path / "orders"), str(tmp_path / "log")
     copy_table(spark, SF_SMOKE, "orders", target)
-    load_table(spark, SF_SMOKE, "orders").where("o_orderkey <= 40").selectExpr(
-        "*", "'D' AS op", "1L AS seq"
-    ).write.parquet(log)
-    n_deleted = load_table(spark, SF_SMOKE, "orders").where("o_orderkey <= 40").count()
+    n_deleted = _orders_delete_log(spark, log)
     n, res = _jobs(
         spark, lambda: cdc_apply_table(spark, log, "orders", target, "o_orderkey")
     )
     assert res.rows_copied == 1500 - n_deleted
-    assert 1 <= n <= 4
+    assert 1 <= n <= 3
+
+
+def test_cdc_apply_reads_foreign_logs_and_rejects_bad_ones(spark, tmp_path):
+    """A change log pyarrow wrote records no Spark schema, so it is read
+    by inference, and it applies to the same rows as the same log
+    written by Spark. A missing log raises, and so does a log lacking
+    the op column, before the target is touched."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from copy_databasetables_spark.copy.engine import cdc_apply_table
+    from copy_databasetables_spark.io import footer_schema
+
+    spark_log, arrow_log = str(tmp_path / "log"), str(tmp_path / "arrow_log")
+    n_deleted = _orders_delete_log(spark, spark_log)
+    os.makedirs(arrow_log)
+    pq.write_table(
+        pq.read_table(spark_log).replace_schema_metadata(None),
+        os.path.join(arrow_log, "part-0.parquet"),
+    )
+    assert footer_schema(arrow_log) is None
+    rows = []
+    for log in (spark_log, arrow_log):
+        target = str(tmp_path / f"orders_{os.path.basename(log)}")
+        copy_table(spark, SF_SMOKE, "orders", target)
+        cdc_apply_table(spark, log, "orders", target, "o_orderkey")
+        rows.append(sorted(map(tuple, spark.read.parquet(target).collect())))
+    assert len(rows[0]) == 1500 - n_deleted and rows[0] == rows[1]
+
+    with pytest.raises(AnalysisException):
+        cdc_apply_table(
+            spark, str(tmp_path / "no_log"), "orders", target, "o_orderkey"
+        )
+    before = sorted(os.listdir(target))
+    with pytest.raises(ValueError, match="lacks column"):
+        cdc_apply_table(spark, spark_log, "orders", target, "o_orderkey",
+                        op_col="kind")
+    assert sorted(os.listdir(target)) == before
 
 
 def _pyarrow_target(spark, path: str) -> None:

@@ -31,9 +31,8 @@ from copy_databasetables_spark.operators.dedup import (
     q_dedup_near,
     q_dedup_survivor,
 )
+from copy_databasetables_spark.operators._helpers import _H, _SPAN_K
 from copy_databasetables_spark.operators.text import (
-    _H,
-    _STRIP_K,
     q_text_strip_spans,
     q_text_strip_spans_keep1,
 )
@@ -43,13 +42,13 @@ from tests.conftest import SF_SMOKE
 
 def _span_hashes(df, text_col: str):
     """Explode ``text_col`` into the library's own K-token span hashes
-    (same _STRIP_K, same md5→60-bit macro the operators use), one row
+    (same _SPAN_K, same md5→60-bit macro the operators use), one row
     per (doc_id, h)."""
     tok = f"split({text_col}, ' ')"
-    span_str = f"array_join(slice({tok}, i, {_STRIP_K}), ' ')"
+    span_str = f"array_join(slice({tok}, i, {_SPAN_K}), ' ')"
     spans = (
-        f"case when size({tok}) >= {_STRIP_K} then "
-        f"transform(sequence(1, size({tok}) - {_STRIP_K} + 1), "
+        f"case when size({tok}) >= {_SPAN_K} then "
+        f"transform(sequence(1, size({tok}) - {_SPAN_K} + 1), "
         f"i -> {_H.format(x=span_str)}) else array() end"
     )
     return df.select("doc_id", F.explode(F.expr(spans)).alias("h"))

@@ -3192,10 +3192,8 @@ def test_substring_minimizer_winnowing_guarantee_and_density(spark):
     never have a duplicated SELECTED span (selected ⊆ all spans)."""
     from copy_databasetables_spark.io import load_table
     from copy_databasetables_spark.operators import all_queries
-    from copy_databasetables_spark.operators.dedup import (
-        _MINIMIZER_W,
-        _SUBSTR_K,
-    )
+    from copy_databasetables_spark.operators._helpers import _SPAN_K
+    from copy_databasetables_spark.operators.dedup import _MINIMIZER_W
     from tests.conftest import SF_SMOKE
 
     qs = all_queries()
@@ -3209,7 +3207,7 @@ def test_substring_minimizer_winnowing_guarantee_and_density(spark):
     assert set(mini) == set(exact)
 
     # (a) ground-truth long shared runs, recomputed from raw text
-    run_len = _SUBSTR_K + _MINIMIZER_W - 1
+    run_len = _SPAN_K + _MINIMIZER_W - 1
     docs = {
         r["doc_id"]: r["text"].split(" ")
         for r in load_table(spark, SF_SMOKE, "documents")

@@ -4,7 +4,7 @@ mutates one semantic constant on the SPARK side only (the oracle SQL
 strings bake the original value at import time) and asserts the gate's
 own comparator goes red — proving the differential binds that
 parameter rather than vacuously matching. Mutations that the sf0.001
-data cannot distinguish (e.g. _STRIP_K 8→9: the duplicated runs are
+data cannot distinguish (e.g. _SPAN_K 8→9: the duplicated runs are
 long, so the covered-position set coincides; _NGRAM_TAU 0.60→0.55: no
 pair's Jaccard falls in the gap) are deliberately NOT pinned — a
 kill list must only contain kills, or a future legitimate refactor
@@ -34,6 +34,7 @@ from copy_databasetables_spark.operators import (  # noqa: E402
     all_queries,
 )
 from copy_databasetables_spark.operators import (  # noqa: E402
+    _helpers,
     aggregates,
     analytics,
     dedup,
@@ -54,7 +55,7 @@ MUTATIONS = [
     (dedup, "_JACCARD_TAU", 0.90, "q_dedup_near"),
     (dedup, "_EMB_BUCKET_CAP", 1, "q_dedup_embed_recall"),
     (dedup, "_N_BANDS", 2, "q_dedup_lsh_recall"),
-    (dedup, "_SUBSTR_K", 7, "q_dedup_substring"),
+    (_helpers, "_SPAN_K", 7, "q_dedup_substring"),
     # the shared verify step (dedup._verify) reads each threshold at call
     # time on the LSH paths too — verified to KILL on sf0.001 on entry:
     (dedup, "_JACCARD_TAU", 0.90, "q_dedup_minhash"),
@@ -163,7 +164,7 @@ def test_oracle_catches_semantic_constant_mutation(spark, duck, mod, attr,
 
 # --------------------------------------------------------------------------
 # Seeded-fixture kills for the two constants the SHIPPED corpus cannot
-# discriminate at any SF (re-probed sf0.001/sf0.01/sf0.1): _STRIP_K 8→9
+# discriminate at any SF (re-probed sf0.001/sf0.01/sf0.1): _SPAN_K 8→9
 # (the corpus's duplicated runs are all much longer than K, so the
 # covered-position sets coincide) and _NGRAM_TAU 0.60→0.55 (no document
 # pair's bigram Jaccard falls inside [0.55, 0.60)). Each test writes a
@@ -212,22 +213,26 @@ def _fixture_problems(spark, sf_dir: str, key: str):
 def test_strip_k_mutation_kills_on_seeded_fixture(spark, tmp_path):
     """Two docs share a duplicated run of EXACTLY 8 tokens (every other
     token unique to its doc). K=8 flags the run (one shared 8-gram per
-    doc) and strips those positions; the K=9 mutant finds no shared
-    9-gram and strips nothing — outputs must diverge."""
+    doc) and strips those positions — from both docs, or from the
+    second only under keep-one; the K=9 mutant finds no shared 9-gram
+    and strips nothing — outputs must diverge for both strip ops."""
     shared = " ".join(f"D{i}" for i in range(8))
     sf_dir = _write_fixture_documents(
         tmp_path,
         [f"a1 a2 {shared} b1 b2", f"c1 c2 {shared} e1 e2"],
     )
-    assert _fixture_problems(spark, sf_dir, "q_text_strip_spans") == []
-    original = text._STRIP_K
-    text._STRIP_K = 9
+    keys = ("q_text_strip_spans", "q_text_strip_spans_keep1")
+    for key in keys:
+        assert _fixture_problems(spark, sf_dir, key) == [], key
+    original = _helpers._SPAN_K
+    _helpers._SPAN_K = 9
     try:
-        assert _fixture_problems(spark, sf_dir, "q_text_strip_spans") != [], (
-            "fixture failed to kill _STRIP_K 8->9"
-        )
+        for key in keys:
+            assert _fixture_problems(spark, sf_dir, key) != [], (
+                f"fixture failed to kill _SPAN_K 8->9 for {key}"
+            )
     finally:
-        text._STRIP_K = original
+        _helpers._SPAN_K = original
 
 
 def test_ngram_tau_mutation_kills_on_seeded_fixture(spark, tmp_path):

@@ -7,6 +7,7 @@ correct."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from copy_databasetables_spark.io import load_table
@@ -588,16 +589,20 @@ def test_survivor_broadcast_gate_falls_back_above_threshold(spark, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_strip_spans_is_explode_join_shaped(spark):
-    """q_text_strip_spans (the REMOVAL half of q_dedup_substring) must
-    keep the same discipline as the detection half: explode → hash
-    groupBy → equi-joins, never a doc×doc self-join and never a Python
-    worker; with the broadcast threshold disabled no broadcast hint may
-    linger (the dup-hash and covered-position sides are
-    corpus-dependent, so strategy must stay size/conf-driven)."""
+@pytest.mark.parametrize(
+    "key", ["q_text_strip_spans", "q_text_strip_spans_keep1"]
+)
+def test_strip_spans_is_explode_join_shaped(spark, key):
+    """Both strip ops (the REMOVAL half of q_dedup_substring) must keep
+    the same discipline as the detection half: explode → hash groupBy →
+    equi-joins (keep1 adds a hash-partitioned rank window), never a
+    doc×doc self-join and never a Python worker; with the broadcast
+    threshold disabled no broadcast hint may linger (the dup-hash and
+    covered-position sides are corpus-dependent, so strategy must stay
+    size/conf-driven)."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        p = plan(all_queries()["q_text_strip_spans"](spark, SF_SMOKE))
+        p = plan(all_queries()[key](spark, SF_SMOKE))
         final = p.split("== Initial Plan ==")[0]
         assert "CartesianProduct" not in final
         assert "BroadcastNestedLoopJoin" not in final
@@ -605,6 +610,70 @@ def test_strip_spans_is_explode_join_shaped(spark):
         assert "PythonUDF" not in final and "ArrowEvalPython" not in final
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+
+
+def split_nodes(spark, sql: str) -> list[bool]:
+    """One entry per ``split`` (StringSplit) in the analyzed expression
+    of ``sql`` over a ``text`` column: whether it sits inside a lambda
+    (re-evaluated per array element) rather than once per row."""
+    df = spark.createDataFrame([("a b c",)], "text string").select(
+        F.expr(sql).alias("w")
+    )
+    found = []
+
+    def walk(e, in_lambda: bool) -> None:
+        name = e.getClass().getSimpleName()
+        if name == "StringSplit":
+            found.append(in_lambda)
+        kids = e.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), in_lambda or name == "LambdaFunction")
+
+    walk(df._jdf.queryExecution().analyzed().projectList().apply(0), False)
+    return found
+
+
+@pytest.mark.parametrize("form", ["bigram", "trigram_shingle", "span"])
+def test_token_windows_split_once_per_row(spark, form):
+    """Every n-token window form splits its document exactly once per
+    row, outside every lambda: a split inside the per-window lambda
+    re-splits the whole text per window (O(len²) per document)."""
+    from copy_databasetables_spark.operators._helpers import (
+        _H,
+        span_hashes,
+        token_windows,
+    )
+
+    sql = {
+        "bigram": token_windows(2),
+        "trigram_shingle": token_windows(3, _H, "split(lower(text), ' ')"),
+        "span": span_hashes(),
+    }[form]
+    assert split_nodes(spark, sql) == [False]
+
+
+def test_token_windows_values(spark):
+    """Windows come in position order, joined by single spaces; a
+    document shorter than the window yields an empty array."""
+    from copy_databasetables_spark.operators._helpers import token_windows
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a"), (3, "")], "id int, text string"
+    )
+    got = {
+        r["id"]: (list(r["w2"]), list(r["w3"]), list(r["w5"]))
+        for r in df.select(
+            "id",
+            F.expr(token_windows(2)).alias("w2"),
+            F.expr(token_windows(3)).alias("w3"),
+            F.expr(token_windows(5)).alias("w5"),
+        ).collect()
+    }
+    assert got == {
+        1: (["a b", "b c", "c d"], ["a b c", "b c d"], []),
+        2: ([], [], []),
+        3: ([], [], []),
+    }
 
 
 def test_corpus_drift_histogram_legs_are_metadata_sized(spark):
